@@ -193,9 +193,9 @@ object FilterEngine {
   }
 
   /** Materializes the typed OSM view as a type-partitioned columnar
-    * projection. The spans→view derivation is ~12 higher-order-function
-    * passes per row (CodegenFallback — correct but interpreter-bound); at
-    * scale you pay it ONCE here, and every subsequent filter reads plain
+    * projection. The spans→view derivation is one full
+    * [[graft.exprs.DecodeOsmSpans]] pass per row ([[OsmView.deriveFast]]);
+    * at scale you pay it ONCE here, and every subsequent filter reads plain
     * typed columns with vectorized scans, predicate pushdown, and partition
     * pruning. This is the Iceberg-style "derived projection" layout the
     * engine assumes for repeated querying of a 100 TB docs table.

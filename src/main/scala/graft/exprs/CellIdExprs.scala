@@ -14,7 +14,8 @@ import graft.spatial.{HCell, S2Cell}
   * accumulation AND the next-state line both reference it), an O(level²)
   * tree that fell out of efficient execution entirely: the unrolled
   * level-12 S2 encoder measured 30.7 s for a 600k-row density vs 0.59 s
-  * for the Z/Morton encoder (tools.S2Probe, this host) — a 52× penalty on
+  * for the Z/Morton encoder (BASELINE.md round 5, "S2 encoder: the
+  * unrolled-Column trap") — a 52× penalty on
   * an operator that should differ from Morton by a table lookup per level.
   *
   * Same resolution as [[DecodeOsmSpans]]/[[VectorDot]]: a native

@@ -11,11 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Single-pass span decoder: spans array → the full typed OSM struct in ONE
   * traversal, with a field `mask` so callers that need only a few fields
   * (in-flight filters) skip the parse work for the rest. The pure-Column
-  * derivation ([[graft.model.OsmView.derive]]) needs ~12 higher-order-function
-  * passes over the same array (one per field), each of them CodegenFallback;
-  * this expression is whole-stage-codegen capable: `doGenCode` emits a static
-  * call into [[SpanDecode.decode]], keeping the surrounding filter/project
-  * pipeline fused (no fallback glue, no InternalRow conversion boundary).
+  * reference derivation ([[graft.model.OsmView.deriveHof]], the test oracle)
+  * needs ~12 higher-order-function passes over the same array (one per
+  * field), each of them CodegenFallback; this expression is
+  * whole-stage-codegen capable: `doGenCode` emits a static call into
+  * [[SpanDecode.decode]], keeping the surrounding filter/project pipeline
+  * fused (no fallback glue, no InternalRow conversion boundary).
   *
   * Unset mask bits leave their field null/empty — callers must only read the
   * fields they asked for ([[graft.model.OsmView.derivePruned]] builds one

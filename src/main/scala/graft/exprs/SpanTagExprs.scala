@@ -171,12 +171,16 @@ object SpanPredicateFuse extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     // a key containing '=' can never match a decoded tag (the decode splits
     // at the FIRST '='), but WOULD match the raw span text — keep such keys
-    // on the decode path so semantics are identical
-    case TagLookup(GetStructField(DecodeOsmSpans(spans, _), TagsOrdinal, _), k)
-        if !k.contains('=') =>
+    // on the decode path so semantics are identical. A decode whose mask
+    // lacks FTags yields null tags, which the span kernels would not.
+    case TagLookup(GetStructField(DecodeOsmSpans(spans, m), TagsOrdinal, _), k)
+        if fusable(m, k) =>
       TagLookupSpans(spans, k)
-    case TagExists(GetStructField(DecodeOsmSpans(spans, _), TagsOrdinal, _), k)
-        if !k.contains('=') =>
+    case TagExists(GetStructField(DecodeOsmSpans(spans, m), TagsOrdinal, _), k)
+        if fusable(m, k) =>
       TagExistsSpans(spans, k)
   }
+
+  private def fusable(mask: Int, key: String): Boolean =
+    (mask & SpanDecode.FTags) != 0 && !key.contains('=')
 }

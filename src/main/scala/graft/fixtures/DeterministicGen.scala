@@ -167,55 +167,11 @@ object DeterministicGen {
             .cast("float")).as("embedding"))
   }
 
-  /** Deterministic CLUSTERED embedding corpus: a mixture of `nClusters`
-    * hash-derived centers with uniform noise of half-width `noise` per
-    * coordinate — the realistic-corpus recall fixture (real embedding
-    * spaces are clustered; the uniform [[embeddingsDF]] is the structureless
-    * WORST case for any bucketing ANN, so recall published on it alone
-    * understates production behavior). Same schema as the driver's
-    * embeddings table; columnar on executors. */
-  def clusteredEmbeddingsDF(spark: SparkSession, n: Long, dim: Int,
-                            nClusters: Int = 20, noise: Double = 0.15): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val cid = pmod(xxhash64(col("id"), lit(-7)), lit(nClusters.toLong))
-    spark.range(0, n, 1, math.max(32, (n / 250000).toInt))
-      .select(col("id").as("vec_id"), cid.as("cid"))
-      .select(col("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)), i => (
-          (pmod(xxhash64(col("cid"), i, lit(11L)), lit(2001L)) - 1000L) / 1000.0
-            + (pmod(xxhash64(col("vec_id"), i, lit(13L)), lit(2001L)) - 1000L)
-            / 1000.0 * noise).cast("float")).as("embedding"))
-  }
-
   /** Deterministic distributed point corpus for spatial scaling runs:
     * `n` rows (doc_id, lat, lon), 70% clustered around the [[hotspots]]
     * (the urban-skew shape the kNN/PIP operators must survive), 30%
     * world-uniform — all pure Column arithmetic on executors, no driver
     * loop. */
-  /** The BboxProbe/CurveProbe layout fixture: 70% of points hash-assigned
-    * to a [[hotspots]] cluster with ±0.7°/±0.9° jitter, 30% uniform — one
-    * definition so the two probes (which SHARE the cached
-    * `target/bench/bbox_z_n*` fixture) can never drift apart. Column
-    * layout `(id, lat, lon)`, 256 gen partitions, hash(id, seed) mixing —
-    * byte-identical to the generator both probes previously inlined. */
-  def hotspotMixPointsDF(spark: SparkSession, n: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val hs = hotspots
-    val lats = array(hs.map(h => lit(h._1)): _*)
-    val lons = array(hs.map(h => lit(h._2)): _*)
-    val id = col("id")
-    val hot = pmod(hash(id, lit(1)), lit(100)) < 70
-    val hIdx = pmod(hash(id, lit(2)), lit(hs.size))
-    val jLat = (pmod(hash(id, lit(3)), lit(2001)).cast("double") - 1000.0) / 1000.0 * 0.7
-    val jLon = (pmod(hash(id, lit(4)), lit(2001)).cast("double") - 1000.0) / 1000.0 * 0.9
-    val uLat = pmod(hash(id, lit(5)), lit(170001)).cast("double") / 1000.0 - 85.0
-    val uLon = pmod(hash(id, lit(6)), lit(360001)).cast("double") / 1000.0 - 180.0
-    spark.range(0, n, 1, 256).select(
-      id,
-      when(hot, get(lats, hIdx) + jLat).otherwise(uLat).as("lat"),
-      when(hot, get(lons, hIdx) + jLon).otherwise(uLon).as("lon"))
-  }
-
   def pointsDF(spark: SparkSession, n: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val id = col("id")
@@ -244,7 +200,8 @@ object DeterministicGen {
     * from xxhash64 of a content-id; duplicates share the content-id), no
     * driver loop — scales to any `n`.
     *
-    * Vocabulary and fingerprint collisions (measured, WinnowSizeProbe):
+    * Vocabulary and fingerprint collisions (measured; BASELINE.md round 3,
+    * "Winnowed-dedup fixture note"):
     * at 50k docs / 50k tokens mean fingerprint df is 1.09 with 678k true
     * candidate pairs — realistic boilerplate-ish collision rates, the
     * bench fixture. But collision df grows with CORPUS size at any fixed

@@ -3,17 +3,18 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Span codec: derives the typed OSM view from the contract docs table using
-  * Catalyst higher-order functions only (no UDFs, no RDDs). The inverse
-  * direction (typed → spans) lives in [[OsmElement.toSpans]] and is used by
-  * the fixture generator; round-trip equality is property-tested.
+/** Span codec: derives the typed OSM view from the contract docs table with
+  * the codegen'd [[graft.exprs.DecodeOsmSpans]] expression (no UDFs, no
+  * RDDs). The inverse direction (typed → spans) lives in
+  * [[OsmElement.toSpans]] and is used by the fixture generator; round-trip
+  * equality is property-tested.
   *
   * Scale note: the derivation is a pure projection, so Catalyst prunes it —
-  * a filter that only touches `id` and `tags` reads only the spans column it
-  * needs and the generated plan keeps the scan vectorized. For repeated
-  * interactive querying at 100 TB you'd materialize this view once as a
-  * typed columnar projection (see engine.FilterJob.materializeView) and let
-  * parquet column pruning skip the untouched arrays entirely.
+  * a filter that only touches `id` and `tags` decodes only those fields and
+  * reads only the spans column. For repeated interactive querying at 100 TB
+  * you'd materialize this view once as a typed columnar projection (see
+  * [[graft.engine.FilterEngine.materializeView]]) and let parquet column
+  * pruning skip the untouched arrays entirely.
   */
 object OsmView {
 
@@ -25,7 +26,7 @@ object OsmView {
       .getField("text")
 
   /** Single-pass variant of [[derive]]: one custom-Expression traversal of
-    * `spans` instead of ~12 HOF passes (graft.exprs.DecodeOsmSpans). Same
+    * `spans` for all fields (graft.exprs.DecodeOsmSpans). Same
     * output schema and values (equivalence-tested). Use it when ALL fields
     * are needed — full-view materialization runs 1.8× faster. For in-flight
     * FILTERS prefer [[derivePruned]] (what [[derive]] now delegates to):
@@ -60,7 +61,7 @@ object OsmView {
     * Catalyst column pruning removes whole decode passes for columns a query
     * never touches — a filter on `@version >= 2` decodes only `version`.
     * Each pass is whole-stage-codegen'd (static-call `doGenCode`), unlike
-    * the HOF derivation in [[derive]] whose per-field array lambdas are
+    * the HOF reference [[deriveHof]] whose per-field array lambdas are
     * CodegenFallback. A predicate touching k fields pays k tight linear
     * scans of the spans array; for the narrow predicates filters actually
     * use, that beats one full-decode pass ([[deriveFast]], which parses all
@@ -111,8 +112,8 @@ object OsmView {
   /** The pure-Column HOF reference derivation — ~12 higher-order-function
     * passes over `spans`, each CodegenFallback. Kept ONLY as the
     * independent equivalence oracle for the codegen'd decoders
-    * ([[deriveFast]]/[[derivePruned]], CodecSpec); never use on a hot
-    * path. */
+    * ([[deriveFast]]/[[derivePruned]], CodecSpec) and for the expected
+    * rows of perfbench's output checks; never use on a hot path. */
   private[graft] def deriveHof(docs: DataFrame): DataFrame = {
     val hasType = docs.columns.contains("type")
     val hasSeq = docs.columns.contains("seq")

@@ -22,12 +22,6 @@ object Dedup {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Duplicate groups (fingerprint, size, members) — the audit view. */
-  def exactDupGroups(docs: DataFrame, textCol: Column, keyCol: Column): DataFrame =
-    docs.groupBy(TextOps.fingerprint(textCol).as("fp"))
-      .agg(count(lit(1)).as("n"), sort_array(collect_list(keyCol)).as("members"))
-      .filter(col("n") > 1)
-
   /** Distinct word n-gram shingles of the normalized text. */
   def shingles(text: Column, n: Int): Column = {
     val tokens = filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
@@ -190,7 +184,8 @@ object Dedup {
   /** Duplicate-cluster resolution: connected components over a dup-pairs
     * DataFrame (columns `key_a`, `key_b` — the output shape of every pair
     * operator above). Returns `(key, cluster)` for every key that appears in
-    * a pair, where `cluster` is the component's minimum key. This is the
+    * a pair without a null endpoint, where `cluster` is the component's
+    * minimum key. This is the
     * missing last stage of a real training-data dedup: pair detection is not
     * a dedup until pairs are transitively closed (a~b, b~c ⇒ {a,b,c} is ONE
     * group) and one canonical doc survives per group.
@@ -212,7 +207,10 @@ object Dedup {
     * join + count pass. */
   def dupClusters(pairs: DataFrame, maxIters: Int = 50,
                   maxDriverEdges: Long = 2000000L): DataFrame = {
+    // a pair with a null endpoint names no document: drop it here, once, so
+    // the driver and distributed paths below resolve the same edge set
     val edges = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
       .distinct().localCheckpoint(true)
     // Size-adaptive (round 6, the AQE-broadcast analogy): a dedup's pair
     // set is usually orders of magnitude smaller than its corpus — when the
@@ -360,7 +358,8 @@ object Dedup {
     * EVERY fingerprint) and the true answer itself approaches O(n²) pairs;
     * raise `k` (longer grams ⇒ more distinct fingerprints), raise
     * `threshold`, or lower `maxDocFreq` before running at scale — and treat
-    * a mostly-hot fingerprint distribution (see tools.WinnowSizeProbe) as a
+    * a mostly-hot fingerprint distribution (BASELINE.md round 3,
+    * "Winnowed-dedup fixture note") as a
     * signal the corpus needs exact dedup first. */
   def winnowedDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                        k: Int = 8, w: Int = 4, threshold: Double = 0.5,

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * buckets; deterministic seeds throughout.
   *
   * WHICH ANN TO DEFAULT TO: **IVF** ([[ivfTopK]]). Measured recall@10 at
-  * comparable scanned fractions (tools.RecallProbe, BASELINE.md round-5
-  * table, both the worst-case uniform fixture and a clustered
+  * comparable scanned fractions (BASELINE.md round 5, "ANN recall on BOTH
+  * fixtures": both the worst-case uniform fixture and a clustered
   * mixture-of-centers fixture): IVF's data-trained centroids track corpus
   * structure, while data-independent hyperplanes cannot — LSH's recall at
   * production knobs is far below IVF's on both fixtures. Use [[lshTopK]]
@@ -82,8 +82,8 @@ object Similarity {
 
   /** recall@k of an approximate result against exact `truth` — both shaped
     * (query_id, vec_id, …). THE recall definition: every consumer
-    * (Bench's per-round `sim_*_recall_at10` fields, RecallProbe's sweep
-    * table) must route through here so the protocol cannot drift between
+    * (Bench's per-round `sim_*_recall_at10` fields, the BASELINE.md recall
+    * sweeps) must route through here so the protocol cannot drift between
     * the artifact and the BASELINE table. PRECONDITION: callers should
     * `.cache()` (and materialize) `truth` before sweeping — each call
     * counts it for the denominator and joins against it, so an uncached
@@ -149,15 +149,6 @@ object Similarity {
     c.join(qBuckets, Seq("bucket"))
   }
 
-  /** ACTUAL candidates the LSH config scans (shares [[lshJoined]] with the
-    * operator): bucket-size skew makes the uniform estimate
-    * (1+probes)/2^bits wrong on structured corpora, so published
-    * scanned-fraction numbers must come from here. */
-  def lshCandidateCount(corpus: DataFrame, queries: DataFrame, dim: Int,
-                        bits: Int = 12, probes: Int = 4,
-                        seed: Long = 42L): Long =
-    lshJoined(corpus, queries, dim, bits, probes, seed).count()
-
   // --- IVF (inverted-file) ANN: the coarse-quantizer scale path -------------
 
   private def dotLit(emb: Column, v: Array[Double]): Column =
@@ -180,7 +171,8 @@ object Similarity {
     * recenter via posexplode + per-(centroid, dim) average). Centroid count
     * and dims are small; the heavy side (corpus) is never collected.
     *
-    * Knobs vs recall (measured, tools.RecallProbe / BASELINE.md round-4):
+    * Knobs vs recall (measured, BASELINE.md round 4, "ANN recall at
+    * production settings"):
     * `iters` is fixed with no movement check — standard Lloyd, and at the
     * default nCentroids=16 round 2 is already within noise of converged on
     * the bench fixture; an empty centroid keeps its stale position
@@ -255,14 +247,6 @@ object Similarity {
     // a query's probe list is distinct centroid ids
     bucketed.join(broadcast(probes), Seq("cid"))
   }
-
-  /** ACTUAL candidates the IVF config scans (shares [[ivfJoined]] with the
-    * operator): queries preferentially probe DENSE clusters, so on
-    * structured corpora the uniform estimate nProbe/nCentroids understates
-    * the scan — published fractions must come from here. */
-  def ivfCandidateCount(corpus: DataFrame, queries: DataFrame,
-                        cents: Array[Array[Double]], nProbe: Int): Long =
-    ivfJoined(corpus, queries, cents, nProbe).count()
 
   /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH-bucket
     * self-join + exact verify (no cross product).

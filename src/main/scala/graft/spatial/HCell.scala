@@ -14,11 +14,11 @@ package graft.spatial
   * ([[SpatialLayout.materialize]] `curve = "hilbert"`). A bbox covers the
   * same cell SET on both curves (geometry is shared), but merging those
   * cells into value ranges fragments differently — Hilbert's
-  * edge-adjacency yields fewer, longer runs (measured in
-  * tools.CurveProbe), i.e. a smaller pushed Or-of-ranges filter for equal
-  * prune precision. Grid/cover arithmetic is DELEGATED to ZCell (decode
-  * its cover cells to (x, y), re-address through the curve) so the two
-  * encoders cannot drift.
+  * edge-adjacency yields fewer, longer runs (BASELINE.md round 5,
+  * "Space-filling-curve comparison"), i.e. a smaller pushed Or-of-ranges
+  * filter for equal prune precision. Grid/cover arithmetic is DELEGATED to
+  * ZCell (decode its cover cells to (x, y), re-address through the curve)
+  * so the two encoders cannot drift.
   */
 object HCell {
   val MaxLevel: Int = ZCell.MaxLevel

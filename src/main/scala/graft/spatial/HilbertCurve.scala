@@ -12,7 +12,8 @@ package graft.spatial
   * cells (no Z-curve "seams" that jump across the grid), so a rectangle
   * covers as FEWER contiguous position ranges. At 100 TB that is a smaller
   * Or-of-ranges filter tree for the same prune precision, or a finer cover
-  * level for the same tree size (measured: tools.CurveProbe).
+  * level for the same tree size (measured: BASELINE.md round 5,
+  * "Space-filling-curve comparison").
   *
   * The state machine is the standard public construction (Wikipedia
   * "Hilbert curve", xy2d/d2xy; same shape as s2geometry's lookup tables).

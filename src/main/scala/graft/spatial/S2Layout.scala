@@ -22,18 +22,18 @@ import org.apache.spark.sql.types.MetadataBuilder
   *  - exact `haversineMeters ≤ r`.
   *
   * Measured against the Z bbox layout on the same 24M points
-  * (tools.CapProbe): prune performance is EQUIVALENT — a pole-centered
-  * cap reads 18-vs-17 files at the same wall either way (the equirect
-  * grid's polar cover needs every longitude COLUMN, but those cells are
-  * area-starved so few files hold them; file-level stats absorb the
-  * difference). What the S2 layout buys is the spherical primitive
-  * itself: a cap query is ONE call with provable-superset pruning at any
-  * latitude, where the bbox route needs the caller to derive a correct
-  * lat/lon superset (pole clamping, cosine lon-widening, antimeridian
-  * splits — the error-prone math CapProbe has to do to make the
-  * comparison fair). Grid levels ride in `scell`'s column metadata (no
-  * side file); a table without the metadata degrades to the exact filter
-  * alone.
+  * (BASELINE.md round 5, "Polar-cap probe"): prune performance is
+  * EQUIVALENT — a pole-centered cap reads 18-vs-17 files at the same wall
+  * either way (the equirect grid's polar cover needs every longitude
+  * COLUMN, but those cells are area-starved so few files hold them;
+  * file-level stats absorb the difference). What the S2 layout buys is the
+  * spherical primitive itself: a cap query is ONE call with
+  * provable-superset pruning at any latitude, where the bbox route needs
+  * the caller to derive a correct lat/lon superset (pole clamping, cosine
+  * lon-widening, antimeridian splits — the error-prone math that
+  * comparison had to do to be fair). Grid levels ride in `scell`'s column
+  * metadata (no side file); a table without the metadata degrades to the
+  * exact filter alone.
   */
 object S2Layout {
   val PartCol = "ps2"

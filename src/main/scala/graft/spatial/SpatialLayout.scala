@@ -43,7 +43,8 @@ import org.apache.spark.sql.types.MetadataBuilder
   * in metadata and honored by both readers): Hilbert addressing covers the
   * SAME cell set with fewer contiguous value ranges (edge-adjacency — see
   * [[HilbertCurve]]), i.e. a smaller pushed filter tree at equal prune
-  * precision. Measured (tools.CurveProbe, 24M pts): ~2× fewer ranges at
+  * precision. Measured (BASELINE.md round 5, "Space-filling-curve
+  * comparison", 24M pts): ~2× fewer ranges at
   * every box size, 10-26% faster scans — `"hilbert"` is the recommended
   * curve for NEW layouts; the default stays `"z"` so existing layouts
   * (which carry no curve metadata) keep reading identically.

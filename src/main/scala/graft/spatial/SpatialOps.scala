@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * The cell encoder is PURE Column arithmetic (shift/and/or) so it stays
   * inside whole-stage codegen — no UDF or CodegenFallback in the
   * hot path. Polygon sides are broadcast (small per BASELINE.json);
-  * dense-urban-cell skew is handled by salting + AQE skew join.
+  * dense-urban-cell skew is handled by map-side partial aggregation, the
+  * salted kNN rank and AQE skew join.
   */
 object SpatialOps {
 
@@ -143,8 +144,8 @@ object SpatialOps {
     // list joins on (level, cell); candidate volume is each query's own
     // cover × occupancy. Exact haversine refine is unchanged, so results
     // are identical.
-    if (qs.isEmpty) // empty query set ⇒ empty result with the right schema
-      return points.withColumn("query_id", lit(0L)).limit(0)
+    if (qs.isEmpty) // empty query set ⇒ empty result, same columns and order
+      return points.select(lit(0L).as("query_id"), col("*")).limit(0)
     val levels = covers.map(_._2._2).distinct.sorted
     val coverDF = covers.toSeq.flatMap { case (id, (cells, l)) =>
       cells.map(c => (id, l, c)).distinct
@@ -338,52 +339,6 @@ object SpatialOps {
       (lonEdge - qlon) * (lonEdge - qlon)
   }
 
-  /** Candidate rows the first knn ring pass scans (diagnostics — shares the
-    * cover construction with [[knn]]). */
-  def knnCandidateCount(points: DataFrame, queries: DataFrame,
-                        level: Int, maxRing: Int): Long = {
-    val pCells = points.withColumn("cell", cellId(col("lat"), col("lon"), level))
-    val qs = queries.select(col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
-    val qCells = qs.withColumn("cell",
-      explode(ringCellsUdf(level, maxRing)(col("qlat"), col("qlon"))))
-    pCells.join(broadcast(qCells), Seq("cell")).count()
-  }
-
-  /** Diagnostics: how many queries the given ring cannot certify (mirrors
-    * one [[knn]] attempt's certification decision). */
-  def knnUnsatAfterRing(points: DataFrame, queries: DataFrame, k: Int,
-                        level: Int, ring: Int,
-                        metric: SpatialMetric = HaversineMetric,
-                        tieBreak: String = "doc_id"): Long = {
-    val pCells = points.withColumn("cell", cellId(col("lat"), col("lon"), level))
-    val qs = queries.select(col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
-    val qCells = qs.withColumn("cell",
-      explode(ringCellsUdf(level, ring)(col("qlat"), col("qlon"))))
-    val candidates = pCells.join(broadcast(qCells), Seq("cell")).drop("cell")
-      .withColumn("dist_m", metric.dist(col("qlat"), col("qlon"), col("lat"), col("lon")))
-    val wLocal = Window
-      .partitionBy(col("query_id"), pmod(hash(col(tieBreak)), lit(64)))
-      .orderBy(col("dist_m"), col(tieBreak))
-    val wGlobal = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist_m"), col(tieBreak))
-    val topk = candidates.withColumn("rn", row_number().over(wLocal))
-      .filter(col("rn") <= k).drop("rn")
-      .withColumn("rn", row_number().over(wGlobal)).filter(col("rn") <= k)
-    val edges = coverEdgesUdf(level, ring)(col("qlat"), col("qlon"))
-    val dBound = least(
-      metric.toParallel(col("qlat"), col("qlon"), col("edges").getField("_1")),
-      metric.toParallel(col("qlat"), col("qlon"), col("edges").getField("_2")),
-      metric.toMeridian(col("qlat"), col("qlon"), col("edges").getField("_3")),
-      metric.toMeridian(col("qlat"), col("qlon"), col("edges").getField("_4")))
-    val stats = topk.groupBy("query_id")
-      .agg(count(lit(1)).as("cnt"), max(col("dist_m")).as("kth"))
-    qs.withColumn("edges", edges)
-      .join(stats, Seq("query_id"), "left")
-      .filter(col("cnt").isNull || col("cnt") < k ||
-        (dBound.isNotNull && col("kth") > dBound))
-      .count()
-  }
-
   /** k nearest points for each query row (query_id, lat, lon): ring-expanded
     * candidate cells (broadcast query side) + exact re-rank with a per-query
     * window top-k. EXACTNESS GUARANTEE: a query's ring result is kept only
@@ -511,13 +466,6 @@ object SpatialOps {
     p.join(tiles.withColumnRenamed("cell", "tile_cell"), Seq("tile_cell"))
   }
 
-  /** Salted repartition for dense urban cells: spreads each hot cell over
-    * `salt` partitions keyed by a row-stable hash, for two-phase per-cell
-    * aggregation (partial agg per (cell, salt), final agg per cell). */
-  def saltedByCell(df: DataFrame, cellCol: Column, saltBuckets: Int,
-                   rowKey: Column): DataFrame =
-    df.repartition(cellCol, pmod(hash(rowKey), lit(saltBuckets)))
-
   /** Per-cell density. One hash aggregation: Spark's built-in PARTIAL
     * (map-side) aggregation is already the two-phase skew defense for an
     * algebraic aggregate like count — each task emits one row per distinct
@@ -526,11 +474,10 @@ object SpatialOps {
     * (cell, salt) pre-aggregation this replaces added a full second
     * exchange for a property the partial already guarantees (guide §2.3
     * "aggregate before you shuffle"; round-6 measurement in
-    * OPTIMIZATION_r06.md). Manual salting ([[saltedByCell]]) remains the
-    * tool for NON-algebraic per-cell work (collect_list-style state),
-    * where map-side combining cannot cap the hot key. `saltBuckets` is
-    * kept for source compatibility and ignored. */
-  def cellDensity(points: DataFrame, level: Int, saltBuckets: Int = 16): DataFrame =
+    * OPTIMIZATION_r06.md). Non-algebraic per-cell work (collect_list-style
+    * state) would still need explicit salting, since map-side combining
+    * cannot cap the hot key there. */
+  def cellDensity(points: DataFrame, level: Int): DataFrame =
     points
       .withColumn("cell", cellId(col("lat"), col("lon"), level))
       .groupBy("cell").agg(count(lit(1)).as("n"))

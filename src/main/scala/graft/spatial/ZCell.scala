@@ -181,7 +181,4 @@ object ZCell {
         (plo, math.max(phi, hi)) :: rest
       case (acc, r) => r :: acc
     }.reverse
-
-  /** Approximate meters per cell edge at a level (equator). */
-  def edgeMeters(level: Int): Double = 40075017.0 / (1 << level)
 }

@@ -46,8 +46,8 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       // co-tenant CPU-steal bursts on this host starve executor threads past
       // the 10 s default heartbeat — killed a 24M view build mid-fixture;
-      // generous timeouts keep fixture builds alive (timed rows are still
-      // guarded by the HostProbe brackets, not by these)
+      // generous timeouts keep fixture builds alive (they do not make a
+      // steal-slowed timed row valid: rerun the pair instead)
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
     val spark = (if (master.startsWith("local-cluster")) {

@@ -61,6 +61,21 @@ class SpanTagExprsSpec extends AnyFunSuite {
     assert(view.filter(pred).count() === 0L)
   }
 
+  test("a decode whose mask lacks tags is not fused (tags stay null)") {
+    import org.apache.spark.sql.GraftBridge
+    OsmView.derivePruned(docs) // installs the rule
+    val tags = GraftBridge.expression(GraftBridge.column(DecodeOsmSpans(
+      GraftBridge.expression(col("spans")), SpanDecode.FId)).getField("tags"))
+    val q = docs.select(
+      GraftBridge.column(TagLookup(tags, "highway")).as("v"),
+      GraftBridge.column(TagExists(tags, "highway")).as("e"))
+    val plan = q.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("tag_lookup_spans") && !plan.contains("tag_exists_spans"), plan)
+    val rows = q.collect()
+    assert(rows.nonEmpty)
+    assert(rows.forall(r => r.isNullAt(0) && r.isNullAt(1)))
+  }
+
   test("kernel semantics: value-less tag, first match, absent key") {
     import org.apache.spark.unsafe.types.UTF8String
     def spansOf(texts: String*) : org.apache.spark.sql.catalyst.util.ArrayData = {

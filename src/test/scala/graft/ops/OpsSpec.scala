@@ -332,7 +332,9 @@ class OpsSpec extends AnyFunSuite {
         Seq((200L, 201L), (201L, 202L), (200L, 202L)) ++
         Seq((300L, 301L)) ++
         Seq((400L, 405L), (402L, 405L), (401L, 402L))
-    val pairs = edges.toDF("key_a", "key_b")
+    // edges with a null endpoint (dirty input) are dropped on both paths
+    val nullEdges = Seq[(java.lang.Long, java.lang.Long)]((500L, null), (null, 19L))
+    val pairs = edges.toDF("key_a", "key_b").union(nullEdges.toDF("key_a", "key_b"))
     val clusters = Dedup.dupClusters(pairs)
     val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // both paths must agree: the guarded driver union-find (default at this

@@ -8,8 +8,8 @@ import graft.SparkTestSession
   * state-machine tables vs an INDEPENDENT loop implementation (the classic
   * rotate-and-recurse xy2d), the prefix/adjacency properties every consumer
   * depends on, scalar↔Column bit equality on adversarial points, cover-range
-  * supersets, and the Hilbert-fragments-less-than-Z claim CurveProbe
-  * measures. */
+  * supersets, and the Hilbert-fragments-less-than-Z claim measured in
+  * BASELINE.md ("Space-filling-curve comparison"). */
 class HilbertS2Spec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -277,6 +277,17 @@ class HilbertS2Spec extends AnyFunSuite {
     val plan = SpatialOps.s2RadiusJoin(nodes, qs, r, level = 8)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
+  }
+
+  test("s2RadiusJoin has the same columns for an empty and a non-empty query set") {
+    val nodes = Seq((1L, 48.9, 2.4), (2L, -33.9, 151.2)).toDF("id", "lat", "lon")
+    val qs = Seq((7L, 48.905, 2.405)).toDF("query_id", "lat", "lon")
+    val some = SpatialOps.s2RadiusJoin(nodes, qs, 5000.0, level = 8)
+    val none = SpatialOps.s2RadiusJoin(nodes, qs.limit(0), 5000.0, level = 8)
+    assert(none.columns.toSeq === some.columns.toSeq)
+    assert(none.schema.map(_.dataType) === some.schema.map(_.dataType))
+    assert(none.count() === 0L)
+    assert(some.select("query_id", "id").as[(Long, Long)].collect().toSeq === Seq((7L, 1L)))
   }
 
   // --- Column mirrors ------------------------------------------------------

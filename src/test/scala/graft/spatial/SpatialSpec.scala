@@ -247,14 +247,14 @@ class SpatialSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
-  test("cell density with salting equals plain groupBy counts") {
+  test("cellDensity equals plain groupBy counts per cell") {
     val plain = nodesDF
       .withColumn("cell", SpatialOps.cellId(col("lat"), col("lon"), 8))
       .groupBy("cell").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = SpatialOps.cellDensity(nodesDF, 8)
+    val got = SpatialOps.cellDensity(nodesDF, 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(salted === plain)
+    assert(got === plain)
   }
 
   test("tilePyramid equals the per-level density union, one level per 5 low bits") {
