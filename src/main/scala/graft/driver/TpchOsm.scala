@@ -119,9 +119,9 @@ object TpchOsm {
   }
 
   /** Typed view over the derivation — full span-codec round trip, through
-    * the production (pruned codegen'd) decode path so the DuckDB oracles
-    * attest the custom expression, not just the HOF reference derivation
-    * (the two are equivalence-tested in CodecSpec). */
+    * the engine's one decode path ([[graft.model.OsmView.derive]]) so the
+    * DuckDB oracles attest the codegen'd decode, not just the HOF reference
+    * derivation (the two are equivalence-tested in CodecSpec). */
   def view(spark: SparkSession, sfDir: String): DataFrame =
-    graft.model.OsmView.derivePruned(docs(spark, sfDir))
+    graft.model.OsmView.derive(docs(spark, sfDir))
 }

@@ -109,7 +109,7 @@ object Checkpoint {
     val lineage = lineageKey(s"$inputFingerprint|$fileFp|layout=v2",
       graft.ofl.Unparse(ast), parts)
     val pred = graft.compile.Compiler.compileEffective(ast, idLoader)
-    val view = graft.model.OsmView.derivePruned(docs)
+    val view = graft.model.OsmView.derive(docs)
       .withColumn("__part", pmod(xxhash64(col("doc_id")), lit(parts)))
 
     // ONE pass over the input for all pending buckets (not one full scan per

@@ -19,15 +19,8 @@ import graft.ofl.{EntityBits, Expr, OflTypeException, Parser, Pretty}
   * column carries its source key in column METADATA (`graft_hot_key`) —
   * persisted in the parquet footer's Spark schema, so [[forSchema]] reads
   * the mapping back from the view itself with no side file to lose or
-  * drift. [[fallbackKeys]] only serves views written before metadata
-  * tagging existed. */
+  * drift. */
 object HotTags {
-  /** Legacy static list — matched against bare `t_<key>` columns of views
-    * materialized before the metadata-tagged layout. */
-  val fallbackKeys: Seq[String] = Seq("highway", "building", "landuse",
-    "amenity", "natural", "oneway", "name", "type", "addr:street",
-    "addr:housenumber")
-
   /** Metadata key carrying the source tag key on a hot view column. */
   val MetaKey = "graft_hot_key"
 
@@ -36,9 +29,9 @@ object HotTags {
   /** The materialization expression — EXACTLY the compiler's cold-path
     * `tagValue` (first match, null when absent), so hot and cold reads are
     * equal by construction. The never-null-tag-VALUE invariant the hot
-    * compile shape relies on (IsNotNull ⟺ key present) is enforced where
-    * the view is built: [[FilterEngine.materializeView]] drops null-valued
-    * tags from the array before any projection is derived. */
+    * compile shape relies on (IsNotNull ⟺ key present) holds because the
+    * view's tags come from [[graft.exprs.DecodeOsmSpans]], whose tag values
+    * are never null (a tag with no '=' decodes to value ""). */
   def projection(key: String): Column =
     get(filter(col("tags"), t => t.getField("key") === key), lit(0))
       .getField("value")
@@ -64,21 +57,13 @@ object HotTags {
     }
   }
 
-  /** key → column map read back from the view's schema: metadata-tagged
-    * columns are authoritative; a view with no tagged columns (pre-metadata
-    * layout) falls back to matching [[fallbackKeys]] against `t_<key>`
-    * column names; views with neither compile cold-path. */
-  def forSchema(schema: org.apache.spark.sql.types.StructType): Map[String, String] = {
-    val tagged = schema.fields.iterator
+  /** key → column map read back from the view's schema: only
+    * metadata-tagged columns count (a bare `t_<key>` column is just a
+    * column), so a view with no tagged columns compiles cold-path. */
+  def forSchema(schema: org.apache.spark.sql.types.StructType): Map[String, String] =
+    schema.fields.iterator
       .filter(f => f.metadata.contains(MetaKey))
       .map(f => f.metadata.getString(MetaKey) -> f.name).toMap
-    if (tagged.nonEmpty) tagged
-    else {
-      val present = schema.fieldNames.toSet
-      fallbackKeys.iterator.map(k => k -> colName(k))
-        .filter(kv => present(kv._2)).toMap
-    }
-  }
 }
 
 /** The query lifecycle (SURVEY.md §3): parse → analyze (entity bits +
@@ -127,9 +112,9 @@ object FilterEngine {
     val q = parse(expression, sugar)
     if (q.neverMatches)
       throw new OflTypeException("Filter expression can never match") // main.cpp:114-117
-    // pruned decode: the predicate pays one codegen'd spans pass per field it
-    // references instead of the full HOF derivation (~40× on BENCH_r01)
-    OsmView.derivePruned(docs).filter(Compiler.compileEffective(q.ast, idLoader))
+    // the predicate pays one early-exit spans pass per field it references;
+    // the rows that pass decode the remaining columns in one merged pass
+    OsmView.derive(docs).filter(Compiler.compileEffective(q.ast, idLoader))
   }
 
   /** `--complete-ways` two-pass semi-join (reference main.cpp:143-180):
@@ -161,10 +146,9 @@ object FilterEngine {
           .otherwise(array().cast(wantedStruct)))).as("w"))
       .select(col("w.type").as("type"), col("w.pid").as("pid"))
       .distinct()
-    // pass 2 is also pruned-decode: the semi-join touches only (type, id), so
-    // the rescan decodes two fields per row; consumers that then select more
-    // columns pay only the passes for the columns they actually read
-    OsmView.derivePruned(docs)
+    // pass 2 decodes every column its consumers read, (type, id) for the join
+    // key included, in one merged spans pass per row
+    OsmView.derive(docs)
       .withColumn("pid", abs(col("id")))
       .join(wanted, Seq("type", "pid"), "left_semi")
       .drop("pid")
@@ -193,8 +177,8 @@ object FilterEngine {
   }
 
   /** Materializes the typed OSM view as a type-partitioned columnar
-    * projection. The spans→view derivation is one full
-    * [[graft.exprs.DecodeOsmSpans]] pass per row ([[OsmView.deriveFast]]);
+    * projection. The spans→view derivation is [[OsmView.derive]], whose
+    * decodes merge into one [[graft.exprs.DecodeOsmSpans]] pass per row;
     * at scale you pay it ONCE here, and every subsequent filter reads plain
     * typed columns with vectorized scans, predicate pushdown, and partition
     * pruning. This is the Iceberg-style "derived projection" layout the
@@ -202,29 +186,21 @@ object FilterEngine {
     * [[HotTags]] keys are additionally projected as pushdown-eligible
     * top-level columns. */
   def materializeView(docs: DataFrame, path: String, hotKeyCount: Int = 10): Unit = {
-    val base = OsmView.deriveFast(docs) // single-pass decode: 1.8× the HOF derivation
-      // enforce the never-null-tag-VALUE invariant the hot compile shape
-      // depends on (t_<key>.isNotNull ⟺ key present): a source that carries
-      // null tag values must not silently diverge hot vs cold. The OUTER
-      // coalesce enforces the never-null-tags-ARRAY invariant on top: a
-      // null array makes exists() three-valued (NULL, not false), which
-      // would break HotTagRewrite's null-exactness under Not — the view
-      // guarantees exists over tags is two-valued, where the rule needs it
-      .withColumn("tags", coalesce(
-        org.apache.spark.sql.functions.filter(col("tags"),
-          t => t.getField("value").isNotNull),
-        array().cast("array<struct<key:string,value:string>>")))
+    // enforce the never-null-tags-ARRAY invariant (null spans decode to a
+    // null array): a null array makes exists() three-valued (NULL, not
+    // false), which would break HotTagRewrite's null-exactness under Not —
+    // the view guarantees exists over tags is two-valued, where the rule
+    // needs it. Tag VALUES are never null out of the decode (HotTags.projection).
+    val base = OsmView.derive(docs).withColumn("tags", coalesce(col("tags"),
+      array().cast("array<struct<key:string,value:string>>")))
     // hot keys come from THIS corpus's key-frequency stats (one extra
     // aggregation pass at build time), tagged into column metadata so
     // HotTags.forSchema reads the mapping back from the written view. The
-    // scan decodes ONLY the tags field (single-field codegen'd pass via
-    // derivePruned), not the full 14-field derivation — at 24M rows the
+    // stats scan decodes ONLY the tags field (column pruning leaves one
+    // single-field decode), not the full derivation — at 24M rows the
     // full-decode + struct-explode variant ran the 8 GB driver out of
     // execution memory; this shape is a key-only explode over one pass
-    val tagsOnly = OsmView.derivePruned(docs).select("tags")
-      .withColumn("tags", org.apache.spark.sql.functions.filter(col("tags"),
-        t => t.getField("value").isNotNull))
-    val keys = HotTags.deriveKeys(tagsOnly, hotKeyCount)
+    val keys = HotTags.deriveKeys(base.select("tags"), hotKeyCount)
     val hotCols = keys.map { k =>
       val m = new org.apache.spark.sql.types.MetadataBuilder()
         .putString(HotTags.MetaKey, k).build()

@@ -8,21 +8,23 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass span decoder: spans array → the full typed OSM struct in ONE
-  * traversal, with a field `mask` so callers that need only a few fields
-  * (in-flight filters) skip the parse work for the rest. The pure-Column
-  * reference derivation ([[graft.model.OsmView.deriveHof]], the test oracle)
-  * needs ~12 higher-order-function passes over the same array (one per
-  * field), each of them CodegenFallback; this expression is
-  * whole-stage-codegen capable: `doGenCode` emits a static call into
-  * [[SpanDecode.decode]], keeping the surrounding filter/project pipeline
-  * fused (no fallback glue, no InternalRow conversion boundary).
+/** Span decoder: spans array → the typed OSM struct in ONE traversal, with
+  * a field `mask` so a decode that needs only a few fields skips the parse
+  * work for the rest. The pure-Column reference derivation
+  * ([[graft.model.OsmView.deriveHof]], the test oracle) needs ~12
+  * higher-order-function passes over the same array (one per field), each
+  * of them CodegenFallback; this expression is whole-stage-codegen capable:
+  * `doGenCode` emits a static call into [[SpanDecode.decode]], keeping the
+  * surrounding filter/project pipeline fused (no fallback glue, no
+  * InternalRow conversion boundary).
   *
   * Unset mask bits leave their field null/empty — callers must only read the
-  * fields they asked for ([[graft.model.OsmView.derivePruned]] builds one
-  * single-field decode per column so Catalyst column pruning drops whole
-  * passes). Semantics per field are identical to the HOF derivation
-  * (absent header span ⇒ null) and equivalence is tested against it.
+  * fields they asked for. [[graft.model.OsmView.derive]] builds one
+  * single-field decode per column, so Catalyst column pruning drops whole
+  * passes, and [[DecodeMerge]] folds the decodes a projection keeps into
+  * one. Semantics per field are identical to the HOF derivation (absent
+  * header span or null header text ⇒ null) and equivalence is tested
+  * against it.
   */
 case class DecodeOsmSpans(child: Expression, mask: Int = SpanDecode.AllFields)
   extends UnaryExpression {
@@ -131,11 +133,12 @@ object SpanDecode {
 
     // Early exit: header fields occur at most once, so once every requested
     // SCALAR field has been seen there is nothing left to find — a mask with
-    // no array bits (the derivePruned per-field passes) stops scanning
-    // instead of walking the tag/nd/member tail. Order-independent: the exit
-    // fires only on found fields, never on an assumed layout. (On duplicate
-    // header spans this keeps the FIRST value — the HOF reference's
-    // get(filter(...), 0) semantics.)
+    // no array bits (a single-field header decode) stops scanning instead of
+    // walking the tag/nd/member tail. Order-independent: the exit fires only
+    // on found fields, never on an assumed layout. `want` holds the header
+    // fields requested and not yet seen, so on duplicate header spans the
+    // FIRST one wins, even when its text is null — the HOF reference's
+    // get(filter(...), 0) semantics.
     val scalarOnly = (mask & ArrayFields) == 0
     var want = mask & ~ArrayFields
 
@@ -164,13 +167,9 @@ object SpanDecode {
                   UTF8String.fromBytes(b, eq + 1, nb - eq - 1))))
             }
           } else if (kind.equals(K_TYPE)) {
-            if ((mask & FType) != 0 && typ == null) {
-              typ = span.getUTF8String(1).clone(); want &= ~FType
-            }
+            if ((want & FType) != 0) { typ = text(span); want &= ~FType }
           } else if (kind.equals(K_TIMESTAMP)) {
-            if ((mask & FTimestamp) != 0 && ts == null) {
-              ts = span.getUTF8String(1).clone(); want &= ~FTimestamp
-            }
+            if ((want & FTimestamp) != 0) { ts = text(span); want &= ~FTimestamp }
           }
         case 'n' => // nd
           if (kind.equals(K_ND) && nds != null)
@@ -194,42 +193,32 @@ object SpanDecode {
             if (media != null) media.add(span.getUTF8String(2).clone())
           }
         case 'i' =>
-          if (kind.equals(K_ID) && (mask & FId) != 0 && id == null) {
-            id = span.getUTF8String(1).toLongExact(); want &= ~FId
-          }
+          if (kind.equals(K_ID) && (want & FId) != 0) { id = long(span); want &= ~FId }
         case 'v' => // version | visible
           if (kind.equals(K_VERSION)) {
-            if ((mask & FVersion) != 0 && version == null) {
-              version = span.getUTF8String(1).toLongExact(); want &= ~FVersion
-            }
+            if ((want & FVersion) != 0) { version = long(span); want &= ~FVersion }
           } else if (kind.equals(K_VISIBLE)) {
-            if ((mask & FVisible) != 0 && visible == null) {
-              visible = span.getUTF8String(1).equals(TRUE); want &= ~FVisible
+            if ((want & FVisible) != 0) {
+              val t = span.getUTF8String(1)
+              visible = if (t == null) null else t.equals(TRUE)
+              want &= ~FVisible
             }
           }
         case 'c' =>
-          if (kind.equals(K_CHANGESET) && (mask & FChangeset) != 0 && changeset == null) {
-            changeset = span.getUTF8String(1).toLongExact(); want &= ~FChangeset
+          if (kind.equals(K_CHANGESET) && (want & FChangeset) != 0) {
+            changeset = long(span); want &= ~FChangeset
           }
         case 'u' => // uid | user
           if (kind.equals(K_UID)) {
-            if ((mask & FUid) != 0 && uid == null) {
-              uid = span.getUTF8String(1).toLongExact(); want &= ~FUid
-            }
+            if ((want & FUid) != 0) { uid = long(span); want &= ~FUid }
           } else if (kind.equals(K_USER)) {
-            if ((mask & FUser) != 0 && user == null) {
-              user = span.getUTF8String(1).clone(); want &= ~FUser
-            }
+            if ((want & FUser) != 0) { user = text(span); want &= ~FUser }
           }
         case 'l' => // lat | lon
           if (kind.equals(K_LAT)) {
-            if ((mask & FLat) != 0 && lat == null) {
-              lat = span.getUTF8String(1).toLongExact() / 1e7; want &= ~FLat
-            }
+            if ((want & FLat) != 0) { lat = degrees(span); want &= ~FLat }
           } else if (kind.equals(K_LON)) {
-            if ((mask & FLon) != 0 && lon == null) {
-              lon = span.getUTF8String(1).toLongExact() / 1e7; want &= ~FLon
-            }
+            if ((want & FLon) != 0) { lon = degrees(span); want &= ~FLon }
           }
         case _ => // unknown span kinds pass through untouched
       }
@@ -242,5 +231,25 @@ object SpanDecode {
       if (nds == null) null else new GenericArrayData(nds.toArray()),
       if (members == null) null else new GenericArrayData(members.toArray()),
       if (media == null) null else new GenericArrayData(media.toArray())))
+  }
+
+  // Header text readers: null text decodes to null, like the HOF
+  // reference's cast of a null string.
+
+  /** Header text, cloned (the input buffer may be reused). */
+  private def text(span: InternalRow): UTF8String = {
+    val t = span.getUTF8String(1)
+    if (t == null) null else t.clone()
+  }
+
+  private def long(span: InternalRow): Any = {
+    val t = span.getUTF8String(1)
+    if (t == null) null else t.toLongExact()
+  }
+
+  /** lat/lon text is fixed-point degrees × 1e7. */
+  private def degrees(span: InternalRow): Any = {
+    val t = span.getUTF8String(1)
+    if (t == null) null else t.toLongExact() / 1e7
   }
 }

@@ -1,9 +1,10 @@
 package graft.exprs
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GetStructField, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ConditionalExpression, Expression,
+  GetStructField, NamedExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -16,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * for the lookup kernel to scan it once and throw it away; these
   * expressions scan the spans structs in place and allocate nothing until a
   * match's value must be returned. Installed by [[SpanPredicateFuse]], which
-  * [[graft.model.OsmView.derivePruned]] registers as an extra optimizer
-  * rule — the rewrite only ever sees plans where `tags` provably came from
-  * a [[DecodeOsmSpans]] over the spans column, so hot-column and
-  * parquet-array reads are untouched.
+  * [[graft.model.OsmView.derive]] registers as an extra optimizer rule — the
+  * rewrite only ever sees plans where `tags` provably came from a
+  * [[DecodeOsmSpans]] over the spans column, so hot-column and parquet-array
+  * reads are untouched.
   *
   * Parity with the decode + [[TagLookup]]/[[TagExists]] chain (pinned by
   * SpanTagExprsSpec): first matching tag span wins (span order = decoded
@@ -160,11 +161,11 @@ object ByteArrayEq {
 /** Extra optimizer rule: rewrites tag predicates that provably read the
   * tags field of a [[DecodeOsmSpans]] over some spans column into the
   * direct span-scanning kernels above. Registered idempotently via
-  * `spark.experimental.extraOptimizations` by
-  * [[graft.model.OsmView.derivePruned]]; extra rules run AFTER the main
-  * optimizer batches, so the fused expressions are what physical planning
-  * sees, and plans that read tags from parquet or hot columns never match
-  * the pattern. */
+  * `spark.experimental.extraOptimizations` by [[graft.model.OsmView.derive]],
+  * ahead of [[DecodeMerge]]; extra rules run AFTER the main optimizer
+  * batches, so the fused expressions are what physical planning sees, and
+  * plans that read tags from parquet or hot columns never match the
+  * pattern. */
 object SpanPredicateFuse extends Rule[LogicalPlan] {
   private val TagsOrdinal = 10 // DecodeOsmSpans.schema field index of `tags`
 
@@ -183,4 +184,43 @@ object SpanPredicateFuse extends Rule[LogicalPlan] {
 
   private def fusable(mask: Int, key: String): Boolean =
     (mask & SpanDecode.FTags) != 0 && !key.contains('=')
+}
+
+/** Extra optimizer rule: one decode per spans column in each projection.
+  * [[graft.model.OsmView.derive]] gives every typed column its own
+  * single-field [[DecodeOsmSpans]], so column pruning drops the passes a
+  * query never reads; a projection that keeps k columns would still scan
+  * the spans array k times. Inside each `Project`, every decode over the
+  * same child is rewritten to one decode whose mask is the OR of theirs, and
+  * subexpression elimination then evaluates it once per row.
+  *
+  * Filter conditions are left alone: a narrow predicate keeps its early-exit
+  * single-field pass. A decode that sits only in a conditional branch (not in
+  * `ConditionalExpression.alwaysEvaluatedInputs`) keeps its own mask, since
+  * widening it would parse fields for rows the branch never reads, and under
+  * ANSI a dirty field can throw. Runs after [[SpanPredicateFuse]]: merging
+  * only widens masks, so a tags lookup fused first leaves no `FTags` bit on
+  * its sibling decodes. */
+object DecodeMerge extends Rule[LogicalPlan] {
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case p @ Project(list, _) =>
+      val always = list.flatMap(alwaysEvaluated)
+      val masks = always.groupMapReduce(_.child.canonicalized)(_.mask)(_ | _)
+      if (always.forall(d => masks(d.child.canonicalized) == d.mask)) p
+      else {
+        val merge = always.map(_.canonicalized).toSet
+        p.copy(projectList = list.map(_.transform {
+          case d: DecodeOsmSpans if merge(d.canonicalized) =>
+            d.copy(mask = masks(d.child.canonicalized))
+        }.asInstanceOf[NamedExpression]))
+      }
+  }
+
+  /** The decodes evaluated for every row that reaches the expression. */
+  private def alwaysEvaluated(e: Expression): Seq[DecodeOsmSpans] = e match {
+    case d: DecodeOsmSpans => Seq(d)
+    case c: ConditionalExpression => c.alwaysEvaluatedInputs.flatMap(alwaysEvaluated)
+    case other => other.children.flatMap(alwaysEvaluated)
+  }
 }

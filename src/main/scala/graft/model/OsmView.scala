@@ -25,66 +25,37 @@ object OsmView {
     get(filter(col("spans"), s => s.getField("kind") === kind), lit(0))
       .getField("text")
 
-  /** Single-pass variant of [[derive]]: one custom-Expression traversal of
-    * `spans` for all fields (graft.exprs.DecodeOsmSpans). Same
-    * output schema and values (equivalence-tested). Use it when ALL fields
-    * are needed — full-view materialization runs 1.8× faster. For in-flight
-    * FILTERS prefer [[derivePruned]] (what [[derive]] now delegates to):
-    * its per-field masked decodes let Catalyst drop whole passes for
-    * untouched fields AND stay codegen'd (~12× the HOF [[deriveHof]] path
-    * on the bench suite); [[deriveHof]] remains the pure-Column reference
-    * the decoders are equivalence-tested against.
-    * The struct is
-    * materialized once per row in an inner projection; the outer projection
-    * extracts fields (CollapseProject keeps the expensive alias
-    * un-duplicated — pinned by test). */
-  def deriveFast(docs: DataFrame): DataFrame = {
-    val hasType = docs.columns.contains("type")
-    val hasSeq = docs.columns.contains("seq")
-    val decoded = org.apache.spark.sql.GraftBridge.column(
-      graft.exprs.DecodeOsmSpans(
-        org.apache.spark.sql.GraftBridge.expression(col("spans"))))
-    val base = docs.select(
-      col("doc_id"), col("spans"),
-      (if (hasType) col("type") else decoded.getField("type")).as("type"),
-      (if (hasSeq) col("seq") else monotonically_increasing_id()).as("seq"),
-      decoded.as("__osm"))
-    val fields = Seq("id", "version", "visible", "changeset", "uid", "user",
-      "timestamp", "lat", "lon", "tags", "nds", "members", "media_refs")
-    base.select(
-      Seq(col("doc_id"), col("spans"), col("type"), col("seq")) ++
-        fields.map(f => col("__osm").getField(f).as(f)): _*)
-  }
-
-  /** Pruned-decode view: every typed column is its OWN single-field
-    * [[graft.exprs.DecodeOsmSpans]] pass (mask = that field's bit), so
-    * Catalyst column pruning removes whole decode passes for columns a query
-    * never touches — a filter on `@version >= 2` decodes only `version`.
-    * Each pass is whole-stage-codegen'd (static-call `doGenCode`), unlike
-    * the HOF reference [[deriveHof]] whose per-field array lambdas are
-    * CodegenFallback. A predicate touching k fields pays k tight linear
-    * scans of the spans array; for the narrow predicates filters actually
-    * use, that beats one full-decode pass ([[deriveFast]], which parses all
-    * 14 fields including tag/member string splits). This is the in-flight
-    * filter path ([[graft.engine.FilterEngine.filter]]); materialization
-    * wants [[deriveFast]]. */
-  def derivePruned(docs: DataFrame): DataFrame = {
-    // fuse tag predicates over this view's decoded tags into direct span
-    // scans (graft.exprs.SpanPredicateFuse scaladoc) — idempotent, and only
-    // plans whose tags provably come from DecodeOsmSpans are rewritten
+  /** The typed view: `doc_id`, `spans`, `type`, `seq`, then one column per
+    * decoded field. If the physical table already carries `type`/`seq`
+    * (partition + order columns), they are reused so partition pruning
+    * works; otherwise they are derived.
+    *
+    * Every typed column is its OWN single-field [[graft.exprs.DecodeOsmSpans]]
+    * (mask = that field's bit), so column pruning removes the decode of
+    * every column a query never touches, and a filter on `@version >= 2`
+    * decodes only `version`, with the kernel's early exit. The two optimizer
+    * rules installed here then shape what survives: [[graft.exprs.SpanPredicateFuse]]
+    * turns tag lookups over the decoded tags into direct span scans, and
+    * [[graft.exprs.DecodeMerge]] folds the decodes one projection keeps into
+    * a single decode, so a wide select scans the spans array once per row.
+    * Each decode is whole-stage-codegen'd, unlike the HOF reference
+    * [[deriveHof]]; CodecSpec pins the two field-for-field. */
+  def derive(docs: DataFrame): DataFrame = {
+    // fusion first: merging only widens masks, so a merge ahead of it would
+    // leave a fused lookup's FTags bit on its sibling decodes
     val exp = docs.sparkSession.experimental
+    val rules = Seq(graft.exprs.SpanPredicateFuse, graft.exprs.DecodeMerge)
     exp.synchronized {
-      if (!exp.extraOptimizations.contains(graft.exprs.SpanPredicateFuse))
-        exp.extraOptimizations = exp.extraOptimizations :+ graft.exprs.SpanPredicateFuse
+      if (!exp.extraOptimizations.containsSlice(rules))
+        exp.extraOptimizations = exp.extraOptimizations.filterNot(rules.contains) ++ rules
     }
     val hasType = docs.columns.contains("type")
     val hasSeq = docs.columns.contains("seq")
     def dec(bit: Int): Column = org.apache.spark.sql.GraftBridge.column(
       graft.exprs.DecodeOsmSpans(
         org.apache.spark.sql.GraftBridge.expression(col("spans")), bit))
-    def f(name: String, bit: Int): Column = dec(bit).getField(name).as(name)
     val fields = graft.exprs.SpanDecode.fieldBits.collect {
-      case (name, bit) if name != "type" => f(name, bit)
+      case (name, bit) if name != "type" => dec(bit).getField(name).as(name)
     }
     docs.select(
       Seq(col("doc_id"), col("spans"),
@@ -94,26 +65,14 @@ object OsmView {
         fields: _*)
   }
 
-  /** Typed view columns derived from `spans`. If the physical table already
-    * carries `type`/`seq` (partition + order columns), they are reused so
-    * partition pruning works; otherwise they are derived.
-    *
-    * Since round 6 this IS the pruned codegen'd decode ([[derivePruned]]):
-    * the general-purpose view must not pay the ~12-pass CodegenFallback HOF
-    * derivation (kept below as [[deriveHof]], the equivalence oracle) —
-    * measured ~20× on the bench filter suite (spans_decode 89 s → ~4 s),
-    * because each consumer's untouched fields prune to zero decode passes
-    * and the remaining passes stay inside whole-stage codegen. Output
-    * schema and values are identical (CodecSpec pins both decoders against
-    * [[deriveHof]] field-for-field and against the generator's element
-    * list). */
-  def derive(docs: DataFrame): DataFrame = derivePruned(docs)
+  /** Same as [[derive]]; kept only because the frozen `graft.Bench` calls
+    * it. */
+  def derivePruned(docs: DataFrame): DataFrame = derive(docs)
 
   /** The pure-Column HOF reference derivation — ~12 higher-order-function
     * passes over `spans`, each CodegenFallback. Kept ONLY as the
-    * independent equivalence oracle for the codegen'd decoders
-    * ([[deriveFast]]/[[derivePruned]], CodecSpec) and for the expected
-    * rows of perfbench's output checks; never use on a hot path. */
+    * independent equivalence oracle for [[derive]] (CodecSpec) and for the
+    * expected rows of perfbench's output checks; never use on a hot path. */
   private[graft] def deriveHof(docs: DataFrame): DataFrame = {
     val hasType = docs.columns.contains("type")
     val hasSeq = docs.columns.contains("seq")

@@ -145,7 +145,9 @@ object Dedup {
     * scan with no shuffle at all (guide §1.2 step 1: remove the pass, not
     * tune it). Equivalence with the HOF [[simhash]] form is spec-pinned;
     * null text coalesces to 0L exactly as the aggregation's empty-group
-    * chain did. Returns (key, sim). */
+    * chain did. Returns (key, sim), one row per input row: keys must be
+    * unique, since duplicate keys are not combined (each row keeps its own
+    * simhash, and downstream band joins see every copy). */
   def simhashDF(docs: DataFrame, textCol: Column, keyCol: Column): DataFrame = {
     val sim = org.apache.spark.sql.GraftBridge.column(graft.exprs.SimhashExpr(
       org.apache.spark.sql.GraftBridge.expression(textCol)))
@@ -458,7 +460,7 @@ object Dedup {
         col("n_hot").as("nh_b")), "key_b")
       .filter((col("shared_rare") + least(col("nh_a"), col("nh_b"))).cast("double") >=
         lit(threshold) * least(col("nt_a"), col("nt_b")))
-      .select("key_a", "key_b")
+      .select("key_a", "key_b", "nt_a")
       // tiny (surviving pairs only): materialize so the verify joins below
       // see a broadcast-sized relation instead of re-planning the whole
       // candidate-generation DAG under each join
@@ -469,15 +471,16 @@ object Dedup {
     // only on the surviving pairs. The pair list is an ExistingRDD scan
     // after the checkpoint, so the planner has no size estimate for it and
     // would sort-merge-join — shuffling AND sorting the corpus-sized
-    // fingerprint table twice; an explicit broadcast hint (guarded by the
-    // materialized count, second join carries the attached fps_a arrays so
-    // the cap is conservative) keeps fmat unshuffled: two streamed
-    // broadcast-hash joins.
-    val broadcastPairs = plausible.count() <= 100000L
-    def hinted(df: DataFrame): DataFrame = if (broadcastPairs) broadcast(df) else df
-    hinted(plausible)
+    // fingerprint table twice; explicit broadcast hints keep fmat
+    // unshuffled: two streamed broadcast-hash joins. One aggregation over
+    // the materialized pairs sizes both build sides: the first is the bare
+    // pair list, the second carries the attached fps_a arrays (Σ nt_a longs).
+    val sizes = plausible.agg(count(lit(1)), coalesce(sum(col("nt_a")), lit(0L))).head()
+    val (pairs, fpsLongs) = (sizes.getLong(0), sizes.getLong(1))
+    def hinted(ok: Boolean)(df: DataFrame): DataFrame = if (ok) broadcast(df) else df
+    hinted(pairs <= MaxBroadcastPairs)(plausible.select("key_a", "key_b"))
       .join(fmat.select(col("key").as("key_a"), col("fps").as("fps_a")), "key_a")
-      .transform(hinted)
+      .transform(hinted(broadcastAttached(pairs, fpsLongs)))
       .join(fmat.select(col("key").as("key_b"), col("fps").as("fps_b")), "key_b")
       .select(col("key_a"), col("key_b"),
         size(array_intersect(col("fps_a"), col("fps_b"))).cast("long").as("shared"),
@@ -485,4 +488,14 @@ object Dedup {
           least(size(col("fps_a")), size(col("fps_b")))).as("overlap"))
       .filter(col("overlap") >= threshold)
   }
+
+  private val MaxBroadcastPairs = 100000L
+  private val MaxBroadcastFpsBytes = 64L << 20
+
+  /** Whether the winnow verify tail may broadcast the pair list with its
+    * attached fps_a arrays: at most `MaxBroadcastPairs` pairs AND at most
+    * `MaxBroadcastFpsBytes` of fingerprint longs (8 bytes each), so long
+    * documents cannot blow up a build side the pair count alone allows. */
+  private[ops] def broadcastAttached(pairs: Long, fpsLongs: Long): Boolean =
+    pairs <= MaxBroadcastPairs && fpsLongs * 8 <= MaxBroadcastFpsBytes
 }

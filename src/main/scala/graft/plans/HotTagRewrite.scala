@@ -37,13 +37,12 @@ import graft.engine.HotTags
   * makes the rewrite an equivalence, sound under `Not`. Both conjuncts are
   * source-pushable, unlike a `coalesce(equalTo, false)` wrapper.
   *
-  * Contract (the hot view ENFORCES the first two at materializeView
-  * time): the tags ARRAY is never null (coalesced to empty at view build —
-  * a null array would make `exists` three-valued and break the Not case),
-  * tag VALUES are never null (null-valued tags are dropped from the array
-  * before projection), and keys are unique per element (the OSM data
-  * model; also what makes the compiler's first-match semantics equal
-  * any-match `exists`).
+  * Contract (the hot view guarantees the first two): the tags ARRAY is
+  * never null (coalesced to empty at materializeView — a null array would
+  * make `exists` three-valued and break the Not case), tag VALUES are
+  * never null (the span decode never yields one), and keys are unique per
+  * element (the OSM data model; also what makes the compiler's
+  * first-match semantics equal any-match `exists`).
   *
   * Registration: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   * (cluster-wide, [[GraftExtensions]]), or per-session via

@@ -22,9 +22,9 @@ object StreamingFilter {
     val q = FilterEngine.parse(expression)
     if (q.neverMatches)
       throw new graft.ofl.OflTypeException("Filter expression can never match")
-    // same pruned codegen'd decode as the batch path: each micro-batch pays
-    // one spans pass per predicate field, not the full HOF derivation
-    OsmView.derivePruned(streamingDocs)
+    // same derivation as the batch path: each micro-batch pays one early-exit
+    // spans pass per predicate field, and one merged pass for the output
+    OsmView.derive(streamingDocs)
       .filter(Compiler.compileEffective(q.ast, idLoader))
   }
 }

@@ -114,7 +114,7 @@ object ScalingBench {
     if (mode != "decode" && !new java.io.File(viewPath + "/_SUCCESS").exists())
       FilterEngine.materializeView(spark.read.parquet(docsPath), viewPath)
     val view =
-      if (mode == "decode") graft.model.OsmView.derivePruned(spark.read.parquet(docsPath))
+      if (mode == "decode") graft.model.OsmView.derive(spark.read.parquet(docsPath))
       else spark.read.parquet(viewPath)
     val nDocs = view.count()
 

@@ -1,8 +1,18 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestSession
+import graft.exprs.TagLookup
+import graft.exprs.SpanDecode._
+import graft.model.CodecSpec.decodeMasks
+import graft.model.OsmView
 import graft.compile.Compiler
 import graft.fixtures.DeterministicGen
 import graft.ofl.Parser
@@ -25,6 +35,14 @@ class PlanQualitySpec extends AnyFunSuite {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  // parquet-backed docs: a LocalRelation would be constant-folded before the
+  // extra optimizer rules could shape the decodes
+  private lazy val docsPath: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    DeterministicGen.docsDF(spark, 0.001).write.mode("overwrite").parquet(dir)
+    dir
+  }
 
   test("scalar predicates push down into the typed-view parquet scan") {
     val view = spark.read.parquet(viewPath)
@@ -150,14 +168,11 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("in-flight span filter decodes only the fields the predicate touches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
-    DeterministicGen.docsDF(spark, 0.001).write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
+    val docs = spark.read.parquet(docsPath)
     val df = FilterEngine.filter(docs, "@version >= 2").select("id")
     val optimized = df.queryExecution.optimizedPlan.toString
     val masks = "decode_osm_spans\\([^,)]+, (\\d+)\\)".r
       .findAllMatchIn(optimized).map(_.group(1).toInt).toSet
-    import graft.exprs.SpanDecode._
     assert(masks === Set(FId, FVersion),
       s"expected only id+version decode passes, got masks $masks in:\n$optimized")
     // and the decode path itself runs inside whole-stage codegen
@@ -165,6 +180,62 @@ class PlanQualitySpec extends AnyFunSuite {
     assert("\\*\\(\\d+\\) Filter".r.findFirstIn(p).isDefined ||
       "\\*\\(\\d+\\) Project".r.findFirstIn(p).isDefined,
       s"no codegen span around the decode filter in:\n$p")
+  }
+
+  test("a wide select decodes once; a fused tag lookup leaves no tags bit") {
+    val docs = spark.read.parquet(docsPath)
+    val highway = GraftBridge.column(TagLookup(GraftBridge.expression(col("tags")), "highway"))
+    val df = OsmView.derive(docs).select(col("id"), col("version"), highway.as("highway"))
+    val optimized = df.queryExecution.optimizedPlan
+    assert(decodeMasks(optimized) === Seq("Project" -> Set(FId | FVersion)), optimized)
+    assert(optimized.toString.contains("tag_lookup_spans"), optimized)
+    val whole = OsmView.derive(docs).queryExecution.optimizedPlan
+    assert(decodeMasks(whole) === Seq("Project" -> Set(AllFields & ~FType)), whole)
+  }
+
+  test("filters and conditional branches keep their own decode masks") {
+    val docs = spark.read.parquet(docsPath)
+    val filtered = FilterEngine.filter(docs, "@version >= 2").queryExecution.optimizedPlan
+    assert(decodeMasks(filtered).toMap === Map(
+      "Filter" -> Set(FVersion), "Project" -> Set(AllFields & ~FType)), filtered)
+    val branch = OsmView.derive(docs)
+      .select(col("id"), when(col("type") === "way", col("version")).as("v"))
+      .queryExecution.optimizedPlan
+    assert(decodeMasks(branch) === Seq("Project" -> Set(FId, FVersion)), branch)
+  }
+
+  test("materializeView writes its view through one decode") {
+    val written = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+          written.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-view-once").toString
+      FilterEngine.materializeView(spark.read.parquet(docsPath), dir)
+      val p = written.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(p != null, "no write plan seen")
+      assert(decodeMasks(p).map(_._2) === Seq(Set(AllFields & ~FType)), p)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a bare t_highway column without hot-key metadata is not pushed") {
+    // a view whose columns carry no graft_hot_key metadata compiles cold
+    val tagged = spark.read.parquet(viewPath)
+    val dir = java.nio.file.Files.createTempDirectory("graft-view-bare").toString
+    tagged.select(tagged.columns.toSeq.map(c => col(c).as(c, Metadata.empty)): _*)
+      .write.mode("overwrite").parquet(dir)
+    val bare = spark.read.parquet(dir)
+    assert(bare.columns.contains("t_highway") && HotTags.forSchema(bare.schema).isEmpty)
+    val df = FilterEngine.filterView(bare, "highway == residential")
+    val p = plan(df)
+    assert(!p.contains("EqualTo(t_highway") && !p.contains("IsNotNull(t_highway)"),
+      s"bare column pushed:\n$p")
+    val want = FilterEngine.filterView(tagged, "highway == residential").select("doc_id")
+    assert(df.select("doc_id").exceptAll(want).isEmpty && want.exceptAll(df.select("doc_id")).isEmpty)
   }
 
   test("polygon join broadcasts the polygon side") {

@@ -35,7 +35,7 @@ class SpanTagExprsSpec extends AnyFunSuite {
     "nosuchkey == v")
 
   test("fused tag predicates return identical rows to the decode path") {
-    val view = OsmView.derivePruned(docs) // installs the rule
+    val view = OsmView.derive(docs) // installs the rule
     exprs.foreach { src =>
       val pred = Compiler.compileEffective(Parser.parse(src))
       val fused = view.filter(pred)
@@ -54,7 +54,7 @@ class SpanTagExprsSpec extends AnyFunSuite {
   }
 
   test("a key containing '=' stays on the decode path (guard)") {
-    val view = OsmView.derivePruned(docs)
+    val view = OsmView.derive(docs)
     val pred = Compiler.compileEffective(Parser.parse("'a=b' == 'c'"))
     val plan = view.filter(pred).queryExecution.optimizedPlan.toString
     assert(!plan.contains("tag_lookup_spans"), plan)
@@ -63,7 +63,7 @@ class SpanTagExprsSpec extends AnyFunSuite {
 
   test("a decode whose mask lacks tags is not fused (tags stay null)") {
     import org.apache.spark.sql.GraftBridge
-    OsmView.derivePruned(docs) // installs the rule
+    OsmView.derive(docs) // installs the rule
     val tags = GraftBridge.expression(GraftBridge.column(DecodeOsmSpans(
       GraftBridge.expression(col("spans")), SpanDecode.FId)).getField("tags"))
     val q = docs.select(

@@ -1,13 +1,16 @@
 package graft.model
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import graft.SparkTestSession
+import graft.exprs.{DecodeOsmSpans, SpanDecode}
 import graft.fixtures.DeterministicGen
 
-/** Round-trip: OsmElement → spans → OsmView.derive (Catalyst HOFs) must
-  * reproduce every typed field, and the docs table must preserve the
-  * span-sequence invariant (kind, text, media_ref, order). */
+/** Round-trip: OsmElement → spans → OsmView.derive must reproduce every
+  * typed field and equal the HOF reference derivation (also on malformed
+  * span arrays), and the docs table must preserve the span-sequence
+  * invariant (kind, text, media_ref, order). */
 class CodecSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -56,41 +59,84 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
-  test("single-pass deriveFast equals the HOF derivation field-for-field") {
-    val docs = DeterministicGen.docsDF(spark, 0.001)
-    val slow = OsmView.deriveHof(docs).collect()
-      .map(r => r.getAs[Long]("seq") -> r).toMap
-    val fast = OsmView.deriveFast(docs).collect()
-    assert(fast.length === slow.size)
-    fast.foreach { f =>
-      val s = slow(f.getAs[Long]("seq"))
+  // parquet-backed: a LocalRelation would be constant-folded before the
+  // extra optimizer rules run, so its plan would show no merged decode
+  private lazy val docsPq = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-codec").toString
+    DeterministicGen.docsDF(spark, 0.001).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val ref = want.collect().map(r => r.getAs[Long]("seq") -> r).toMap
+    val rows = got.collect()
+    assert(rows.length === ref.size, what)
+    rows.foreach { f =>
+      val s = ref(f.getAs[Long]("seq"))
       s.schema.fieldNames.foreach { c =>
         assert(f.getAs[Any](c) === s.getAs[Any](c),
-          s"field $c of seq=${f.getAs[Long]("seq")}")
+          s"$what: field $c of seq=${f.getAs[Long]("seq")}")
       }
     }
-    // the expensive decode must appear exactly once in the optimized plan
-    // (use a parquet-backed frame: a LocalRelation would be constant-folded)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fastplan").toString
-    docs.write.mode("overwrite").parquet(dir)
-    val optimized = OsmView.deriveFast(spark.read.parquet(dir))
-      .queryExecution.optimizedPlan.toString
-    val occurrences = "decode_osm_spans".r.findAllIn(optimized).size
-    assert(occurrences === 1, s"decode duplicated in plan:\n$optimized")
+  }
+
+  test("merged whole-view decode equals the HOF derivation") {
+    val view = OsmView.derive(docsPq)
+    assertSameRows(view, OsmView.deriveHof(docsPq), "whole view")
+    // DecodeMerge leaves one decode of the spans column, with every view
+    // field but the stored `type`, in the projection
+    assert(CodecSpec.decodeMasks(view.queryExecution.optimizedPlan) ===
+      Seq("Project" -> Set(SpanDecode.AllFields & ~SpanDecode.FType)),
+      view.queryExecution.optimizedPlan)
   }
 
   test("per-field pruned decode equals the HOF derivation field-for-field") {
-    val docs = DeterministicGen.docsDF(spark, 0.001)
-    val slow = OsmView.deriveHof(docs).collect()
-      .map(r => r.getAs[Long]("seq") -> r).toMap
-    val pruned = OsmView.derivePruned(docs).collect()
-    assert(pruned.length === slow.size)
-    pruned.foreach { f =>
-      val s = slow(f.getAs[Long]("seq"))
-      s.schema.fieldNames.foreach { c =>
-        assert(f.getAs[Any](c) === s.getAs[Any](c),
-          s"field $c of seq=${f.getAs[Long]("seq")}")
-      }
+    val view = OsmView.derive(docsPq)
+    SpanDecode.fieldBits.filter(_._1 != "type").foreach { case (c, bit) =>
+      val one = view.select("seq", c)
+      assertSameRows(one, OsmView.deriveHof(docsPq).select("seq", c), c)
+      assert(CodecSpec.decodeMasks(one.queryExecution.optimizedPlan) ===
+        Seq("Project" -> Set(bit)), c)
+    }
+  }
+
+  test("derive equals the HOF derivation on malformed span arrays") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val numeric = Set("id", "version", "changeset", "uid", "lat", "lon")
+    def headerText(kind: String): Gen[String] =
+      if (numeric(kind)) Gen.choose(-1800000000L, 1800000000L).map(_.toString)
+      else if (kind == "visible") Gen.oneOf("true", "false", "yes", "")
+      else Gen.oneOf(Gen.alphaNumStr, Gen.oneOf("node", "way", "relation", "ü ß"))
+    val header = for {
+      kind <- Gen.oneOf("type", "id", "version", "visible", "changeset", "uid",
+        "user", "timestamp", "lat", "lon")
+      text <- Gen.frequency(4 -> headerText(kind), 1 -> Gen.const(null: String))
+    } yield Span(kind, text, null, 0)
+    val span: Gen[Span] = Gen.frequency(
+      6 -> header,
+      3 -> Gen.oneOf("highway=primary", "name", "a=b=c", "=", "", "k=", "=v",
+        "ünï=cødé=x").map(Span("tag", _, null, 0)),
+      1 -> Gen.choose(-100000L, 100000L).map(n => Span("nd", n.toString, null, 0)),
+      1 -> Gen.oneOf("w/12/outer", "n/-3/", "r/0/a/b").map(Span("member", _, null, 0)),
+      1 -> Gen.const(Span("media", "", "media://7", 0)),
+      1 -> Gen.oneOf("", "t", "ty", "tags", "i", "Id", "versions", "lat ", "x")
+        .map(Span(_, "1", null, 0)))
+    val spans = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, span))
+    val params = Gen.Parameters.default
+    val rows = (1L to 300L).map(i =>
+      (s"d$i", spans.apply(params, Seed(i)).getOrElse(Nil), i))
+    // an RDD-backed frame: its projections are not constant-folded, so the
+    // merged and the single-field decodes both run as planned
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2))
+      .toDF("doc_id", "spans", "seq")
+    val view = OsmView.derive(docs)
+    val hof = OsmView.deriveHof(docs)
+    assertSameRows(view, hof, "whole view")
+    assert(CodecSpec.decodeMasks(view.queryExecution.optimizedPlan) ===
+      Seq("Project" -> Set(SpanDecode.AllFields)))
+    view.columns.foreach { c =>
+      assertSameRows(view.select("seq", c), hof.select("seq", c), c)
     }
   }
 
@@ -118,4 +164,14 @@ class CodecSpec extends AnyFunSuite {
     assert(a.exists(_.mediaRefs.nonEmpty), "interleaved media spans")
     assert(a.exists(!_.visible), "invisible elements")
   }
+}
+
+object CodecSpec {
+  /** Node name → masks of the distinct span decodes, for each plan node that
+    * has any (the views here decode one spans column, so one mask is one
+    * decode). */
+  def decodeMasks(plan: LogicalPlan): Seq[(String, Set[Int])] =
+    plan.collect { case n if n.expressions.exists(_.exists(_.isInstanceOf[DecodeOsmSpans])) =>
+      n.nodeName -> n.expressions.flatMap(_.collect { case d: DecodeOsmSpans => d.mask }).toSet
+    }
 }

@@ -124,6 +124,16 @@ class OpsSpec extends AnyFunSuite {
       "boilerplate-only overlaps must not pair (no rare shared fingerprint)")
   }
 
+  test("winnow verify tail broadcasts attached fingerprints under a byte cap") {
+    assert(Dedup.broadcastAttached(0L, 0L))
+    assert(Dedup.broadcastAttached(100000L, 1000000L))
+    // the pair cap still holds when the arrays are tiny
+    assert(!Dedup.broadcastAttached(100001L, 0L))
+    // few pairs, but 64 MiB of fps_a longs (8 bytes each) is the limit
+    assert(Dedup.broadcastAttached(10L, 8L << 20))
+    assert(!Dedup.broadcastAttached(10L, (8L << 20) + 1))
+  }
+
   test("langId finds the stopword-dominant language") {
     val samples = Seq(
       ("the cat and the dog are in the house", "en"),

@@ -108,7 +108,7 @@ class GeomOpsSpec extends AnyFunSuite {
         if (la.isEmpty) None else Some(la.min))
     }.toMap
 
-    val view = OsmView.derivePruned(DeterministicGen.docsDF(spark, 0.001))
+    val view = OsmView.derive(DeterministicGen.docsDF(spark, 0.001))
     val got = GeomOps.wayMetrics(GeomOps.addLocations(view)).collect()
     assert(got.length === expected.size)
     got.foreach { r =>
