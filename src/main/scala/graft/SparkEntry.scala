@@ -341,7 +341,7 @@ object SparkEntry {
          |ORDER BY id""".stripMargin,
 
     "spatial_bbox_prune" -> bboxPruneOracle,
-    // same boxes, HILBERT-curve layout — one oracle, two storage curves
+    // the same query over the same layout (Queries: a twin gate)
     "spatial_bbox_hilbert" -> bboxPruneOracle,
 
     "spatial_s2_cell" -> s2DensityOracle(12, "cell"),
@@ -395,7 +395,7 @@ object SparkEntry {
          |GROUP BY cx, cy ORDER BY cx, cy""".stripMargin,
 
     "spatial_pip" -> pipOracle,
-    // same polygons through the Z layout — one oracle, two engine paths
+    // same polygons through the clustered layout — one oracle, two engine paths
     "spatial_pip_pruned" -> pipOracle,
 
     "spatial_knn" ->

@@ -277,20 +277,24 @@ object Compiler {
 
   /** First value for key k — get_value_by_key returns the FIRST matching tag
     * (hpp:1391); null when absent. (A map lookup would need a dedup policy;
-    * the filter+get form keeps first-match semantics and stays null-safe.)
+    * a first-match scan keeps the reference semantics and stays null-safe.)
     * A HOT key reads its materialized top-level column instead — same value
-    * by construction ([[graft.engine.HotTags.projection]] materializes this
-    * very expression), but statically resolvable and pushdown-eligible. */
+    * by construction ([[graft.engine.HotTags.projection]] materializes
+    * [[tagLookup]], the cold path below), but statically resolvable and
+    * pushdown-eligible. */
   private def tagValue(k: String, env: Env): Column = env.hot.get(k) match {
     case Some(c) => col(c)
-    case None =>
-      // codegen'd first-match lookup, parity-pinned against
-      // get(filter(tags, t => t.key === k), 0).value — the HOF form is
-      // CodegenFallback and allocates a filtered array per row
-      // (graft.exprs.TagLookup scaladoc)
-      org.apache.spark.sql.GraftBridge.column(graft.exprs.TagLookup(
-        org.apache.spark.sql.GraftBridge.expression(col("tags")), k))
+    case None    => tagLookup(k)
   }
+
+  /** The cold-path tag read: codegen'd first-match lookup of key `k` in the
+    * `tags` column, parity-pinned against
+    * `get(filter(tags, t => t.key === k), 0).value` — the HOF form is
+    * CodegenFallback and allocates a filtered array per row
+    * (graft.exprs.TagLookup scaladoc). */
+  def tagLookup(k: String): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.exprs.TagLookup(
+      org.apache.spark.sql.GraftBridge.expression(col("tags")), k))
 
   private def intNative(e: Expr, ctx: Ctx, ld: Env): Column = e match {
     case IntLit(v) => lit(v)

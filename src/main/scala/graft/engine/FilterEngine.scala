@@ -26,15 +26,14 @@ object HotTags {
 
   def colName(key: String): String = "t_" + key.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** The materialization expression — EXACTLY the compiler's cold-path
-    * `tagValue` (first match, null when absent), so hot and cold reads are
-    * equal by construction. The never-null-tag-VALUE invariant the hot
-    * compile shape relies on (IsNotNull ⟺ key present) holds because the
-    * view's tags come from [[graft.exprs.DecodeOsmSpans]], whose tag values
-    * are never null (a tag with no '=' decodes to value ""). */
-  def projection(key: String): Column =
-    get(filter(col("tags"), t => t.getField("key") === key), lit(0))
-      .getField("value")
+  /** The materialization expression — the compiler's cold-path tag read
+    * [[Compiler.tagLookup]] itself (codegen'd first match, null when
+    * absent), so hot and cold reads are equal by construction. The
+    * never-null-tag-VALUE invariant the hot compile shape relies on
+    * (IsNotNull ⟺ key present) holds because the view's tags come from
+    * [[graft.exprs.DecodeOsmSpans]], whose tag values are never null (a tag
+    * with no '=' decodes to value ""). */
+  def projection(key: String): Column = Compiler.tagLookup(key)
 
   /** Top-`n` tag keys by frequency in `view` (count desc, key asc for
     * determinism), deduped on the sanitized column name (two keys that
@@ -105,13 +104,15 @@ object FilterEngine {
 
   /** Single-pass filter (reference R1): selects matching rows of the docs
     * table, never rewriting `spans` (span-sequence invariant is structural).
-    * Returns the full docs shape plus the typed view columns. */
+    * Returns the full docs shape plus the typed view columns. A never-match
+    * expression throws [[OflTypeException]] from
+    * [[Compiler.compileEffective]] (main.cpp:114-117). `docs` may be a
+    * streaming frame (Structured Streaming, SURVEY.md §2.9): the predicate
+    * is one stateless Column, so the result is start()-able with any sink. */
   def filter(docs: DataFrame, expression: String,
              idLoader: Compiler.IdListLoader = Compiler.noFiles,
              sugar: Boolean = false): DataFrame = {
     val q = parse(expression, sugar)
-    if (q.neverMatches)
-      throw new OflTypeException("Filter expression can never match") // main.cpp:114-117
     // the predicate pays one early-exit spans pass per field it references;
     // the rows that pass decode the remaining columns in one merged pass
     OsmView.derive(docs).filter(Compiler.compileEffective(q.ast, idLoader))
@@ -280,8 +281,6 @@ object FilterEngine {
   def filterView(view: DataFrame, expression: String,
                  idLoader: Compiler.IdListLoader = Compiler.noFiles): DataFrame = {
     val q = parse(expression)
-    if (q.neverMatches)
-      throw new OflTypeException("Filter expression can never match")
     view.filter(Compiler.compileEffective(q.ast, idLoader,
       HotTags.forSchema(view.schema)))
   }

@@ -78,6 +78,13 @@ object Main {
         "--checkpoint with stdin input ('-') is not supported: resume needs a re-readable input fingerprint; spool to a path first")
       sys.exit(2)
     }
+    // the checkpointed job is the bucketed single-pass filter; complete-ways
+    // has no checkpointed form, so the pair is refused, not half-honored
+    if (completeWays && checkpointRoot.nonEmpty) {
+      System.err.println(
+        "--complete-ways/-w with --checkpoint is not supported: the checkpointed job is a single-pass filter")
+      sys.exit(2)
+    }
     if (exprFile.nonEmpty)
       expression = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(exprFile)), "UTF-8")

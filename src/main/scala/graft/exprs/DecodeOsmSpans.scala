@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * single-field decode per column, so Catalyst column pruning drops whole
   * passes, and [[DecodeMerge]] folds the decodes a projection keeps into
   * one. Semantics per field are identical to the HOF derivation (absent
-  * header span or null header text ⇒ null) and equivalence is tested
-  * against it.
+  * header span or null header text ⇒ null; a span with a null kind is
+  * skipped) and equivalence is tested against it.
   */
 case class DecodeOsmSpans(child: Expression, mask: Int = SpanDecode.AllFields)
   extends UnaryExpression {
@@ -146,7 +146,10 @@ object SpanDecode {
     while (i < n && !(scalarOnly && want == 0)) {
       val span = spans.getStruct(i, 4)
       val kind = span.getUTF8String(0)
-      val b0: Int = if (kind.numBytes() > 0) kind.getByte(0).toInt else 0
+      // a null kind matches no kind (the HOF reference's `kind === x` is
+      // null there, and its filter drops the span): it falls to `case _`
+      val b0: Int =
+        if (kind != null && kind.numBytes() > 0) kind.getByte(0).toInt else 0
       b0 match {
         case 't' => // tag | type | timestamp
           if (kind.equals(K_TAG)) {

@@ -25,8 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Parity with the decode + [[TagLookup]]/[[TagExists]] chain (pinned by
   * SpanTagExprsSpec): first matching tag span wins (span order = decoded
   * array order); a tag span with no '=' decodes to (text, "") so it matches
-  * `key == text` with value ""; decoded keys/elements are never null, so
-  * exists is two-valued; null spans input yields null.
+  * `key == text` with value ""; a span with a null kind is no tag span;
+  * decoded keys/elements are never null, so exists is two-valued; null
+  * spans input yields null.
   */
 case class TagLookupSpans(child: Expression, key: String) extends UnaryExpression {
 
@@ -107,7 +108,8 @@ object SpanTagKernel {
     while (i < n) {
       val span = spans.getStruct(i, 4)
       val kind = span.getUTF8String(0)
-      if (kind.numBytes() == 3 && kind.getByte(0) == 't' && kind.equals(K_TAG)) {
+      if (kind != null && kind.numBytes() == 3 && kind.getByte(0) == 't' &&
+          kind.equals(K_TAG)) {
         val t = span.getUTF8String(1)
         val tlen = t.numBytes()
         if (tlen == klen) {
@@ -131,7 +133,8 @@ object SpanTagKernel {
     while (i < n) {
       val span = spans.getStruct(i, 4)
       val kind = span.getUTF8String(0)
-      if (kind.numBytes() == 3 && kind.getByte(0) == 't' && kind.equals(K_TAG)) {
+      if (kind != null && kind.numBytes() == 3 && kind.getByte(0) == 't' &&
+          kind.equals(K_TAG)) {
         val t = span.getUTF8String(1)
         val tlen = t.numBytes()
         if ((tlen == klen && t.equals(key)) ||

@@ -21,8 +21,6 @@ object Multimodal {
   final case class DecodedImage(doc_id: String, media_ref: String,
                                 width: Int, height: Int, format: String,
                                 feature: Array[Float])
-  final case class FrameSample(doc_id: String, media_ref: String,
-                               frame_idx: Int, frame_hash: Long)
 
   /** Real pure-JVM header parsing for the two image formats whose
     * dimensions live in fixed-layout headers — PNG IHDR and JPEG SOF are
@@ -681,18 +679,6 @@ object Multimodal {
                 SampledFrame(r.doc_id, r.media_ref, i, -1, -1,
                   real_decode = false, (hash & 0xff).toInt)
               }
-        }
-      }
-  }
-
-  /** Frame sampling for video-like payloads, one output row per frame. */
-  def sampleFrames(media: DataFrame, everyBytes: Int = 64): Dataset[FrameSample] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("doc_id", "media_ref", "bytes").as[MediaRow]
-      .flatMap { r =>
-        StubCodecs.sampleFrames(r.bytes, everyBytes).zipWithIndex.map {
-          case (hash, i) => FrameSample(r.doc_id, r.media_ref, i, hash)
         }
       }
   }

@@ -48,27 +48,38 @@ object Similarity {
     when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)
   }
 
-  /** Exact top-k per query in two phases: a salted local top-k
-    * (`pmod(vec_id, salts)` sub-groups) bounds every sort to its group's
-    * rows, then the global rank orders only ≤ salts·k survivors per query.
-    * EXACT: any row in a query's true global top-k has < k rows above it in
-    * its own salt group, so it survives phase 1; both phases share the
-    * (cos desc, vec_id) tie-break, so output rows and rn values equal the
-    * single-window form. The single window — partitionBy(query_id) alone —
-    * caps parallelism at the query count and fully sorts each query's
-    * candidate set in ONE task (3M rows per task on the 3M-corpus scaling
-    * fixture: N→4N efficiency 0.64); two-phase restores parallelism
-    * queries × salts and O(rows) total work. */
-  private def topKPerQuery(scored: DataFrame, k: Int, salts: Int = 64): DataFrame = {
-    val wLocal = Window.partitionBy(col("query_id"), pmod(col("vec_id"), lit(salts.toLong)))
-      .orderBy(col("cos").desc, col("vec_id"))
+  /** Salt groups per query in [[topKPerQuery]]'s first window. */
+  private val TopKSalts = 64
+
+  /** Exact top-k per `query_id` in two phases — the one ranking every
+    * per-query top-k uses (the cosine paths here and
+    * [[graft.spatial.SpatialOps.knn]]). A salted local top-k (partitioned
+    * by `(query_id, pmod(saltKey, 64))`) bounds every sort to its group's
+    * rows, then the global rank orders only ≤ 64·k survivors per query.
+    * EXACT: any row in a query's true global top-k has < k rows above it
+    * in its own salt group, so it survives phase 1; both phases share
+    * `order` (which must end in a unique tie-break), so output rows and
+    * `rn` values equal the single-window form. The single window —
+    * partitionBy(query_id) alone — caps parallelism at the query count and
+    * fully sorts each query's candidate set in ONE task (3M rows per task
+    * on the 3M-corpus scaling fixture: N→4N efficiency 0.64); two-phase
+    * restores parallelism queries × salts and O(rows) total work. Returns
+    * `scored`'s columns plus the global rank `rn` (1..k). */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int, order: Seq[Column],
+                                  saltKey: Column): DataFrame = {
+    val wLocal = Window.partitionBy(col("query_id"), pmod(saltKey, lit(TopKSalts)))
+      .orderBy(order: _*)
     val local = scored.withColumn("rn", row_number().over(wLocal))
       .filter(col("rn") <= k).drop("rn")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
+    val w = Window.partitionBy(col("query_id")).orderBy(order: _*)
     local.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cos", "rn")
   }
+
+  /** [[topKPerQuery]] by cosine (desc, `vec_id` tie-break), salted on
+    * `vec_id`. */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    topKPerQuery(scored, k, Seq(col("cos").desc, col("vec_id")), col("vec_id"))
+      .select("query_id", "vec_id", "cos", "rn")
 
   /** Brute-force cosine top-k: queries × corpus, exact. The corpus side
     * streams; the query side broadcasts. O(Q·N) — the ground-truth baseline
@@ -77,7 +88,7 @@ object Similarity {
     val q = queries.select(col("query_id"), col("embedding").as("q_emb"))
     val scored = corpus.crossJoin(broadcast(q))
       .withColumn("cos", cosine(col("embedding"), col("q_emb")))
-    topKPerQuery(scored, k)
+    cosineTopK(scored, k)
   }
 
   /** recall@k of an approximate result against exact `truth` — both shaped
@@ -127,7 +138,7 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               dim: Int, bits: Int = 12, probes: Int = 4,
               seed: Long = 42L): DataFrame =
-    topKPerQuery(lshJoined(corpus, queries, dim, bits, probes, seed)
+    cosineTopK(lshJoined(corpus, queries, dim, bits, probes, seed)
       .withColumn("cos", cosine(col("embedding"), col("q_emb"))), k)
 
   /** The candidate join [[lshTopK]] re-ranks — one row per (query, corpus
@@ -226,7 +237,7 @@ object Similarity {
     * queries broadcast; no training job runs. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               cents: Array[Array[Double]], nProbe: Int): DataFrame =
-    topKPerQuery(ivfJoined(corpus, queries, cents, nProbe)
+    cosineTopK(ivfJoined(corpus, queries, cents, nProbe)
       .withColumn("cos", cosine(col("embedding"), col("q_emb"))), k)
 
   /** The candidate join [[ivfTopK]] re-ranks — one row per (query, corpus

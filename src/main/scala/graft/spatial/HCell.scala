@@ -7,18 +7,18 @@ package graft.spatial
   * `(hilbertPos << 5) | level`, so level/parent/range machinery carries
   * over unchanged — the Hilbert prefix property (a child's position at a
   * finer level has its parent's position as a 2-bits-per-level prefix,
-  * HilbertSpec pins it) is exactly what makes `parent` a shift and a cover
+  * HilbertS2Spec pins it) is exactly what makes `parent` a shift and a cover
   * cell a contiguous `[d << s, (d+1) << s)` value range of descendants.
   *
-  * Purpose: the fine SORT column of a clustered layout
-  * ([[SpatialLayout.materialize]] `curve = "hilbert"`). A bbox covers the
-  * same cell SET on both curves (geometry is shared), but merging those
-  * cells into value ranges fragments differently — Hilbert's
-  * edge-adjacency yields fewer, longer runs (BASELINE.md round 5,
-  * "Space-filling-curve comparison"), i.e. a smaller pushed Or-of-ranges
-  * filter for equal prune precision. Grid/cover arithmetic is DELEGATED to
-  * ZCell (decode its cover cells to (x, y), re-address through the curve)
-  * so the two encoders cannot drift.
+  * Purpose: the fine SORT column of [[SpatialLayout]], the one curve its
+  * layouts are written with ([[SpatialLayout.materialize]]). A bbox covers
+  * the same cell SET on either curve (geometry is shared), but merging
+  * those cells into value ranges fragments differently — Hilbert's
+  * edge-adjacency yields fewer, longer runs (1.89–1.97× fewer than the Z
+  * curve on every box, BASELINE.md "Space-filling-curve comparison"), i.e.
+  * a smaller pushed Or-of-ranges filter for equal prune precision.
+  * Grid/cover arithmetic is DELEGATED to ZCell (decode its cover cells to
+  * (x, y), re-address through the curve) so the two encoders cannot drift.
   */
 object HCell {
   val MaxLevel: Int = ZCell.MaxLevel
@@ -41,14 +41,19 @@ object HCell {
     ((pos(cell) >>> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
   }
 
-  /** Sorted, disjoint `[lo, hi)` ranges of `fine`-level CELL VALUES covering
-    * the bbox — the Hilbert analog of [[ZCell.coverRanges]], with the same
-    * budget rule (cover taken at the finest level whose CELL COUNT stays ≤
-    * `maxCells`, so both curves prune with identical precision and the
-    * comparison isolates range fragmentation) and the same superset
-    * guarantee: the cover SET comes from [[ZCell.coverBBox]] (shared grid
-    * arithmetic, antimeridian wrap included), each cover cell re-addressed
-    * to the contiguous value range of its fine-level Hilbert descendants. */
+  /** Sorted, disjoint `[lo, hi)` ranges of `fine`-level CELL VALUES
+    * (`(pos << 5) | fine`) covering the bbox: the cover is taken at the
+    * finest level whose cell count stays ≤ `maxCells`, each cover cell is
+    * expanded to the value range of its `fine`-level descendants (the
+    * prefix property makes the range contiguous), and adjacent ranges are
+    * coalesced.
+    *
+    * SUPERSET GUARANTEE: the cover SET comes from [[ZCell.coverBBox]]
+    * (shared grid arithmetic, antimeridian wrap included); a point inside
+    * the bbox [[encode]]s (same monotone floor/clamp arithmetic) to a fine
+    * cell whose ancestor is in the cover, hence whose value lies in one of
+    * the ranges — so `zcell ∈ ranges` is a sound prefilter for the exact
+    * bbox predicate. */
   def coverRanges(latMin: Double, latMax: Double, lonMin: Double,
                   lonMax: Double, fine: Int, maxCells: Int): Seq[(Long, Long)] = {
     require(fine >= 0 && fine <= MaxLevel && maxCells >= 1)

@@ -12,8 +12,10 @@ package graft.spatial
   * cells (no Z-curve "seams" that jump across the grid), so a rectangle
   * covers as FEWER contiguous position ranges. At 100 TB that is a smaller
   * Or-of-ranges filter tree for the same prune precision, or a finer cover
-  * level for the same tree size (measured: BASELINE.md round 5,
-  * "Space-filling-curve comparison").
+  * level for the same tree size. That measurement (BASELINE.md,
+  * "Space-filling-curve comparison") made Hilbert the only fine sort curve
+  * of [[SpatialLayout]]; Z cells remain the join, density and directory
+  * addresses.
   *
   * The state machine is the standard public construction (Wikipedia
   * "Hilbert curve", xy2d/d2xy; same shape as s2geometry's lookup tables).
@@ -23,7 +25,7 @@ package graft.spatial
   * scalar code, pure bit-arithmetic Columns in Spark (codegen-friendly,
   * also emittable as the DuckDB oracle SQL). Transition tables were derived
   * from the loop formulation and verified exhaustively against it
-  * (HilbertSpec does the same in-tree).
+  * (HilbertS2Spec does the same in-tree).
   *
   * Packing: for state σ ∈ [0,4) and input q ∈ [0,4), field index
   * `σ·4 + q`, value at bits `[2·idx, 2·idx+2)`.

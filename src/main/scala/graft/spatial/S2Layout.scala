@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.MetadataBuilder
   * spherical-CAP queries ("everything within r meters of a point") pruned
   * through both layers before the exact haversine refine.
   *
-  * Same three-layer composition as the Z layout, every prune a provable
+  * Same three-layer composition as the bbox layout, every prune a provable
   * superset of the cap ([[S2Cell.coverCap]] scaladoc — triangle
   * inequality):
   *
@@ -72,12 +72,17 @@ object S2Layout {
     })
   }
 
+  /** Cover-range budget of one cap (the cover level coarsens above it). */
+  private val CapMaxRanges = 128
+
   /** Cap filter over a layout written by [[materialize]]: directory
-    * pruning + pushed scell ranges + exact haversine. Metadata-less
-    * tables get the exact predicate alone — same rows, no pruning. */
+    * pruning + pushed scell ranges + exact haversine. The cap cover keeps
+    * at most [[CapMaxRanges]] cells, and directory pruning is skipped when
+    * the coarse cover exceeds [[SpatialLayout.MaxPartitionList]] cells (the
+    * ranges still prune). Metadata-less tables get the exact predicate
+    * alone — same rows, no pruning. */
   def capFilter(layout: DataFrame, lat: Double, lon: Double,
-                radiusMeters: Double, maxRanges: Int = 128,
-                maxPartitionList: Int = 1024): DataFrame = {
+                radiusMeters: Double): DataFrame = {
     require(radiusMeters >= 0)
     val exact = SpatialOps.haversineMeters(col("lat"), col("lon"),
       lit(lat), lit(lon)) <= radiusMeters
@@ -89,7 +94,7 @@ object S2Layout {
       case Some(f) =>
         val fine = f.metadata.getLong(MetaFine).toInt
         val coarse = f.metadata.getLong(MetaCoarse).toInt
-        val ranges = capRanges(lat, lon, radiusMeters, fine, maxRanges)
+        val ranges = capRanges(lat, lon, radiusMeters, fine, CapMaxRanges)
         // the cap cover may stop ABOVE `coarse` under its cell budget;
         // those coarser values would never equal the stored level-`coarse`
         // pcell values (level rides in the low bits), so expand to exactly
@@ -100,12 +105,12 @@ object S2Layout {
         // pruneScan's cap: it would only discard the list anyway, and a
         // large-radius cap over a deep coarse level otherwise materializes
         // millions of cells on the driver before that happens
-        while (pl < coarse && pCover.size <= maxPartitionList) {
+        while (pl < coarse && pCover.size <= SpatialLayout.MaxPartitionList) {
           pCover = pCover.flatMap(S2Cell.children); pl += 1
         }
         val cover = if (pl < coarse) Seq.empty[Long] else pCover // over cap: skip dir pruning
-        SpatialLayout.pruneScan(layout, SortCol, PartCol, ranges, cover,
-          maxPartitionList).filter(exact)
+        SpatialLayout.pruneScan(layout, SortCol, PartCol, ranges, cover)
+          .filter(exact)
     }
   }
 }

@@ -2,9 +2,9 @@ package graft.spatial
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.types.{MetadataBuilder, StructField}
 
-/** Z-order-clustered storage layout for point tables — the scan-pruning leg
+/** Hilbert-clustered storage layout for point tables — the scan-pruning leg
   * of the tiling engine (north rule: "partitioning handled explicitly" at
   * 10^12 documents). The hot-tag projection solved the TAG half of scan
   * pruning (pushed `t_<key>` predicates, 11.8× at 24M rows); this solves
@@ -13,49 +13,58 @@ import org.apache.spark.sql.types.MetadataBuilder
   * of every row group cover the whole planet.
   *
   * Layout (the Iceberg/Delta "Z-ORDER BY" idea, re-built on plain
-  * hive-partitioned parquet):
+  * hive-partitioned parquet with a Hilbert sort key):
   *
   *  - `pcell` — coarse Z cell (default level 4, ≤256 dirs) as the PARTITION
   *    directory column → a bbox prunes whole directories from the file
-  *    listing before any I/O.
-  *  - `zcell` — fine Z cell (default level 16, ~600 m) as a stored column,
-  *    with rows RANGE-partitioned and sorted by it → every parquet row
-  *    group holds one tight Z-interval, so its zcell min/max statistics
-  *    skip it unless the bbox's Z-ranges intersect.
+  *    listing before any I/O. Directory pruning is set membership on grid
+  *    cells, which curve locality does not reach, so it stays Z-addressed.
+  *  - `zcell` — fine Hilbert cell ([[HCell]], default level 16, ~600 m) as
+  *    a stored column, with rows RANGE-partitioned and sorted by it → every
+  *    parquet row group holds one tight curve interval, so its zcell
+  *    min/max statistics skip it unless the bbox's cover ranges intersect.
+  *
+  * Hilbert is the only fine sort curve: it covers the same cells as the Z
+  * curve in ~2× fewer value ranges (edge-adjacency, see [[HilbertCurve]]),
+  * i.e. a smaller pushed filter tree at equal prune precision, and scanned
+  * faster at every box size (BASELINE.md, "Space-filling-curve comparison",
+  * 24M points).
   *
   * Skew: dense-urban coarse cells are NOT one writer task each —
   * `repartitionByRange(zcell)` samples the data and splits a hot cell
-  * across as many contiguous Z-slices as its row share demands (a salted
-  * repartition would balance too, but destroys the clustering the row-group
-  * statistics need; range partitioning is the skew tool that KEEPS order).
+  * across as many contiguous curve slices as its row share demands (a
+  * salted repartition would balance too, but destroys the clustering the
+  * row-group statistics need; range partitioning is the skew tool that
+  * KEEPS order).
   *
   * [[bboxFilter]] then composes three prune layers under the exact
   * predicate: directory pruning (`pcell ∈ coarse cover`) + row-group
   * skipping (`zcell ∈ merged cover ranges`, pushed to the parquet scan as
   * an Or-of-range filter) + the exact lat/lon test. Both prune predicates
-  * are provable supersets of the bbox (ZCell.coverRanges scaladoc), so
+  * are provable supersets of the bbox ([[HCell.coverRanges]] scaladoc), so
   * results equal a full-scan filter bit-for-bit; pruning is pure I/O
-  * savings. The grid levels ride in `zcell`'s column METADATA (persisted in
-  * the parquet footer, like HotTags' `graft_hot_key`), so readers need no
-  * side file and a non-layout table degrades to the plain scan.
-  *
-  * The fine sort curve is selectable (`curve = "z" | "hilbert"`, recorded
-  * in metadata and honored by both readers): Hilbert addressing covers the
-  * SAME cell set with fewer contiguous value ranges (edge-adjacency — see
-  * [[HilbertCurve]]), i.e. a smaller pushed filter tree at equal prune
-  * precision. Measured (BASELINE.md round 5, "Space-filling-curve
-  * comparison", 24M pts): ~2× fewer ranges at
-  * every box size, 10-26% faster scans — `"hilbert"` is the recommended
-  * curve for NEW layouts; the default stays `"z"` so existing layouts
-  * (which carry no curve metadata) keep reading identically.
+  * savings. The grid levels and the curve ride in `zcell`'s column
+  * METADATA (persisted in the parquet footer, like HotTags'
+  * `graft_hot_key`), so readers need no side file. A table without that
+  * metadata — a plain table, or a Z-sorted layout written before Hilbert
+  * became the only curve (no `hilbert` value under [[MetaCurve]]) — gets
+  * the exact predicate alone: same rows, no pruning.
   */
 object SpatialLayout {
-  private def curveOf(m: org.apache.spark.sql.types.Metadata): String =
-    if (m.contains(MetaCurve)) m.getString(MetaCurve) else "z"
+  /** Cover-range budget of one [[bboxFilter]] box (the cover level
+    * auto-coarsens above it: more false-positive row groups, smaller
+    * filter tree). */
+  private val BBoxMaxRanges = 128
+  /** TOTAL cover-range budget of a [[polygonJoin]], split across its
+    * polygons. */
+  private val PolygonMaxRanges = 64
+  /** Cap on the directory-pruning IN-list: a near-global cover skips it
+    * (the sort-column ranges still prune). */
+  private[spatial] val MaxPartitionList = 1024
 
   /** The shared two-layer scan prune every clustered layout reads through
-    * (Z bbox, Hilbert bbox, S2 cap): partition-directory IN-list (skipped
-    * past `maxPartitionList` — the ranges still prune) + Or-of-ranges
+    * (Hilbert bbox, S2 cap): partition-directory IN-list (skipped past
+    * [[MaxPartitionList]] — the ranges still prune) + Or-of-ranges
     * predicate on the sort column (pushed to the scan as row-group
     * skipping). ONE definition so the semantics — including the
     * empty-cover ⇒ `lit(false)` guard that once lived only in polygonJoin
@@ -63,8 +72,7 @@ object SpatialLayout {
     * predicate/join on the result. */
   private[spatial] def pruneScan(layout: DataFrame, sortCol: String,
                                  partCol: String, ranges: Seq[(Long, Long)],
-                                 pCover: Seq[Long],
-                                 maxPartitionList: Int): DataFrame = {
+                                 pCover: Seq[Long]): DataFrame = {
     val sPred =
       if (ranges.isEmpty) lit(false) // empty cover ⇒ empty result
       else ranges
@@ -72,7 +80,7 @@ object SpatialLayout {
         .reduce(_ or _)
     val pruned =
       if (layout.columns.contains(partCol) && pCover.nonEmpty &&
-        pCover.size <= maxPartitionList)
+        pCover.size <= MaxPartitionList)
         layout.filter(col(partCol).isin(pCover: _*))
       else layout
     pruned.filter(sPred)
@@ -85,38 +93,41 @@ object SpatialLayout {
   /** Column-metadata keys carrying the two grid levels on [[SortCol]]. */
   val MetaCoarse = "graft_zcell_coarse_level"
   val MetaFine = "graft_zcell_fine_level"
-  /** Column-metadata key naming the fine sort curve (`"z"` | `"hilbert"`);
-    * absent on pre-curve layouts → `"z"` (backward compatible). */
+  /** Column-metadata key naming the fine sort curve. [[materialize]] writes
+    * `"hilbert"`; readers prune only a column that carries it. */
   val MetaCurve = "graft_zcell_curve"
+  private val Hilbert = "hilbert"
+
+  /** [[SortCol]]'s field when `layout` is a Hilbert layout written by
+    * [[materialize]]; None otherwise (the reader falls back to the exact
+    * predicate — Hilbert ranges must never prune a Z-sorted column). */
+  private def hilbertSortField(layout: DataFrame): Option[StructField] =
+    layout.schema.fields.find { f =>
+      val m = f.metadata
+      f.name == SortCol && m.contains(MetaFine) && m.contains(MetaCoarse) &&
+        m.contains(MetaCurve) && m.getString(MetaCurve) == Hilbert
+    }
 
   /** Write `points` (needs `lat`/`lon` columns; all other columns ride
-    * along) as a Z-clustered layout at `path`. Rows with null coordinates
-    * land in the null partition directory and match no bbox.
+    * along) as a Hilbert-clustered layout at `path`. Rows with null
+    * coordinates land in the null partition directory and match no bbox.
     *
     * `numFiles` bounds the range-partition count — size it so one file's
     * row groups fit executor memory at the target scale (at 100 TB this is
     * thousands; the LAYOUT is identical, only the sample-based range
     * boundaries move). */
   def materialize(points: DataFrame, path: String, coarseLevel: Int = 4,
-                  fineLevel: Int = 16, numFiles: Int = 32,
-                  curve: String = "z"): Unit = {
+                  fineLevel: Int = 16, numFiles: Int = 32): Unit = {
     require(coarseLevel >= 0 && coarseLevel <= fineLevel &&
       fineLevel <= ZCell.MaxLevel,
       s"need 0 <= coarse($coarseLevel) <= fine($fineLevel) <= ${ZCell.MaxLevel}")
-    require(curve == "z" || curve == "hilbert", s"unknown curve '$curve'")
     val meta = new MetadataBuilder()
       .putLong(MetaCoarse, coarseLevel.toLong)
       .putLong(MetaFine, fineLevel.toLong)
-      .putString(MetaCurve, curve).build()
-    // the fine SORT column follows the chosen curve; the coarse PARTITION
-    // directory cell stays Z-addressed either way — directory pruning is
-    // set membership on grid cells (curve locality doesn't reach it), and
-    // a shared pcell addressing keeps the two layouts dir-compatible
-    val z =
-      if (curve == "hilbert") SpatialOps.hilbertCellId(col("lat"), col("lon"), fineLevel)
-      else SpatialOps.cellId(col("lat"), col("lon"), fineLevel)
+      .putString(MetaCurve, Hilbert).build()
     points
-      .select(col("*"), z.as(SortCol, meta),
+      .select(col("*"),
+        SpatialOps.hilbertCellId(col("lat"), col("lon"), fineLevel).as(SortCol, meta),
         SpatialOps.cellId(col("lat"), col("lon"), coarseLevel).as(PartCol))
       .repartitionByRange(numFiles, col(SortCol))
       .sortWithinPartitions(SortCol)
@@ -125,60 +136,45 @@ object SpatialLayout {
 
   /** Inclusive bbox filter over a layout written by [[materialize]]:
     * directory pruning + row-group skipping + exact predicate. Boxes with
-    * `lonMin > lonMax` wrap the antimeridian. A table without the layout
-    * metadata (or without [[SortCol]]) gets the exact predicate alone —
-    * same rows, no pruning.
-    *
-    * `maxRanges` caps the Z-range count (cover level auto-coarsens above
-    * it — more false-positive row groups, smaller filter tree);
-    * `maxPartitionList` caps the directory-pruning IN-list (a near-global
-    * box skips it — the zcell ranges still prune). */
+    * `lonMin > lonMax` wrap the antimeridian. A table that is not a
+    * Hilbert layout gets the exact predicate alone — same rows, no
+    * pruning. */
   def bboxFilter(layout: DataFrame, latMin: Double, latMax: Double,
-                 lonMin: Double, lonMax: Double, maxRanges: Int = 128,
-                 maxPartitionList: Int = 1024): DataFrame = {
+                 lonMin: Double, lonMax: Double): DataFrame = {
     require(latMin <= latMax, s"latMin $latMin > latMax $latMax")
     val lonPred =
       if (lonMin <= lonMax) col("lon") >= lonMin && col("lon") <= lonMax
       else col("lon") >= lonMin || col("lon") <= lonMax // antimeridian wrap
     val exact = col("lat") >= latMin && col("lat") <= latMax && lonPred
 
-    val zField = layout.schema.fields.find(f =>
-      f.name == SortCol && f.metadata.contains(MetaFine) &&
-        f.metadata.contains(MetaCoarse))
-    zField match {
+    hilbertSortField(layout) match {
       case None => layout.filter(exact)
       case Some(f) =>
         val fine = f.metadata.getLong(MetaFine).toInt
         val coarse = f.metadata.getLong(MetaCoarse).toInt
         val ranges =
-          if (curveOf(f.metadata) == "hilbert")
-            HCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, maxRanges)
-          else ZCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, maxRanges)
+          HCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, BBoxMaxRanges)
         val pCover = ZCell.coverBBox(latMin, latMax, lonMin, lonMax, coarse)
-        pruneScan(layout, SortCol, PartCol, ranges, pCover, maxPartitionList)
-          .filter(exact)
+        pruneScan(layout, SortCol, PartCol, ranges, pCover).filter(exact)
     }
   }
 
-  /** Spatial join over a Z layout: the scan is prefiltered to the union of
-    * the polygons' outer-ring-bbox cover ranges (directory pruning + pushed
-    * zcell ranges), then [[SpatialOps.polygonJoin]] runs its cover-prejoin
-    * + exact-refine on the survivors. Every polygon point lies inside its
-    * outer-ring bbox, so the prefilter is a superset and results equal the
-    * unpruned join — but a continental points table joined against city
-    * polygons reads only the cities' storage, not the continent's. The
-    * polygon side is driver-collected (broadcast-small by the same contract
-    * as SpatialOps.polygonJoin); like that join, antimeridian-SPANNING
-    * polygon rings are out of contract (boxes use plain lon min/max). A
-    * non-layout table falls through to the plain join. Internal layout
-    * columns are dropped from the output. */
-  def polygonJoin(layout: DataFrame, polygons: DataFrame, level: Int = 14,
-                  maxRanges: Int = 64,
-                  maxPartitionList: Int = 1024): DataFrame = {
-    val zField = layout.schema.fields.find(f =>
-      f.name == SortCol && f.metadata.contains(MetaFine) &&
-        f.metadata.contains(MetaCoarse))
-    zField match {
+  /** Spatial join over a Hilbert layout: the scan is prefiltered to the
+    * union of the polygons' outer-ring-bbox cover ranges (directory pruning
+    * + pushed zcell ranges), then [[SpatialOps.polygonJoin]] runs its
+    * cover-prejoin + exact-refine on the survivors. Every polygon point
+    * lies inside its outer-ring bbox, so the prefilter is a superset and
+    * results equal the unpruned join — but a continental points table
+    * joined against city polygons reads only the cities' storage, not the
+    * continent's. The polygon side is driver-collected (broadcast-small by
+    * the same contract as SpatialOps.polygonJoin); like that join,
+    * antimeridian-SPANNING polygon rings are out of contract (boxes use
+    * plain lon min/max). A table that is not a Hilbert layout falls through
+    * to the plain join. The layout columns [[SortCol]] and [[PartCol]] are
+    * dropped from the output on both paths, so a Z-sorted layout written
+    * earlier yields the same columns as a Hilbert one. */
+  def polygonJoin(layout: DataFrame, polygons: DataFrame, level: Int = 14): DataFrame =
+    (hilbertSortField(layout) match {
       case None => SpatialOps.polygonJoin(layout, polygons, level)
       case Some(f) =>
         val fine = f.metadata.getLong(MetaFine).toInt
@@ -191,26 +187,19 @@ object SpatialLayout {
           array_max(transform(outer, p => p.getField("lon"))))
           .collect()
           .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-        // maxRanges is a TOTAL budget split across the polygons: a per-box
+        // the range budget is a TOTAL split across the polygons: a per-box
         // budget multiplied by the polygon count once produced a ~4000-term
         // Or tree whose per-row evaluation in the residual Filter cost 14×
         // the scan it was saving
-        val perBox = math.max(1, maxRanges / math.max(1, boxes.length))
-        val cover: (Double, Double, Double, Double) => Seq[(Long, Long)] =
-          if (curveOf(f.metadata) == "hilbert")
-            HCell.coverRanges(_, _, _, _, fine, perBox)
-          else ZCell.coverRanges(_, _, _, _, fine, perBox)
+        val perBox = math.max(1, PolygonMaxRanges / math.max(1, boxes.length))
         val ranges = ZCell.mergeRanges(boxes.toSeq.flatMap {
           case (latMin, latMax, lonMin, lonMax) =>
-            cover(latMin, latMax, lonMin, lonMax)
+            HCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, perBox)
         })
         val pCells = boxes.toSeq.flatMap { case (latMin, latMax, lonMin, lonMax) =>
           ZCell.coverBBox(latMin, latMax, lonMin, lonMax, coarse)
         }.distinct
         SpatialOps.polygonJoin(
-          pruneScan(layout, SortCol, PartCol, ranges, pCells, maxPartitionList),
-          polygons, level)
-          .drop(SortCol, PartCol)
-    }
-  }
+          pruneScan(layout, SortCol, PartCol, ranges, pCells), polygons, level)
+    }).drop(SortCol, PartCol)
 }

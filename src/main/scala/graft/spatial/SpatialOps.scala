@@ -1,8 +1,8 @@
 package graft.spatial
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Similarity
 
 /** Spark-first spatial operators (north rule; the reference has no spatial
   * code — SURVEY.md §2.6): batched cell encoding, point-in-polygon, spatial
@@ -113,28 +113,33 @@ object SpatialOps {
       .groupBy("cell").agg(count(lit(1)).as("n"))
   }
 
+  /** Cover-cell budget of one [[s2RadiusJoin]] query cap. */
+  private val MaxCellsPerQuery = 256
+
   /** Radius (spherical-cap) join on the S2 grid: every (query, point) pair
     * within `radiusMeters` great-circle distance. Queries
     * (`query_id`, `lat`, `lon`) are driver-collected (broadcast-small, the
     * [[polygonJoin]] contract); each cap covers via
     * [[S2Cell.coverCap]] (provable superset, conservative
-    * circumradius descent). Covers keep their OWN achieved level (round 6 —
-    * normalizing to the batch's coarsest level let one polar/large-radius
-    * query degrade join-key selectivity for every other query): points are
+    * circumradius descent) with at most [[MaxCellsPerQuery]] cells,
+    * coarsening its level until it fits. Covers keep their OWN achieved
+    * level (round 6 — normalizing to the batch's coarsest level let one
+    * polar/large-radius query degrade join-key selectivity for every other
+    * query): points are
     * encoded once at the finest present level, parent-shifted to each
     * present level, and the broadcast (query_id, level, cell) list
     * equi-joins on (level, cell); exact haversine refines. No cross
     * product at any scale: candidate volume is each query's cover cells ×
     * cell occupancy, not |queries| × |points|. */
   def s2RadiusJoin(points: DataFrame, queries: DataFrame, radiusMeters: Double,
-                   level: Int = 10, maxCellsPerQuery: Int = 256): DataFrame = {
+                   level: Int = 10): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     val qs = queries.select(col("query_id").cast("long"),
         col("lat").cast("double"), col("lon").cast("double")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val covers = qs.map { case (id, la, lo) =>
-      (id, S2Cell.coverCap(la, lo, radiusMeters, level, maxCellsPerQuery))
+      (id, S2Cell.coverCap(la, lo, radiusMeters, level, MaxCellsPerQuery))
     }
     // PER-LEVEL join keys (round 6): covers keep their own achieved level
     // instead of all normalizing to the globally coarsest one — one
@@ -340,12 +345,14 @@ object SpatialOps {
   }
 
   /** k nearest points for each query row (query_id, lat, lon): ring-expanded
-    * candidate cells (broadcast query side) + exact re-rank with a per-query
-    * window top-k. EXACTNESS GUARANTEE: a query's ring result is kept only
-    * when its kth candidate distance is ≤ a LOWER BOUND on the distance to
-    * the uncovered region's boundary (≥ k candidates alone does NOT imply
-    * the true k nearest are inside the rings). Queries the first pass cannot
-    * certify retry with the ring radius doubled, up to `widenSteps` times —
+    * candidate cells (broadcast query side) + exact re-rank with the shared
+    * two-phase per-query top-k ([[graft.ops.Similarity.topKPerQuery]],
+    * ordered by (distance, `tieBreak`), salted on `hash(tieBreak)`).
+    * EXACTNESS GUARANTEE: a query's ring result is kept only when its kth
+    * candidate distance is ≤ a LOWER BOUND on the distance to the uncovered
+    * region's boundary (≥ k candidates alone does NOT imply the true k
+    * nearest are inside the rings). Queries the first pass cannot certify
+    * retry with the ring radius widened ×4, up to `widenSteps` times —
     * each retry is another cell-join over a SHRINKING query set, so a skewed
     * query batch never forces a full-corpus cross join just because a few
     * queries sit in sparse regions; only queries still uncertified after the
@@ -356,37 +363,18 @@ object SpatialOps {
   def knn(points: DataFrame, queries: DataFrame, k: Int,
           level: Int = 10, maxRing: Int = 2,
           metric: SpatialMetric = HaversineMetric,
-          tieBreak: String = "doc_id", widenSteps: Int = 2,
-          rankSalts: Int = 64): DataFrame = {
+          tieBreak: String = "doc_id", widenSteps: Int = 2): DataFrame = {
     val pCells = points.withColumn("cell", cellId(col("lat"), col("lon"), level))
     val dist = metric.dist(col("qlat"), col("qlon"), col("lat"), col("lon"))
 
-    // Exact top-k per query in two phases (the Similarity.topKPerQuery
-    // shape): a salted local rank bounds every sort to its salt group, then
-    // the global rank orders ≤ rankSalts·k survivors per query. EXACT: a
-    // row in the true global top-k has < k rows above it in its own salt
-    // group, so it survives phase 1; both phases share the
-    // (dist_m, tieBreak) order. The single-window form (rankSalts = 1) —
-    // partitionBy(query_id) alone — fully sorts each query's candidate set
-    // in ONE task: that is the parallelism cap that cost brute top-k 0.36
-    // efficiency at scale, and the brute fallback below scans the whole
-    // corpus per query, where it matters most (ScalingBench ops `knn` row:
-    // 0.94 efficiency at 1×2→4×2 with the two-phase rank).
-    def rankTopK(scored: DataFrame): DataFrame = {
-      val wGlobal = Window.partitionBy(col("query_id"))
-        .orderBy(col("dist_m"), col(tieBreak))
-      val local =
-        if (rankSalts <= 1) scored
-        else {
-          val wLocal = Window
-            .partitionBy(col("query_id"), pmod(hash(col(tieBreak)), lit(rankSalts)))
-            .orderBy(col("dist_m"), col(tieBreak))
-          scored.withColumn("rn", row_number().over(wLocal))
-            .filter(col("rn") <= k).drop("rn")
-        }
-      local.withColumn("rn", row_number().over(wGlobal))
-        .filter(col("rn") <= k).drop("rn")
-    }
+    // exact per-query top-k in two phases (Similarity.topKPerQuery): the
+    // salted first window bounds every sort to one (query, salt) group, so
+    // the brute fallback below, which scans the whole corpus per query,
+    // keeps its parallelism (ScalingBench ops `knn` row: 0.94 efficiency
+    // at 1×2→4×2)
+    def rankTopK(scored: DataFrame): DataFrame =
+      Similarity.topKPerQuery(scored, k, Seq(col("dist_m"), col(tieBreak)),
+        hash(col(tieBreak))).drop("rn")
 
     /** One ring pass: (certified top-k, uncertified queries). The ranked
       * top-k is localCheckpoint'ed (≤ queries·k rows): both its consumers —

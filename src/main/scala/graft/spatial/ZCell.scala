@@ -14,6 +14,13 @@ package graft.spatial
   * bits (y-bit above x-bit per step, quadkey convention). x grows east from
   * lon=-180, y grows south from lat=+90.
   *
+  * ZCell owns the grid arithmetic (encode, bbox cover, cover count) that
+  * [[HCell]] re-addresses along the Hilbert curve. Z addresses serve the
+  * cell joins, densities, kNN rings and the coarse partition directories of
+  * [[SpatialLayout]]; the layout's fine SORT column is Hilbert-addressed,
+  * because the Z curve's seams split a box cover into ~2× more value ranges
+  * (BASELINE.md, "Space-filling-curve comparison").
+  *
   * The reference engine has no cell index (its bbox/geometry filtering is
   * implied capability only — SURVEY.md §2.6); this is new Spark-first work.
   */
@@ -147,31 +154,6 @@ object ZCell {
       else if (xLo <= xHi + 1) n.toLong
       else (n.toLong - xLo) + (xHi + 1L)
     (yHi - yLo + 1L) * xs
-  }
-
-  /** Sorted, disjoint `[lo, hi)` ranges of `fine`-level CELL VALUES
-    * (`(morton << 5) | fine`) covering the bbox: the cover is taken at the
-    * finest level whose cell count stays ≤ `maxCells`, each cover cell is
-    * expanded to the value range of its `fine`-level descendants (children
-    * share the morton prefix, so the range is contiguous), and adjacent
-    * ranges are coalesced.
-    *
-    * SUPERSET GUARANTEE: a point inside the bbox [[encode]]s (same monotone
-    * floor/clamp arithmetic) to a fine cell whose ancestor is in the cover,
-    * hence whose value lies in one of the ranges — so `zcell ∈ ranges` is a
-    * sound prefilter for the exact bbox predicate. Antimeridian boxes
-    * (lonMin > lonMax) wrap like [[coverBBox]]. */
-  def coverRanges(latMin: Double, latMax: Double, lonMin: Double,
-                  lonMax: Double, fine: Int, maxCells: Int): Seq[(Long, Long)] = {
-    require(fine >= 0 && fine <= MaxLevel && maxCells >= 1)
-    var l = fine
-    while (l > 0 && coverCount(latMin, latMax, lonMin, lonMax, l) > maxCells) l -= 1
-    val shift = 2 * (fine - l) + 5
-    mergeRanges(coverBBox(latMin, latMax, lonMin, lonMax, l)
-      .map { c =>
-        val m = morton(c)
-        ((m << shift) | fine.toLong, ((m + 1L) << shift) | fine.toLong)
-      })
   }
 
   /** Sort + coalesce overlapping/adjacent `[lo, hi)` ranges. */

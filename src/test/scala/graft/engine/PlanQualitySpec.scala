@@ -2,7 +2,9 @@ package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayFilter, Attribute}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
@@ -204,7 +206,8 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(decodeMasks(branch) === Seq("Project" -> Set(FId, FVersion)), branch)
   }
 
-  test("materializeView writes its view through one decode") {
+  /** The optimized plan of [[FilterEngine.materializeView]]'s write. */
+  private def materializeViewWritePlan(): LogicalPlan = {
     val written = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -218,8 +221,21 @@ class PlanQualitySpec extends AnyFunSuite {
       FilterEngine.materializeView(spark.read.parquet(docsPath), dir)
       val p = written.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       assert(p != null, "no write plan seen")
-      assert(decodeMasks(p).map(_._2) === Seq(Set(AllFields & ~FType)), p)
+      p
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("materializeView writes its view through one decode") {
+    val p = materializeViewWritePlan()
+    assert(decodeMasks(p).map(_._2) === Seq(Set(AllFields & ~FType)), p)
+  }
+
+  test("materializeView builds its hot columns with the codegen'd tag lookup") {
+    val p = materializeViewWritePlan()
+    val exprs = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[TagLookup]) === 10, p)
+    assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), s"ArrayFilter in:\n$p")
+    assert(!exprs.exists(_.isInstanceOf[CodegenFallback]), s"CodegenFallback in:\n$p")
   }
 
   test("a bare t_highway column without hot-key metadata is not pushed") {
@@ -248,6 +264,30 @@ class PlanQualitySpec extends AnyFunSuite {
     val p = plan(SpatialOps.polygonJoin(nodes, polys, level = 13))
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       s"polygon side not broadcast in:\n$p")
+  }
+
+  test("knn ranks through the salted window, then the per-query window") {
+    val nodes = spark.read.parquet(viewPath)
+      .filter(col("type") === "node").select("doc_id", "lat", "lon")
+    val queries = Seq((1L, 48.85, 2.35)).toDF("query_id", "lat", "lon")
+    // k above the node count certifies nothing, so the returned plan holds
+    // the brute fallback's rank (the ring pass's is behind its checkpoint)
+    val windows = SpatialOps.knn(nodes, queries, k = 1000000, widenSteps = 0)
+      .queryExecution.optimizedPlan.collect { case w: Window => w }
+    // a computed partition key is projected below its Window as an alias
+    def keys(w: Window): Seq[String] = {
+      val aliases = w.child.collectFirst { case p: Project =>
+        p.projectList.collect { case a: Alias => a.exprId -> a.child }.toMap
+      }.getOrElse(Map.empty)
+      w.partitionSpec.map {
+        case a: Attribute => aliases.get(a.exprId).fold(a.name)(_.sql)
+        case e => e.sql
+      }
+    }
+    assert(windows.map(keys) === Seq(
+      Seq("query_id"), Seq("query_id", "pmod(hash(doc_id), 64)")), windows)
+    assert(windows.head.child.exists(_ eq windows(1)),
+      "the salted window does not feed the per-query window")
   }
 
   test("complete-ways wanted-ids side is adaptive (AQE decides broadcast at runtime)") {

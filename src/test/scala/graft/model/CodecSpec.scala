@@ -3,14 +3,17 @@ package graft.model
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.col
 import graft.SparkTestSession
+import graft.compile.Compiler
 import graft.exprs.{DecodeOsmSpans, SpanDecode}
+import graft.ofl.Parser
 import graft.fixtures.DeterministicGen
 
 /** Round-trip: OsmElement → spans → OsmView.derive must reproduce every
   * typed field and equal the HOF reference derivation (also on malformed
-  * span arrays), and the docs table must preserve the span-sequence
-  * invariant (kind, text, media_ref, order). */
+  * span arrays, null kinds included), and the docs table must preserve the
+  * span-sequence invariant (kind, text, media_ref, order). */
 class CodecSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -121,7 +124,9 @@ class CodecSpec extends AnyFunSuite {
       1 -> Gen.oneOf("w/12/outer", "n/-3/", "r/0/a/b").map(Span("member", _, null, 0)),
       1 -> Gen.const(Span("media", "", "media://7", 0)),
       1 -> Gen.oneOf("", "t", "ty", "tags", "i", "Id", "versions", "lat ", "x")
-        .map(Span(_, "1", null, 0)))
+        .map(Span(_, "1", null, 0)),
+      // a null kind is no kind: the span is skipped, as in the HOF filter
+      1 -> Gen.oneOf("highway=primary", "1", "w/1/r").map(Span(null, _, null, 0)))
     val spans = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, span))
     val params = Gen.Parameters.default
     val rows = (1L to 300L).map(i =>
@@ -138,6 +143,17 @@ class CodecSpec extends AnyFunSuite {
     view.columns.foreach { c =>
       assertSameRows(view.select("seq", c), hof.select("seq", c), c)
     }
+    // the span-fused tag kernels equal TagLookup/TagExists over the HOF tags
+    val hasKey = Compiler.compileEffective(Parser.parse("highway"))
+    def lookup(v: DataFrame) = v.select(col("seq"), Compiler.tagLookup("highway").as("hw"))
+    def exists(v: DataFrame) = v.filter(hasKey).select("seq")
+    Seq(lookup(view) -> "tag_lookup_spans", exists(view) -> "tag_exists_spans")
+      .foreach { case (fused, kernel) =>
+        assert(fused.queryExecution.optimizedPlan.toString.contains(kernel),
+          fused.queryExecution.optimizedPlan)
+      }
+    assertSameRows(lookup(view), lookup(hof), "fused highway lookup")
+    assertSameRows(exists(view), exists(hof), "fused highway exists")
   }
 
   test("decode expression is codegen-capable (no CodegenFallback)") {

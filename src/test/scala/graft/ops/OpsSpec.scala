@@ -694,8 +694,12 @@ class OpsSpec extends AnyFunSuite {
       assert(m.width === 16 + mid * 7 % 48 && m.height === 16 + mid * 13 % 48,
         s"${m.media_ref}: got ${m.width}x${m.height}")
     }
-    val frames = Multimodal.sampleFrames(media).collect()
-    assert(frames.nonEmpty)
+    // PNG payloads are no frame container: every row takes the stub path
+    val frames = Multimodal.sampleFramesReal(media).collect()
+    assert(frames.nonEmpty && frames.forall(!_.real_decode))
     assert(frames.groupBy(f => (f.doc_id, f.media_ref, f.frame_idx)).forall(_._2.length == 1))
+    assert(frames.sortBy(f => (f.doc_id, f.media_ref, f.frame_idx)).toSeq ===
+      Multimodal.sampleFramesReal(media).collect()
+        .sortBy(f => (f.doc_id, f.media_ref, f.frame_idx)).toSeq, "deterministic sampling")
   }
 }

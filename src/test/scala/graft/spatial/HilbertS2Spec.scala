@@ -131,7 +131,13 @@ class HilbertS2Spec extends AnyFunSuite {
     boxes.foreach { case (latMin, latMax, lonMin, lonMax) =>
       val fine = 14
       val h = HCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, 64)
-      val z = ZCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, 64)
+      // the Z curve's runs over the same budget-level cover: adjacent Morton
+      // codes merge, expanded to fine-level value ranges as HCell does
+      var l = fine
+      while (l > 0 && ZCell.coverCount(latMin, latMax, lonMin, lonMax, l) > 64) l -= 1
+      val shift = 2 * (fine - l) + 5
+      val z = ZCell.mergeRanges(ZCell.coverBBox(latMin, latMax, lonMin, lonMax, l)
+        .map { c => val m = ZCell.morton(c); (m << shift, (m + 1L) << shift) })
       h.sliding(2).foreach {
         case Seq((_, hi1), (lo2, _)) => assert(hi1 < lo2)
         case _ => ()

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.fixtures.DeterministicGen
 
-/** Z-order layout conformance: cover-range math invariants, bbox pruning ==
+/** Hilbert layout conformance: cover-range math invariants, bbox pruning ==
   * full-scan filter on every box shape (wrap, pole, tiny, world), physical
   * plan pins (directory pruning + pushed zcell ranges), metadata round-trip,
-  * skew splitting, and graceful degradation on non-layout tables. */
+  * skew splitting, and graceful degradation on non-layout tables and on
+  * Z-sorted layouts written before Hilbert became the only curve. */
 class SpatialLayoutSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -35,7 +36,23 @@ class SpatialLayoutSpec extends AnyFunSuite {
     (-35.005, -5.005, 170.005, -150.005), // antimeridian wrap
     (-90.0, 90.0, -180.0, 180.0))         // world
 
-  // --- ZCell.coverRanges invariants ---------------------------------------
+  private lazy val polys = DeterministicGen.polygons()
+    .map(p => (p.polygon_id, p.rings.map(_.map { case (la, lo) => (la, lo) })))
+    .toDF("polygon_id", "rings")
+    .withColumn("rings",
+      col("rings").cast("array<array<struct<lat:double,lon:double>>>"))
+
+  /** Sorted ids of the nodes inside the box (exact predicate, full scan). */
+  private def exactIds(latMin: Double, latMax: Double, lonMin: Double,
+                       lonMax: Double): Seq[Long] = {
+    val lonPred =
+      if (lonMin <= lonMax) col("lon") >= lonMin && col("lon") <= lonMax
+      else col("lon") >= lonMin || col("lon") <= lonMax
+    nodesDF.filter(col("lat") >= latMin && col("lat") <= latMax && lonPred)
+      .select("id").as[Long].collect().sorted.toSeq
+  }
+
+  // --- HCell.coverRanges invariants ---------------------------------------
 
   test("coverRanges: sorted, disjoint, bounded, and a superset of the box") {
     val rng = new scala.util.Random(11)
@@ -48,7 +65,7 @@ class SpatialLayoutSpec extends AnyFunSuite {
     }
     allBoxes.foreach { case (latMin, latMax, lonMin, lonMax) =>
       val fine = 14
-      val ranges = ZCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, 64)
+      val ranges = HCell.coverRanges(latMin, latMax, lonMin, lonMax, fine, 64)
       assert(ranges.nonEmpty)
       assert(ranges.size <= 64)
       ranges.sliding(2).foreach {
@@ -63,9 +80,9 @@ class SpatialLayoutSpec extends AnyFunSuite {
                       else 360.0 - lonMin + lonMax
         val loRaw = lonMin + rng.nextDouble() * lonSpan
         val lo = if (loRaw > 180.0) loRaw - 360.0 else loRaw
-        val z = ZCell.encode(la, lo, fine)
-        assert(ranges.exists { case (a, b) => z >= a && z < b },
-          s"point ($la,$lo) zcell $z escaped cover of " +
+        val h = HCell.encode(la, lo, fine)
+        assert(ranges.exists { case (a, b) => h >= a && h < b },
+          s"point ($la,$lo) zcell $h escaped cover of " +
             s"($latMin,$latMax,$lonMin,$lonMax)")
       }
     }
@@ -91,59 +108,12 @@ class SpatialLayoutSpec extends AnyFunSuite {
     boxes.foreach { case (latMin, latMax, lonMin, lonMax) =>
       val got = SpatialLayout.bboxFilter(layout, latMin, latMax, lonMin, lonMax)
         .select("id").as[Long].collect().sorted
-      val lonPred =
-        if (lonMin <= lonMax) col("lon") >= lonMin && col("lon") <= lonMax
-        else col("lon") >= lonMin || col("lon") <= lonMax
-      val want = nodesDF
-        .filter(col("lat") >= latMin && col("lat") <= latMax && lonPred)
-        .select("id").as[Long].collect().sorted
-      assert(got.toSeq === want.toSeq,
+      val want = exactIds(latMin, latMax, lonMin, lonMax)
+      assert(got.toSeq === want,
         s"box ($latMin,$latMax,$lonMin,$lonMax): ${got.length} vs ${want.length}")
       assert(want.nonEmpty || (latMax - latMin) < 1,
         s"degenerate test box ($latMin,$latMax,$lonMin,$lonMax) matched nothing")
     }
-  }
-
-  private lazy val hilbertLayoutPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hlayout").toString
-    SpatialLayout.materialize(nodesDF, dir, coarseLevel = 3, fineLevel = 14,
-      numFiles = 8, curve = "hilbert")
-    dir
-  }
-
-  test("hilbert-curve layout: bboxFilter equals the exact filter on every box") {
-    val layout = spark.read.parquet(hilbertLayoutPath)
-    // curve rides in metadata so bboxFilter picks HCell ranges
-    val f = layout.schema.fields.find(_.name == SpatialLayout.SortCol).get
-    assert(f.metadata.getString(SpatialLayout.MetaCurve) === "hilbert")
-    boxes.foreach { case (latMin, latMax, lonMin, lonMax) =>
-      val got = SpatialLayout.bboxFilter(layout, latMin, latMax, lonMin, lonMax)
-        .select("id").as[Long].collect().sorted
-      val lonPred =
-        if (lonMin <= lonMax) col("lon") >= lonMin && col("lon") <= lonMax
-        else col("lon") >= lonMin || col("lon") <= lonMax
-      val want = nodesDF
-        .filter(col("lat") >= latMin && col("lat") <= latMax && lonPred)
-        .select("id").as[Long].collect().sorted
-      assert(got.toSeq === want.toSeq,
-        s"hilbert box ($latMin,$latMax,$lonMin,$lonMax): ${got.length} vs ${want.length}")
-    }
-  }
-
-  test("hilbert-curve layout: polygonJoin equals the Z-layout join") {
-    val polys = DeterministicGen.polygons()
-      .map(p => (p.polygon_id, p.rings.map(_.map { case (la, lo) => (la, lo) })))
-      .toDF("polygon_id", "rings")
-      .withColumn("rings",
-        col("rings").cast("array<array<struct<lat:double,lon:double>>>"))
-    val viaH = SpatialLayout
-      .polygonJoin(spark.read.parquet(hilbertLayoutPath), polys, level = 13)
-      .select("polygon_id", "doc_id")
-    val viaZ = SpatialLayout
-      .polygonJoin(spark.read.parquet(layoutPath), polys, level = 13)
-      .select("polygon_id", "doc_id")
-    assert(viaH.exceptAll(viaZ).isEmpty && viaZ.exceptAll(viaH).isEmpty)
-    assert(viaZ.count() > 0)
   }
 
   test("all payload columns ride through the layout unchanged") {
@@ -184,6 +154,11 @@ class SpatialLayoutSpec extends AnyFunSuite {
     val f = layout.schema.fields.find(_.name == SpatialLayout.SortCol).get
     assert(f.metadata.getLong(SpatialLayout.MetaCoarse) === 3L)
     assert(f.metadata.getLong(SpatialLayout.MetaFine) === 14L)
+    // the curve rides in metadata too: readers prune only a Hilbert column
+    assert(f.metadata.getString(SpatialLayout.MetaCurve) === "hilbert")
+    val cells = layout.select(SpatialLayout.SortCol, "lat", "lon")
+      .as[(Long, Double, Double)].collect()
+    assert(cells.forall { case (c, la, lo) => c === HCell.encode(la, lo, 14) })
   }
 
   // --- skew: a dense cell splits across files, clustering preserved --------
@@ -223,11 +198,6 @@ class SpatialLayoutSpec extends AnyFunSuite {
   // --- pruned spatial join ----------------------------------------------------
 
   test("layout polygonJoin equals the unpruned join and prunes the scan") {
-    val polys = DeterministicGen.polygons()
-      .map(p => (p.polygon_id, p.rings.map(_.map { case (la, lo) => (la, lo) })))
-      .toDF("polygon_id", "rings")
-      .withColumn("rings",
-        col("rings").cast("array<array<struct<lat:double,lon:double>>>"))
     val layout = spark.read.parquet(layoutPath)
     val pruned = SpatialLayout.polygonJoin(layout, polys, level = 13)
     val plain = SpatialOps.polygonJoin(
@@ -257,6 +227,44 @@ class SpatialLayoutSpec extends AnyFunSuite {
   }
 
   // --- degradation -----------------------------------------------------------
+
+  test("a Z-sorted layout without a hilbert curve value reads unpruned") {
+    // a layout as written before Hilbert became the only curve: Z-addressed
+    // zcell with the level metadata, the curve value "z" or absent
+    val joinWant = SpatialOps.polygonJoin(nodesDF, polys, level = 13)
+      .select("polygon_id", "doc_id")
+    Seq(Some("z"), None).foreach { curve =>
+      val meta = new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(SpatialLayout.MetaCoarse, 3L).putLong(SpatialLayout.MetaFine, 14L)
+      curve.foreach(meta.putString(SpatialLayout.MetaCurve, _))
+      val dir = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
+      nodesDF.select(col("*"),
+          SpatialOps.cellId(col("lat"), col("lon"), 14).as(SpatialLayout.SortCol, meta.build()),
+          SpatialOps.cellId(col("lat"), col("lon"), 3).as(SpatialLayout.PartCol))
+        .repartitionByRange(8, col(SpatialLayout.SortCol))
+        .sortWithinPartitions(SpatialLayout.SortCol)
+        .write.mode("overwrite").partitionBy(SpatialLayout.PartCol).parquet(dir)
+      val layout = spark.read.parquet(dir)
+      boxes.foreach { case (latMin, latMax, lonMin, lonMax) =>
+        val df = SpatialLayout.bboxFilter(layout, latMin, latMax, lonMin, lonMax)
+        val pushed = df.queryExecution.executedPlan.collectLeaves().collectFirst {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.metadata.getOrElse("PushedFilters", "")
+        }.get
+        assert(!pushed.contains(SpatialLayout.SortCol), s"$curve: ranges pushed: $pushed")
+        assert(df.select("id").as[Long].collect().sorted.toSeq ===
+          exactIds(latMin, latMax, lonMin, lonMax),
+          s"$curve box ($latMin,$latMax,$lonMin,$lonMax)")
+      }
+      val out = SpatialLayout.polygonJoin(layout, polys, level = 13)
+      assert(!out.columns.contains(SpatialLayout.SortCol) &&
+        !out.columns.contains(SpatialLayout.PartCol), out.columns.mkString(", "))
+      val joined = out.select("polygon_id", "doc_id")
+      assert(joined.exceptAll(joinWant).isEmpty && joinWant.exceptAll(joined).isEmpty,
+        s"$curve: polygonJoin differs from the unpruned join")
+    }
+    assert(joinWant.count() > 0)
+  }
 
   test("a non-layout table degrades to the exact filter with identical rows") {
     val got = SpatialLayout.bboxFilter(nodesDF, 10.005, 25.005, -60.005, -20.005)

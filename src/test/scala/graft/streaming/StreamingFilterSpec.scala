@@ -3,12 +3,13 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkTestSession
+import graft.engine.FilterEngine
 import graft.fixtures.DeterministicGen
 import graft.model.OsmDocRow
 
 /** The compiled filter must behave identically on a stream: feeding the
-  * fixture through a MemoryStream in batches yields exactly the batch
-  * result, in arrival order per micro-batch. */
+  * fixture through a MemoryStream in batches and [[FilterEngine.filter]]
+  * yields exactly the batch result, in arrival order per micro-batch. */
 class StreamingFilterSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -20,12 +21,12 @@ class StreamingFilterSpec extends AnyFunSuite {
     val rows = DeterministicGen.docRows(0.001)
     val expr = "highway == residential or (@way and @tags >= 3)"
 
-    val batchExpected = graft.engine.FilterEngine
+    val batchExpected = FilterEngine
       .filter(DeterministicGen.docsDF(spark, 0.001), expr)
       .select("doc_id").collect().map(_.getString(0)).toSet
 
     val stream = MemoryStream[OsmDocRow]
-    val query = StreamingFilter(stream.toDF(), expr)
+    val query = FilterEngine.filter(stream.toDF(), expr)
       .select("doc_id")
       .writeStream.format("memory").queryName("sf_out")
       .outputMode("append").start()
@@ -43,6 +44,6 @@ class StreamingFilterSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[OsmDocRow]
     intercept[graft.ofl.OflTypeException](
-      StreamingFilter(stream.toDF(), "@node and @way"))
+      FilterEngine.filter(stream.toDF(), "@node and @way"))
   }
 }

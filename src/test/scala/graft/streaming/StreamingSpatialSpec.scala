@@ -5,12 +5,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.fixtures.DeterministicGen
-import graft.spatial.{S2Cell, SpatialOps, ZCell}
+import graft.spatial.{HCell, S2Cell, SpatialOps}
 
 /** The spatial predicates are stateless single Columns, so they compose
   * with Structured Streaming for free — this spec PINS that: a bbox
-  * prefilter (the coverRanges Or-of-ranges + exact test, the same shape
-  * bboxFilter pushes) and the S2 cell assignment yield identical row sets
+  * prefilter (the HCell.coverRanges Or-of-ranges + exact test, the same
+  * shape bboxFilter pushes) and the S2 cell assignment yield identical row sets
   * streamed through a MemoryStream and executed in batch. A geofencing /
   * live-tile-counting pipeline is these expressions behind readStream. */
 class StreamingSpatialSpec extends AnyFunSuite {
@@ -24,10 +24,10 @@ class StreamingSpatialSpec extends AnyFunSuite {
     val pts = DeterministicGen.elements(0.001)
       .filter(_.otype == "node").map(e => (e.id, e.lat.get, e.lon.get))
     val (latMin, latMax, lonMin, lonMax) = (10.005, 25.005, -60.005, -20.005)
-    val ranges = ZCell.coverRanges(latMin, latMax, lonMin, lonMax, 14, 64)
+    val ranges = HCell.coverRanges(latMin, latMax, lonMin, lonMax, 14, 64)
 
     def shape(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val z = SpatialOps.cellId(col("lat"), col("lon"), 14)
+      val z = SpatialOps.hilbertCellId(col("lat"), col("lon"), 14)
       val zPred = ranges
         .map { case (lo, hi) => z >= lo && z < hi }.reduce(_ or _)
       df.filter(zPred &&
