@@ -14,7 +14,7 @@ import graft.ofl.{EntityBits, Expr, OflTypeException, Parser, Pretty}
   * min/max + null-count stats skip row groups where the key never occurs.
   *
   * The key list is DERIVED FROM THE DATA at [[FilterEngine.materializeView]]
-  * time (top-N by key frequency — a corpus whose hot keys differ from OSM's
+  * time (top-10 by key frequency — a corpus whose hot keys differ from OSM's
   * gets ITS hot keys projected, not a stale static list), and each hot
   * column carries its source key in column METADATA (`graft_hot_key`) —
   * persisted in the parquet footer's Spark schema, so [[forSchema]] reads
@@ -35,23 +35,26 @@ object HotTags {
     * with no '=' decodes to value ""). */
   def projection(key: String): Column = Compiler.tagLookup(key)
 
-  /** Top-`n` tag keys by frequency in `view` (count desc, key asc for
+  /** Hot keys a view projects. */
+  private val KeyCount = 10
+
+  /** Top-10 tag keys by frequency in `view` (count desc, key asc for
     * determinism), deduped on the sanitized column name (two keys that
     * sanitize identically keep the more frequent one) — the derivation
     * [[FilterEngine.materializeView]] projects. One aggregation job over
     * the tags column; at 100 TB you'd run it on a row sample, which only
-    * has to get the top-N SET right, not exact counts. */
-  def deriveKeys(view: DataFrame, n: Int = 10): Seq[String] = {
+    * has to get the top-10 SET right, not exact counts. */
+  def deriveKeys(view: DataFrame): Seq[String] = {
     // explode KEYS only (not the (key, value) structs): the shuffle ships
     // one short string per tag, and map-side partial aggregation collapses
     // it to (distinct keys × partitions) rows before the exchange
     val top = view
       .select(explode(transform(col("tags"), t => t.getField("key"))).as("key"))
       .groupBy("key").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("key")).limit(n * 2)
+      .orderBy(col("cnt").desc, col("key")).limit(KeyCount * 2)
       .collect().map(_.getString(0))
     top.foldLeft(Vector.empty[String]) { (acc, k) =>
-      if (acc.size < n && !acc.exists(colName(_) == colName(k))) acc :+ k
+      if (acc.size < KeyCount && !acc.exists(colName(_) == colName(k))) acc :+ k
       else acc
     }
   }
@@ -106,7 +109,10 @@ object FilterEngine {
     * table, never rewriting `spans` (span-sequence invariant is structural).
     * Returns the full docs shape plus the typed view columns. A never-match
     * expression throws [[OflTypeException]] from
-    * [[Compiler.compileEffective]] (main.cpp:114-117). `docs` may be a
+    * [[Compiler.compileEffective]] (main.cpp:114-117). An id list read
+    * from a file (`@id in (<'file')`) is loaded by `idLoader` and probed as
+    * an in-memory `InSet`, like the reference's IdSet (hpp:1505-1559).
+    * `docs` may be a
     * streaming frame (Structured Streaming, SURVEY.md §2.9): the predicate
     * is one stateless Column, so the result is start()-able with any sink. */
   def filter(docs: DataFrame, expression: String,
@@ -161,6 +167,8 @@ object FilterEngine {
     * `format` is the Spark-world analog of the reference's `-f` output
     * format switch (main.cpp:59-61,88-90): parquet (default), json, or csv
     * (csv cannot carry nested arrays, so `spans` is JSON-encoded there). */
+  val OutputFormats: Seq[String] = Seq("parquet", "json", "csv")
+
   def writeOrdered(filtered: DataFrame, outPath: String,
                    format: String = "parquet"): Unit = {
     val ordered = filtered.select("doc_id", "spans", "type", "seq")
@@ -173,7 +181,7 @@ object FilterEngine {
           .write.mode("overwrite").option("header", "true").csv(outPath)
       case other =>
         throw new IllegalArgumentException(
-          s"unsupported output format '$other' (parquet|json|csv)")
+          s"unsupported output format '$other' (${OutputFormats.mkString("|")})")
     }
   }
 
@@ -184,9 +192,9 @@ object FilterEngine {
     * typed columns with vectorized scans, predicate pushdown, and partition
     * pruning. This is the Iceberg-style "derived projection" layout the
     * engine assumes for repeated querying of a 100 TB docs table.
-    * [[HotTags]] keys are additionally projected as pushdown-eligible
-    * top-level columns. */
-  def materializeView(docs: DataFrame, path: String, hotKeyCount: Int = 10): Unit = {
+    * The corpus's 10 most frequent tag keys ([[HotTags.deriveKeys]]) are
+    * additionally projected as pushdown-eligible top-level columns. */
+  def materializeView(docs: DataFrame, path: String): Unit = {
     // enforce the never-null-tags-ARRAY invariant (null spans decode to a
     // null array): a null array makes exists() three-valued (NULL, not
     // false), which would break HotTagRewrite's null-exactness under Not —
@@ -201,7 +209,7 @@ object FilterEngine {
     // single-field decode), not the full derivation — at 24M rows the
     // full-decode + struct-explode variant ran the 8 GB driver out of
     // execution memory; this shape is a key-only explode over one pass
-    val keys = HotTags.deriveKeys(base.select("tags"), hotKeyCount)
+    val keys = HotTags.deriveKeys(base.select("tags"))
     val hotCols = keys.map { k =>
       val m = new org.apache.spark.sql.types.MetadataBuilder()
         .putString(HotTags.MetaKey, k).build()
@@ -209,69 +217,6 @@ object FilterEngine {
     }
     base.select(col("*") +: hotCols: _*)
       .write.mode("overwrite").partitionBy("type").parquet(path)
-  }
-
-  /** Scale path for huge id-list files: `ATTR in (<'file')` compiled as an
-    * InSet probe replicates the whole set into every task (exactly like the
-    * reference's in-memory IdSetDense, hpp:1549-1559 — and with the same
-    * memory ceiling). Above `semiJoinThreshold` ids, a top-level conjunct of
-    * the form `@attr in (<'file')` (or `not …`) is instead planned as a
-    * distributed left-semi (left-anti) join against a parallelized id table,
-    * which AQE broadcasts or shuffles by size; the remaining conjuncts
-    * compile to the usual predicate Column. Only top-level conjuncts are
-    * extracted — a file list under `or`/counting keeps the InSet plan
-    * (documented limitation; matches how such filters are actually used). */
-  def filterPlanned(view: DataFrame, expression: String,
-                    idLoader: Compiler.IdListLoader,
-                    semiJoinThreshold: Int = 100000): DataFrame = {
-    import graft.ofl._
-    val q = parse(expression)
-    if (q.neverMatches)
-      throw new OflTypeException("Filter expression can never match")
-    val conjuncts = q.ast match {
-      case And(cs) => cs
-      case other   => Vector(other)
-    }
-    val spark = view.sparkSession
-    import spark.implicits._
-
-    def attrCol(a: Expr): Option[Column] = a match {
-      case IntAttrExpr(IntAttr.Id)        => Some(col("id"))
-      case IntAttrExpr(IntAttr.Version)   => Some(col("version"))
-      case IntAttrExpr(IntAttr.Changeset) => Some(col("changeset"))
-      case IntAttrExpr(IntAttr.Uid)       => Some(col("uid"))
-      case _                              => None
-    }
-
-    // load each file once (they can be huge — that's why this path exists)
-    val loaded = scala.collection.mutable.Map.empty[String, Set[Long]]
-    val cachingLoader: Compiler.IdListLoader =
-      f => loaded.getOrElseUpdate(f, idLoader(f))
-
-    val (joins, residual) = conjuncts.partition {
-      case InIntList(a, _, _, Some(f)) =>
-        attrCol(a).isDefined && cachingLoader(f).size > semiJoinThreshold
-      case _ => false
-    }
-
-    var out = view
-    joins.foreach { case InIntList(a, op, _, Some(f)) =>
-      val ids = cachingLoader(f).toSeq.toDF("__id")
-      val joinType = if (op == ListOp.In) "left_semi" else "left_anti"
-      out = out.join(ids, attrCol(a).get === col("__id"), joinType)
-    case _ => ()
-    }
-    val residualExpr =
-      if (residual.isEmpty) BoolLit(true)
-      else if (residual.size == 1) residual.head else And(residual.toVector)
-    // entity mask comes from the FULL expression (join conjuncts included)
-    val masked = Compiler.pruningPredicate(q.ast) match {
-      case Some(p) => out.filter(p)
-      case None    => out
-    }
-    // residual tag checks also target the view's hot columns when present
-    masked.filter(Compiler.compile(residualExpr, cachingLoader,
-      HotTags.forSchema(view.schema)))
   }
 
   /** Filter over a materialized typed view (see [[materializeView]]):
@@ -287,10 +232,10 @@ object FilterEngine {
 
   /** Engine session defaults — 32 shuffle partitions for local[32], AQE for
     * runtime re-planning (skew joins, dynamic broadcast). */
-  def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
+  def session(master: String): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
-      .appName(appName)
+      .appName("graft")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -32,11 +32,13 @@ object Main {
     var progress = false
     var sugar = false
 
+    // usage errors exit 2 with one stderr line, before any Spark session
+    def refuse(message: String): Nothing = {
+      System.err.println(message)
+      sys.exit(2)
+    }
     def argValue(i: Int): String = {
-      if (i + 1 >= args.length) {
-        System.err.println(s"Missing value for ${args(i)}")
-        sys.exit(2)
-      }
+      if (i + 1 >= args.length) refuse(s"Missing value for ${args(i)}")
       args(i + 1)
     }
     var i = 0
@@ -53,7 +55,10 @@ object Main {
         case "-w" | "--complete-ways"   => completeWays = true; i += 1
         case "--checkpoint"             => checkpointRoot = argValue(i); i += 2
         case "--job"                    => jobName = argValue(i); i += 2
-        case "--parts"                  => parts = argValue(i).toInt; i += 2
+        case "--parts" =>
+          parts = argValue(i).toIntOption.filter(_ >= 1).getOrElse(
+            refuse(s"--parts needs a positive integer, got '${args(i + 1)}'"))
+          i += 2
         case "-h" | "--help" =>
           System.out.println(
             "graft-filter [OPTIONS] INPUT\n  INPUT: parquet docs path, or '-' = JSON-lines docs from stdin\n  -e EXPR | -E FILE, -o OUT ('-' = JSON lines to stdout), -f parquet|json|csv, -n dry-run, -v verbose, -w complete-ways, --progress, --extended-syntax, --checkpoint ROOT [--job NAME --parts N]")
@@ -61,10 +66,10 @@ object Main {
         case other => input = other; i += 1
       }
     }
-    if (expression.nonEmpty && exprFile.nonEmpty) {
-      System.err.println("Do not use --expression/-e and --expression-file/-E together")
-      sys.exit(2)
-    }
+    if (expression.nonEmpty && exprFile.nonEmpty)
+      refuse("Do not use --expression/-e and --expression-file/-E together")
+    if (!FilterEngine.OutputFormats.contains(outputFormat))
+      refuse(s"unsupported output format '$outputFormat' (${FilterEngine.OutputFormats.mkString("|")})")
     // the reference defaults INPUT and OUTPUT to `-` (stdin/stdout,
     // main.cpp:59-61). `-o -` streams JSON-lines docs out; `-` as input
     // accepts the same stream back, so two graft filters compose in a shell
@@ -73,18 +78,12 @@ object Main {
     // spooled to a driver-local temp file (64 KB copy buffer, bounded
     // memory) before the scan — the spool is the pipeline's natural
     // single-stream bottleneck, not a distributed path.
-    if (input == "-" && checkpointRoot.nonEmpty) {
-      System.err.println(
-        "--checkpoint with stdin input ('-') is not supported: resume needs a re-readable input fingerprint; spool to a path first")
-      sys.exit(2)
-    }
+    if (input == "-" && checkpointRoot.nonEmpty)
+      refuse("--checkpoint with stdin input ('-') is not supported: resume needs a re-readable input fingerprint; spool to a path first")
     // the checkpointed job is the bucketed single-pass filter; complete-ways
     // has no checkpointed form, so the pair is refused, not half-honored
-    if (completeWays && checkpointRoot.nonEmpty) {
-      System.err.println(
-        "--complete-ways/-w with --checkpoint is not supported: the checkpointed job is a single-pass filter")
-      sys.exit(2)
-    }
+    if (completeWays && checkpointRoot.nonEmpty)
+      refuse("--complete-ways/-w with --checkpoint is not supported: the checkpointed job is a single-pass filter")
     if (exprFile.nonEmpty)
       expression = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(exprFile)), "UTF-8")

@@ -23,8 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * single-field decode per column, so Catalyst column pruning drops whole
   * passes, and [[DecodeMerge]] folds the decodes a projection keeps into
   * one. Semantics per field are identical to the HOF derivation (absent
-  * header span or null header text ⇒ null; a span with a null kind is
-  * skipped) and equivalence is tested against it.
+  * header span or null header text ⇒ null; a span with a null kind, a
+  * tag/nd/member span with null text and a media span with a null
+  * `media_ref` are skipped, so array elements are never null) and
+  * equivalence is tested against it.
   */
 case class DecodeOsmSpans(child: Expression, mask: Int = SpanDecode.AllFields)
   extends UnaryExpression {
@@ -153,11 +155,12 @@ object SpanDecode {
       b0 match {
         case 't' => // tag | type | timestamp
           if (kind.equals(K_TAG)) {
-            if (tags != null) {
+            val t0 = if (tags != null) span.getUTF8String(1) else null
+            if (t0 != null) {
               // clone once (the input buffer may be reused), then split the
               // byte array in place: '=' is single-byte in UTF-8, so a byte
               // scan is exact and no String decode/encode round-trip is paid
-              val t = span.getUTF8String(1).clone()
+              val t = t0.clone()
               val b = t.getBytes
               val nb = b.length
               var eq = 0
@@ -175,13 +178,15 @@ object SpanDecode {
             if ((want & FTimestamp) != 0) { ts = text(span); want &= ~FTimestamp }
           }
         case 'n' => // nd
-          if (kind.equals(K_ND) && nds != null)
-            nds.add(java.lang.Long.valueOf(span.getUTF8String(1).toLongExact()))
+          if (kind.equals(K_ND) && nds != null) {
+            val t = span.getUTF8String(1)
+            if (t != null) nds.add(java.lang.Long.valueOf(t.toLongExact()))
+          }
         case 'm' => // member | media
           if (kind.equals(K_MEMBER)) {
-            if (members != null) {
-              val t = span.getUTF8String(1).clone()
-              val b = t.getBytes
+            val t = if (members != null) span.getUTF8String(1) else null
+            if (t != null) {
+              val b = t.clone().getBytes
               var a = 0
               while (b(a) != '/') a += 1
               var c = a + 1
@@ -193,7 +198,8 @@ object SpanDecode {
             }
           } else if (kind.equals(K_MEDIA)) {
             // copy: the input row buffer may be reused by the upstream iterator
-            if (media != null) media.add(span.getUTF8String(2).clone())
+            val r = if (media != null) span.getUTF8String(2) else null
+            if (r != null) media.add(r.clone())
           }
         case 'i' =>
           if (kind.equals(K_ID) && (want & FId) != 0) { id = long(span); want &= ~FId }

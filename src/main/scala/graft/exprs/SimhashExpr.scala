@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * that document's tokens, so distributing it as an aggregation pays a
   * corpus-wide exchange (and 64 aggregation buffers per group) for what is
   * a pure projection. Parity contract (pinned by OpsSpec against the HOF
-  * [[graft.ops.Dedup.simhash]] form):
+  * form `OpsSpec.simhashHof`):
   *  - tokenization is `filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"),
   *    length > 0)` via the SAME primitives the Column pipeline executes
   *    (UTF8String.trim/toLowerCase, then java.util.regex split with

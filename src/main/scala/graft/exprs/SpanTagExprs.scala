@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Parity with the decode + [[TagLookup]]/[[TagExists]] chain (pinned by
   * SpanTagExprsSpec): first matching tag span wins (span order = decoded
   * array order); a tag span with no '=' decodes to (text, "") so it matches
-  * `key == text` with value ""; a span with a null kind is no tag span;
+  * `key == text` with value ""; a span with a null kind or null text is
+  * no tag span;
   * decoded keys/elements are never null, so exists is two-valued; null
   * spans input yields null.
   */
@@ -111,7 +112,7 @@ object SpanTagKernel {
       if (kind != null && kind.numBytes() == 3 && kind.getByte(0) == 't' &&
           kind.equals(K_TAG)) {
         val t = span.getUTF8String(1)
-        val tlen = t.numBytes()
+        val tlen = if (t == null) -1 else t.numBytes()
         if (tlen == klen) {
           if (t.equals(key)) return UTF8String.EMPTY_UTF8 // "key" with no '='
         } else if (tlen > klen && t.getByte(klen) == '=' &&
@@ -136,7 +137,7 @@ object SpanTagKernel {
       if (kind != null && kind.numBytes() == 3 && kind.getByte(0) == 't' &&
           kind.equals(K_TAG)) {
         val t = span.getUTF8String(1)
-        val tlen = t.numBytes()
+        val tlen = if (t == null) -1 else t.numBytes()
         if ((tlen == klen && t.equals(key)) ||
             (tlen > klen && t.getByte(klen) == '=' && ByteArrayEq.prefixEquals(t, key)))
           return true

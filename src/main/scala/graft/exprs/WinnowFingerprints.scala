@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd winnowed document fingerprints (MOSS, Schleimer/Wilkerson/Aiken
   * 2003): normalize → hash every k-char gram → keep each w-window's minimum
-  * hash → distinct. Replaces the HOF pipeline kept as
-  * [[graft.ops.TextOps.winnowedFingerprintsHof]] (the test oracle), whose
+  * hash → distinct. Replaces the HOF pipeline WinnowKernelSpec keeps as
+  * its test oracle, whose
   * nested transform/slice/array_min tree is quadratic per row AND gets
   * re-inlined by the optimizer under Generate/join plans — measured 315 s to
   * explode 340 documents' fingerprints at sf0.01. This kernel is a single

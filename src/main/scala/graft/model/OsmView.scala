@@ -76,7 +76,11 @@ object OsmView {
   private[graft] def deriveHof(docs: DataFrame): DataFrame = {
     val hasType = docs.columns.contains("type")
     val hasSeq = docs.columns.contains("seq")
-    val tagSpans = filter(col("spans"), s => s.getField("kind") === "tag")
+    // array spans without their payload (null text, null media_ref) carry
+    // no element: they are dropped, as the decode skips them
+    def spansOf(kind: String, payload: String = "text"): Column =
+      filter(col("spans"), s => s.getField("kind") === kind && s.getField(payload).isNotNull)
+    val tagSpans = spansOf("tag")
     val tagStruct = (s: Column) => {
       val t = s.getField("text")
       val key = substring_index(t, "=", 1)
@@ -100,10 +104,10 @@ object OsmView {
       (spanText("lon").cast("long") / 1e7).as("lon"),
       transform(tagSpans, tagStruct).as("tags"),
       transform(
-        filter(col("spans"), s => s.getField("kind") === "nd"),
+        spansOf("nd"),
         s => s.getField("text").cast("long")).as("nds"),
       transform(
-        filter(col("spans"), s => s.getField("kind") === "member"),
+        spansOf("member"),
         s => {
           val parts = split(s.getField("text"), "/", 3)
           struct(
@@ -112,7 +116,7 @@ object OsmView {
             element_at(parts, 3).as("role"))
         }).as("members"),
       transform(
-        filter(col("spans"), s => s.getField("kind") === "media"),
+        spansOf("media", "media_ref"),
         s => s.getField("media_ref")).as("media_refs"))
   }
 }

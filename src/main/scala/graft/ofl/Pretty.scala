@@ -16,13 +16,6 @@ object Pretty {
     sb.result()
   }
 
-  /** As compared by the reference tests: tree without the final newline
-    * (test_parser.cpp:17 compares `t.str() == tree + "\n"`). */
-  def printNoTrailingNewline(e: Expr): String = {
-    val s = print(e)
-    if (s.endsWith("\n")) s.dropRight(1) else s
-  }
-
   private def indent(sb: StringBuilder, level: Int): Unit = {
     var i = level
     while (i > 0) { sb.append(' '); i -= 1 }

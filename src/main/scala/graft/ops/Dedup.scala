@@ -120,22 +120,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash over word tokens, pure Columns: per-bit majority vote of
-    * token hashes, built with 64 aggregate() passes folded into one
-    * projection. bit b of the result = 1 iff Σ_tokens sign(bit b of
-    * hash(token)) > 0. */
-  def simhash(text: Column): Column = {
-    val tokens = filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
-    val hashes = transform(tokens, t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      val votes = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftrightunsigned(h, b).bitwiseAND(lit(1L)) === 1L,
-          lit(1L)).otherwise(lit(-1L)))
-      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** SimHash per document — ONE codegen'd projection pass
     * ([[graft.exprs.SimhashExpr]]). A document's simhash depends only on
     * its own tokens, so the round-5 shape — explode tokens, xxhash64,
@@ -143,7 +127,9 @@ object Dedup {
     * exchange plus 64 aggregation buffers per key for what is a pure
     * per-row function; the kernel computes the same bits in a single text
     * scan with no shuffle at all (guide §1.2 step 1: remove the pass, not
-    * tune it). Equivalence with the HOF [[simhash]] form is spec-pinned;
+    * tune it). Equivalence with the HOF form (OpsSpec's oracle: bit b of
+    * the result = 1 iff Σ_tokens sign(bit b of xxhash64(token)) > 0) is
+    * spec-pinned;
     * null text coalesces to 0L exactly as the aggregation's empty-group
     * chain did. Returns (key, sim), one row per input row: keys must be
     * unique, since duplicate keys are not combined (each row keeps its own
@@ -192,46 +178,45 @@ object Dedup {
     * a dedup until pairs are transitively closed (a~b, b~c ⇒ {a,b,c} is ONE
     * group) and one canonical doc survives per group.
     *
-    * Algorithm: iterative min-label propagation to fixpoint, DataFrames
-    * only — each round (1) every edge offers each endpoint's label to the
-    * other, keep the min per key; (2) pointer-jumping compression
-    * (L(k) := L(L(k))) collapses label chains so convergence is
-    * O(log diameter) rounds, not O(diameter); (3) stop when no label
-    * changed. Each round is a pair of hash-shuffles on the key — no
-    * cartesian, no driver-side adjacency. `localCheckpoint` between rounds
-    * truncates the growing plan lineage (the SpatialOps ladder pattern);
-    * AQE handles skewed hub keys.
-    *
-    * Driver coordination is ONE action per round: the previous round's label
-    * rides through the propagation aggregate (max over a column that is null
-    * on the edge-offer branches), and change detection is an `observe()`
-    * metric collected by the round's eager localCheckpoint job — no separate
-    * join + count pass. */
-  def dupClusters(pairs: DataFrame, maxIters: Int = 50,
-                  maxDriverEdges: Long = 2000000L): DataFrame = {
-    // a pair with a null endpoint names no document: drop it here, once, so
-    // the driver and distributed paths below resolve the same edge set
-    val edges = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
+    * Size-adaptive (the AQE-broadcast analogy): a dedup's pair set is
+    * usually orders of magnitude smaller than its corpus. When the DISTINCT
+    * edge set has at most 2M edges (same budget class as a broadcast join's
+    * build side) and its key type has a driver-side ordering,
+    * [[driverClusters]] resolves components with one collect and a
+    * union-find; above that, [[propagatedClusters]] runs the distributed
+    * label propagation. Guard sizing: the driver walk is single-thread O(E)
+    * (measured ~42 s at 5.6M boxed edges), so the guard stays well below the
+    * crossover where the distributed loop wins at cluster parallelism (the
+    * N→4N scaling evidence for big edge sets is the LOOP's 0.87 —
+    * ScalingBench's 5.6M-edge fixture deliberately exceeds this guard).
+    * Output is identical by construction: cluster = the component's minimum
+    * key under Spark's own ordering (UTF8 binary for strings — NOT
+    * String.compareTo, which disagrees on supplementary code points). */
+  def dupClusters(pairs: DataFrame): DataFrame = {
+    val edges = clusterEdges(pairs)
+    driverOrdering(edges) match {
+      case Some(ord) if edges.count() <= MaxDriverEdges => driverClusters(edges, ord)
+      case _ => propagatedClusters(edges)
+    }
+  }
+
+  private val MaxDriverEdges = 2000000L
+
+  /** Label-propagation rounds before [[propagatedClusters]] gives up. */
+  private val MaxClusterRounds = 50
+
+  /** The distinct edges `(a, b)` of a pairs frame, materialized. A pair with
+    * a null endpoint names no document: it is dropped here, once, so both
+    * cluster branches resolve the same edge set. */
+  private[ops] def clusterEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("key_a").as("a"), col("key_b").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
       .distinct().localCheckpoint(true)
-    // Size-adaptive (round 6, the AQE-broadcast analogy): a dedup's pair
-    // set is usually orders of magnitude smaller than its corpus — when the
-    // DISTINCT edge set fits comfortably on the driver (same budget class
-    // as a broadcast join's build side), a driver-side union-find resolves
-    // components in one collect instead of O(log diameter) rounds of two
-    // shuffles each; the iterative loop below remains the path for edge
-    // sets above the guard. Guard sizing: the driver walk is single-thread
-    // O(E) (measured ~42 s at 5.6M boxed edges), so the default stays well
-    // below the crossover where the distributed loop wins at cluster
-    // parallelism (the N→4N scaling evidence for big edge sets is the
-    // LOOP's 0.87 — ScalingBench's 5.6M-edge fixture deliberately exceeds
-    // this guard). Output is identical by construction: cluster =
-    // the component's minimum key under Spark's own ordering (UTF8 binary
-    // for strings — NOT String.compareTo, which disagrees on supplementary
-    // code points).
-    val keyField = edges.schema("a")
-    val nullableKey = keyField.nullable || edges.schema("b").nullable
-    val driverOrd: Option[Ordering[Any]] = keyField.dataType match {
+
+  /** Spark's ordering of the edge key type on the driver, when it has one
+    * here (strings and integral types). */
+  private def driverOrdering(edges: DataFrame): Option[Ordering[Any]] =
+    edges.schema("a").dataType match {
       case org.apache.spark.sql.types.StringType =>
         Some(Ordering.fromLessThan[Any]((x, y) =>
           org.apache.spark.unsafe.types.UTF8String.fromString(x.asInstanceOf[String])
@@ -244,33 +229,54 @@ object Dedup {
         Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue()))
       case _ => None // exotic key type: keep the distributed path
     }
-    if (driverOrd.isDefined && edges.count() <= maxDriverEdges) {
-      implicit val ord: Ordering[Any] = driverOrd.get
-      val es = edges.collect().map(r => (r.get(0), r.get(1)))
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x0: Any): Any = {
-        var x = x0
-        while ({ val p = parent.getOrDefault(x, x); p != x && { x = p; true } }) ()
-        var y = x0 // path compression
-        while ({ val p = parent.getOrDefault(y, y); p != y && { parent.put(y, x); y = p; true } }) ()
-        x
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-      val rows = verts.iterator
-        .map(v => org.apache.spark.sql.Row(v, find(v))).toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key", keyField.dataType, nullableKey),
-        org.apache.spark.sql.types.StructField("cluster", keyField.dataType, nullableKey)))
-      return pairs.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+
+  /** [[dupClusters]]' driver branch: collect the [[clusterEdges]] and run a
+    * union-find that roots each component at its minimum key under `ord`. */
+  private[ops] def driverClusters(edges: DataFrame, ord: Ordering[Any]): DataFrame = {
+    val keyField = edges.schema("a")
+    val nullableKey = keyField.nullable || edges.schema("b").nullable
+    val es = edges.collect().map(r => (r.get(0), r.get(1)))
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x0: Any): Any = {
+      var x = x0
+      while ({ val p = parent.getOrDefault(x, x); p != x && { x = p; true } }) ()
+      var y = x0 // path compression
+      while ({ val p = parent.getOrDefault(y, y); p != y && { parent.put(y, x); y = p; true } }) ()
+      x
     }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
+    val rows = verts.iterator
+      .map(v => org.apache.spark.sql.Row(v, find(v))).toSeq
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("key", keyField.dataType, nullableKey),
+      org.apache.spark.sql.types.StructField("cluster", keyField.dataType, nullableKey)))
+    edges.sparkSession.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+  }
+
+  /** [[dupClusters]]' distributed branch over the [[clusterEdges]]:
+    * iterative min-label propagation to fixpoint, DataFrames only — each
+    * round (1) every edge offers each endpoint's label to the other, keep
+    * the min per key; (2) pointer-jumping compression (L(k) := L(L(k)))
+    * collapses label chains so convergence is O(log diameter) rounds, not
+    * O(diameter); (3) stop when no label changed. Each round is a pair of
+    * hash-shuffles on the key — no cartesian, no driver-side adjacency.
+    * `localCheckpoint` between rounds truncates the growing plan lineage
+    * (the SpatialOps ladder pattern); AQE handles skewed hub keys.
+    *
+    * Driver coordination is ONE action per round: the previous round's label
+    * rides through the propagation aggregate (max over a column that is null
+    * on the edge-offer branches), and change detection is an `observe()`
+    * metric collected by the round's eager localCheckpoint job — no separate
+    * join + count pass. */
+  private[ops] def propagatedClusters(edges: DataFrame): DataFrame = {
     // both edge directions in one relation: each round then offers labels
     // across edges with ONE equi-join instead of two (round 6 — halves the
     // per-round join count; the offer multiset is identical). Lazy — a
@@ -284,7 +290,7 @@ object Dedup {
       .distinct().withColumn("cluster", col("key")).localCheckpoint(true)
     var converged = false
     var i = 0
-    while (!converged && i < maxIters) {
+    while (!converged && i < MaxClusterRounds) {
       val offers = dir.join(labels, dir("src") === labels("key"))
         .select(col("dst").as("key"), col("cluster"), lit(null).cast("long").as("old"))
       // every key occurs exactly once in `labels`, so max("old") recovers
@@ -308,7 +314,7 @@ object Dedup {
       i += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"dupClusters did not converge in $maxIters rounds (log-diameter > $maxIters?)")
+      s"dupClusters did not converge in $MaxClusterRounds rounds (log-diameter > $MaxClusterRounds?)")
     labels
   }
 
@@ -341,6 +347,11 @@ object Dedup {
     * guide-§8 proxy pattern: one decision pass derives the lightweight
     * rows, and nothing re-reads the text.
     *
+    * Size guard: with at most 20M df>=2 fingerprints the rare and hot sets
+    * are collected and broadcast ([[retainedWinnowPairs]]); above that
+    * they are attached by a shuffle join ([[joinedWinnowPairs]]). Both
+    * branches return the same rows.
+    *
     * Hot-fingerprint valve: boilerplate text (license headers, templates)
     * makes HOT fingerprints whose buckets go quadratic, so fingerprints
     * appearing in more than `maxDocFreq` documents are dropped from
@@ -365,8 +376,21 @@ object Dedup {
     * signal the corpus needs exact dedup first. */
   def winnowedDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                        k: Int = 8, w: Int = 4, threshold: Double = 0.5,
-                       maxDocFreq: Int = 1000,
-                       maxBroadcastFps: Long = 20000000L): DataFrame = {
+                       maxDocFreq: Int = 1000): DataFrame = {
+    val (fmat, dfT) = winnowTables(docs, textCol, keyCol, k, w)
+    if (dfT.count() <= MaxBroadcastFps) retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+    else joinedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+  }
+
+  /** Above this many df>=2 fingerprints the retain branch's driver
+    * collect would be the bottleneck. */
+  private val MaxBroadcastFps = 20000000L
+
+  /** [[winnowedDupPairs]]' materialized inputs: the per-doc fingerprint
+    * table `(key, nt, fps)` and the document-frequency table `(f, df)` of
+    * the fingerprints held by at least two documents. */
+  private[ops] def winnowTables(docs: DataFrame, textCol: Column, keyCol: Column,
+                                k: Int, w: Int): (DataFrame, DataFrame) = {
     // ONE kernel pass: the per-doc fingerprint table, eagerly materialized
     // in its COMPACT form (one row per doc, primitive-long array — ~4× fewer
     // bytes than materializing the exploded rows). At 100 TB this is the §8
@@ -379,7 +403,6 @@ object Dedup {
       col("__text"), "fps", k, w)
       .select(col("key"), size(col("fps")).as("nt"), col("fps"))
       .localCheckpoint(true)
-    val e = fmat.select(col("key"), explode(col("fps")).as("f"))
     // Document frequency as a hash AGGREGATION, keeping only df >= 2 — the
     // round-6 shape. The previous window form paid a corpus-sized exchange
     // PLUS a per-partition sort, and the window itself ran once per join
@@ -392,54 +415,68 @@ object Dedup {
       .groupBy("f").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2)
       .localCheckpoint(true)
-    // Rare/hot membership is applied ON THE COMPACT ARRAYS, before any
-    // explode (guide §3.2's reduce-before-shuffle, exact instead of Bloom —
-    // a false positive is impossible, and a df=1 fingerprint dropped here
-    // could never have produced a pair anyway): the df>=2 table is collected
-    // (a few percent of the corpus on high-vocabulary data), split into the
-    // rare set (2 <= df <= maxDocFreq, broadcast as a sorted array for the
-    // codegen'd LongArrayRetainSorted kernel) and the hot set
-    // (df > maxDocFreq, bounded by construction at
-    // total-occurrences/maxDocFreq). Candidate generation explodes only
-    // surviving fingerprints — the corpus-sized exploded row set is never
-    // materialized, sorted, or shuffled. Per-doc hot counts come from the
-    // same compact arrays in one projection. Guarded: above
-    // `maxBroadcastFps` df>=2 fingerprints the driver collect would be the
-    // bottleneck, so fall back to a shuffle-join attach — same rows, the
-    // honest shape at that scale.
-    val spark = docs.sparkSession
-    val (gen, stats) =
-      if (dfT.count() <= maxBroadcastFps) {
-        // primitive typed collects (no Row boxing) — two cheap jobs over the
-        // materialized df table
-        val longEnc = org.apache.spark.sql.Encoders.scalaLong
-        val rare = dfT.filter(col("df") <= maxDocFreq)
-          .select(col("f")).as(longEnc).collect()
-        java.util.Arrays.sort(rare)
-        val hotArr = dfT.filter(col("df") > maxDocFreq)
-          .select(col("f")).as(longEnc).collect()
-        java.util.Arrays.sort(hotArr)
-        val bcRare = spark.sparkContext.broadcast(rare)
-        val bcHot = spark.sparkContext.broadcast(hotArr)
-        def retain(bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-          org.apache.spark.sql.GraftBridge.column(
-            graft.exprs.LongArrayRetainSorted(
-              org.apache.spark.sql.GraftBridge.expression(col("fps")), bc))
-        // n_hot via the same codegen'd retain kernel (no per-row Seq boxing
-        // — the stats subtree is evaluated under BOTH prefilter joins)
-        (fmat.select(col("key"), explode(retain(bcRare)).as("f")),
-          fmat.select(col("key"), col("nt").as("n_total"),
-            size(retain(bcHot)).cast("long").as("n_hot")))
-      } else {
-        val ef = e.join(dfT, Seq("f"))
-        val hot = ef.filter(col("df") > maxDocFreq)
-          .groupBy("key").agg(count(lit(1)).as("n_hot"))
-        (ef.filter(col("df") <= maxDocFreq).select(col("key"), col("f")),
-          fmat.select(col("key"), col("nt").as("n_total"))
-            .join(hot, Seq("key"), "left")
-            .select(col("key"), col("n_total"),
-              coalesce(col("n_hot"), lit(0L)).as("n_hot")))
-      }
+    (fmat, dfT)
+  }
+
+  /** [[winnowedDupPairs]]' default branch. Rare/hot membership is applied
+    * ON THE COMPACT ARRAYS, before any explode (guide §3.2's
+    * reduce-before-shuffle, exact instead of Bloom — a false positive is
+    * impossible, and a df=1 fingerprint dropped here could never have
+    * produced a pair anyway): the df>=2 table is collected (a few percent
+    * of the corpus on high-vocabulary data), split into the rare set
+    * (2 <= df <= maxDocFreq, broadcast as a sorted array for the codegen'd
+    * LongArrayRetainSorted kernel) and the hot set (df > maxDocFreq,
+    * bounded by construction at total-occurrences/maxDocFreq). Candidate
+    * generation explodes only surviving fingerprints — the corpus-sized
+    * exploded row set is never materialized, sorted, or shuffled. Per-doc
+    * hot counts come from the same compact arrays in one projection. */
+  private[ops] def retainedWinnowPairs(fmat: DataFrame, dfT: DataFrame,
+                                       threshold: Double, maxDocFreq: Int): DataFrame = {
+    val spark = fmat.sparkSession
+    // primitive typed collects (no Row boxing) — two cheap jobs over the
+    // materialized df table
+    val longEnc = org.apache.spark.sql.Encoders.scalaLong
+    val rare = dfT.filter(col("df") <= maxDocFreq)
+      .select(col("f")).as(longEnc).collect()
+    java.util.Arrays.sort(rare)
+    val hotArr = dfT.filter(col("df") > maxDocFreq)
+      .select(col("f")).as(longEnc).collect()
+    java.util.Arrays.sort(hotArr)
+    val bcRare = spark.sparkContext.broadcast(rare)
+    val bcHot = spark.sparkContext.broadcast(hotArr)
+    def retain(bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
+      org.apache.spark.sql.GraftBridge.column(
+        graft.exprs.LongArrayRetainSorted(
+          org.apache.spark.sql.GraftBridge.expression(col("fps")), bc))
+    // n_hot via the same codegen'd retain kernel (no per-row Seq boxing
+    // — the stats subtree is evaluated under BOTH prefilter joins)
+    verifiedWinnowPairs(fmat, threshold,
+      fmat.select(col("key"), explode(retain(bcRare)).as("f")),
+      fmat.select(col("key"), col("nt").as("n_total"),
+        size(retain(bcHot)).cast("long").as("n_hot")))
+  }
+
+  /** [[winnowedDupPairs]]' fallback branch for a df table too large to
+    * collect: the exploded fingerprints join the df table, and the per-doc
+    * hot counts are a shuffled aggregation. */
+  private[ops] def joinedWinnowPairs(fmat: DataFrame, dfT: DataFrame,
+                                     threshold: Double, maxDocFreq: Int): DataFrame = {
+    val ef = fmat.select(col("key"), explode(col("fps")).as("f")).join(dfT, Seq("f"))
+    val hot = ef.filter(col("df") > maxDocFreq)
+      .groupBy("key").agg(count(lit(1)).as("n_hot"))
+    verifiedWinnowPairs(fmat, threshold,
+      ef.filter(col("df") <= maxDocFreq).select(col("key"), col("f")),
+      fmat.select(col("key"), col("nt").as("n_total"))
+        .join(hot, Seq("key"), "left")
+        .select(col("key"), col("n_total"),
+          coalesce(col("n_hot"), lit(0L)).as("n_hot")))
+  }
+
+  /** The winnow pairs tail both branches share: candidate pairs from the
+    * rare fingerprints `gen` (key, f), the provable-bound prefilter over the
+    * per-doc `stats` (key, n_total, n_hot), and the exact verify over `fmat`. */
+  private def verifiedWinnowPairs(fmat: DataFrame, threshold: Double,
+                                  gen: DataFrame, stats: DataFrame): DataFrame = {
     val l = gen.select(col("f"), col("key").as("key_a"))
     val r = gen.select(col("f"), col("key").as("key_b"))
     // shared-RARE count per candidate pair, computed IN the band join with a

@@ -24,24 +24,18 @@ import org.apache.spark.sql.functions._
   * [[ivfTopK]] overload. */
 object Similarity {
 
-  /** Codegen'd dot product (semantics identical to [[dotHof]], which stays
-    * as the test oracle — the HOF form is CodegenFallback and was the hot
-    * loop's bottleneck at 100 TB of embeddings). */
+  /** Codegen'd dot product (semantics identical to the HOF
+    * `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` it replaced, which
+    * VectorDotSpec keeps as the test oracle — the HOF form is
+    * CodegenFallback and was the hot loop's bottleneck at 100 TB of
+    * embeddings). */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.exprs.VectorDot(
       GraftBridge.expression(a), GraftBridge.expression(b)))
   }
 
-  /** The HOF composition VectorDot replaces — kept as the equivalence
-    * oracle (CodegenFallback; do not use on a scale path). */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  private[graft] def normHof(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, v) => acc + v * v))
 
   def cosine(a: Column, b: Column): Column = {
     val d = norm(a) * norm(b)
@@ -110,16 +104,23 @@ object Similarity {
   }
 
   /** First `probes` XOR masks in full signature hamming order (all 1-bit
-    * flips, then 2-bit, … up to all bits) — the shared multi-probe ladder of
-    * [[lshTopK]] and [[cosineDupPairs]]. */
+    * flips, then 2-bit, … up to all bits) — [[lshTopK]]'s multi-probe
+    * ladder. */
   private def hammingFlips(bits: Int, probes: Int): Seq[Long] =
     (1 to bits).iterator.flatMap(k =>
       (0 until bits).combinations(k).map(_.map(1L << _).sum))
       .take(probes).toSeq
 
+  /** Seed of every random draw here: hyperplanes, LSH signatures and the
+    * IVF centroid init. */
+  private val Seed = 42L
+
+  /** Lloyd rounds of [[ivfCentroids]]. */
+  private val IvfIters = 2
+
   /** Deterministic random hyperplanes: `bits` planes of dimension `dim`. */
-  def hyperplanes(dim: Int, bits: Int, seed: Long = 42L): Array[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
+  def hyperplanes(dim: Int, bits: Int): Array[Array[Double]] = {
+    val rng = new scala.util.Random(Seed)
     Array.fill(bits)(Array.fill(dim)(rng.nextGaussian()))
   }
 
@@ -131,21 +132,21 @@ object Similarity {
     }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed ANN top-k: bucket corpus and queries by hyperplane
-    * signature with `probes` multi-probe neighbor buckets (flip one bit),
+    * signature with `probes` multi-probe neighbor buckets (nearest first in
+    * signature hamming order),
     * exact cosine re-rank within candidate buckets. Recall grows with
     * probes/bits tradeoff; exactness is NOT guaranteed — that's the point of
     * the scale path. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              dim: Int, bits: Int = 12, probes: Int = 4,
-              seed: Long = 42L): DataFrame =
-    cosineTopK(lshJoined(corpus, queries, dim, bits, probes, seed)
+              dim: Int, bits: Int = 12, probes: Int = 4): DataFrame =
+    cosineTopK(lshJoined(corpus, queries, dim, bits, probes)
       .withColumn("cos", cosine(col("embedding"), col("q_emb"))), k)
 
   /** The candidate join [[lshTopK]] re-ranks — one row per (query, corpus
     * vector) the probe ladder actually scans. */
   private def lshJoined(corpus: DataFrame, queries: DataFrame, dim: Int,
-                        bits: Int, probes: Int, seed: Long): DataFrame = {
-    val planes = hyperplanes(dim, bits, seed)
+                        bits: Int, probes: Int): DataFrame = {
+    val planes = hyperplanes(dim, bits)
     val c = corpus.withColumn("bucket", lshSignature(col("embedding"), planes))
     val qSig = queries.select(col("query_id"), col("embedding").as("q_emb"))
       .withColumn("sig", lshSignature(col("q_emb"), planes))
@@ -178,23 +179,22 @@ object Similarity {
     }: _*)).getField("ni") * -1
 
   /** k-means coarse quantizer, trained distributed: deterministic seeded
-    * init, `iters` Lloyd rounds (assign via broadcast-literal dot products,
+    * init, two Lloyd rounds (assign via broadcast-literal dot products,
     * recenter via posexplode + per-(centroid, dim) average). Centroid count
     * and dims are small; the heavy side (corpus) is never collected.
     *
     * Knobs vs recall (measured, BASELINE.md round 4, "ANN recall at
     * production settings"):
-    * `iters` is fixed with no movement check — standard Lloyd, and at the
-    * default nCentroids=16 round 2 is already within noise of converged on
+    * the round count is a constant with no movement check — standard Lloyd,
+    * and at nCentroids=16 round 2 is already within noise of converged on
     * the bench fixture; an empty centroid keeps its stale position
-    * (deterministic; it simply attracts no probes). Raising `iters` buys
+    * (deterministic; it simply attracts no probes). More rounds buy
     * assignment balance, not recall — recall is governed by nProbe/nCentroids
     * (the scanned fraction): nc=16 np=1/2/4/8 → 0.29/0.42/0.56/0.76 @10 on
     * the structureless uniform fixture. */
-  def ivfCentroids(corpus: DataFrame, dim: Int, nCentroids: Int,
-                   iters: Int = 2, seed: Long = 42L): Array[Array[Double]] = {
-    var cents = hyperplanes(dim, nCentroids, seed).map(normalize)
-    for (_ <- 0 until iters) {
+  def ivfCentroids(corpus: DataFrame, dim: Int, nCentroids: Int): Array[Array[Double]] = {
+    var cents = hyperplanes(dim, nCentroids).map(normalize)
+    for (_ <- 0 until IvfIters) {
       // recenter via posexplode + per-(centroid, dim) average. A round-6
       // experiment replaced this with `dim` avg columns in one aggregation
       // (guide §2.3 "aggregate before you shuffle") and measured SLOWER
@@ -225,10 +225,8 @@ object Similarity {
     * array) and call the pretrained overload per batch — equivalence is
     * spec-pinned (train-once/probe-twice == fused). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-              nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 2,
-              seed: Long = 42L): DataFrame =
-    ivfTopK(corpus, queries, k,
-      ivfCentroids(corpus, dim, nCentroids, iters, seed), nProbe)
+              nCentroids: Int = 16, nProbe: Int = 4): DataFrame =
+    ivfTopK(corpus, queries, k, ivfCentroids(corpus, dim, nCentroids), nProbe)
 
   /** IVF ANN top-k against PRETRAINED centroids (see [[ivfCentroids]]):
     * corpus bucketed by nearest centroid; each query probes its `nProbe`
@@ -260,28 +258,20 @@ object Similarity {
   }
 
   /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH-bucket
-    * self-join + exact verify (no cross product).
-    *
-    * `probes` > 0 reuses [[lshTopK]]'s hamming-order probe ladder on one
-    * side of the self-join: a near-but-not-identical duplicate whose
-    * signature differs in ≤h bits is a guaranteed candidate once `probes`
-    * covers hamming distance h (`probes >= Σ_{k<=h} C(bits,k)`), so recall
-    * for cos≈1 pairs that straddle a hyperplane is a knob, not luck.
-    * probes = 0 keeps exact-signature candidacy (identical vectors always
-    * collide — the gate parameterization).
+    * self-join + exact verify (no cross product). Candidates share the
+    * exact `bits`-bit signature: identical vectors always collide, and a
+    * near-duplicate whose signature differs in a straddled hyperplane is
+    * missed — fewer `bits` make that rarer at the price of larger buckets.
     *
     * Scale shape: the bucket self-join ships (bucket, key) ONLY; candidate
     * pairs are dedup'd before the embeddings are re-attached by two narrow
     * key joins for the exact verify. */
   def cosineDupPairs(corpus: DataFrame, keyCol: Column, threshold: Double,
-                     dim: Int, bits: Int = 10, seed: Long = 42L,
-                     probes: Int = 0): DataFrame = {
-    val planes = hyperplanes(dim, bits, seed)
+                     dim: Int, bits: Int = 10): DataFrame = {
+    val planes = hyperplanes(dim, bits)
     val c = corpus.select(keyCol.as("key"), col("embedding"))
       .withColumn("sig", lshSignature(col("embedding"), planes))
-    val probeCols = lit(0L) +: hammingFlips(bits, probes).map(lit(_))
-    val l = c.select(col("key").as("key_a"),
-      explode(array(probeCols.map(p => col("sig").bitwiseXOR(p)): _*)).as("bucket"))
+    val l = c.select(col("key").as("key_a"), col("sig").as("bucket"))
     val r = c.select(col("sig").as("bucket"), col("key").as("key_b"))
     val candidates = l.join(r, Seq("bucket"))
       .filter(col("key_a") < col("key_b"))

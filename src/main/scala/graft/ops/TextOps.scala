@@ -81,7 +81,7 @@ object TextOps {
     *
     * Executes as the codegen'd [[graft.exprs.WinnowFingerprints]] kernel —
     * one leaf call per row, immune to the projection-collapse blowup of the
-    * HOF pipeline below. */
+    * HOF pipeline it replaced (WinnowKernelSpec keeps that as its oracle). */
   def winnowedFingerprints(df: org.apache.spark.sql.DataFrame, text: Column,
                            out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame =
     df.withColumn(out, winnowedFingerprintsCol(text, k, w))
@@ -91,29 +91,6 @@ object TextOps {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.exprs.WinnowFingerprints(
       GraftBridge.expression(text), k, w))
-  }
-
-  /** The HOF pipeline the codegen'd kernel replaced — kept as the
-    * equivalence oracle (see WinnowKernelSpec). The intermediates must stay
-    * materialized as real attributes (withColumn steps): referencing them
-    * from inside the next step's lambda re-evaluates them PER ARRAY ELEMENT,
-    * and under Generate/join plans the optimizer re-inlines the whole tree
-    * into consumers anyway (measured: 315 s to explode 340 docs'
-    * fingerprints at sf0.01). Do not use on a scale path. */
-  private[graft] def winnowedFingerprintsHof(df: org.apache.spark.sql.DataFrame, text: Column,
-                                             out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame = {
-    require(k >= 2 && w >= 1, s"need k >= 2 and w >= 1, got k=$k w=$w")
-    val normCol = "__wf_norm"; val gramsCol = "__wf_grams"
-    df.withColumn(normCol, normalizedText(text))
-      // grams: for n < k the single window is substring(1, k) == the whole
-      // short string, so no special-casing is needed
-      .withColumn(gramsCol, transform(
-        sequence(lit(1), greatest(length(col(normCol)) - (k - 1), lit(1))),
-        i => xxhash64(substring(col(normCol), i, lit(k)))))
-      .withColumn(out, array_distinct(transform(
-        sequence(lit(1), greatest(size(col(gramsCol)) - (w - 1), lit(1))),
-        j => array_min(slice(col(gramsCol), j, lit(w))))))
-      .drop(normCol, gramsCol)
   }
 
   /** Language ID via stopword n-gram heuristic: per-language stopword hit

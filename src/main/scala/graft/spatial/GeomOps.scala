@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Way-geometry materialization and distance joins — the geometry layer the
@@ -160,93 +160,6 @@ object GeomOps {
         max(col("w_max_lat")).as("max_lat_e7"),
         min(col("w_min_lon")).as("min_lon_e7"),
         max(col("w_max_lon")).as("max_lon_e7"))
-  }
-
-  /** Stitch open way segments into closed rings (the multipolygon-assembly
-    * core, osmium's area::Assembler analog): repeatedly append the segment
-    * (forward or reversed) whose endpoint matches the current ring's open
-    * end, closing when head meets tail. Deterministic: segments are
-    * consumed in input order, ties broken by the lowest-index candidate.
-    * Returns (closed rings, number of unclosable CHAINS — a run of joined
-    * segments that never closed counts once). Pure driver/executor-side
-    * Scala over ONE relation's members — bounded per group, never a
-    * distributed step. */
-  def stitchRings(segments: Seq[Seq[(Double, Double)]])
-      : (Seq[Seq[(Double, Double)]], Int) = {
-    val segs = segments.filter(_.length >= 2).map(_.toVector).toBuffer
-    val rings = Seq.newBuilder[Seq[(Double, Double)]]
-    var leftovers = 0
-    while (segs.nonEmpty) {
-      var ring = segs.remove(0)
-      var open = true
-      var progress = true
-      while (open && progress) {
-        if (ring.head == ring.last && ring.length >= 4) {
-          rings += ring; open = false
-        } else {
-          val end = ring.last
-          val i = segs.indexWhere(s => s.head == end || s.last == end)
-          if (i >= 0) {
-            val s = segs.remove(i)
-            ring = ring ++ (if (s.head == end) s.tail else s.reverse.tail)
-          } else {
-            // tail is a dead end — try growing at the HEAD (a chain whose
-            // continuation attaches before the seed segment)
-            val start = ring.head
-            val j = segs.indexWhere(s => s.head == start || s.last == start)
-            if (j < 0) progress = false
-            else {
-              val s = segs.remove(j)
-              ring = (if (s.last == start) s.init else s.reverse.init) ++ ring
-            }
-          }
-        }
-      }
-      if (open) leftovers += 1 // unclosable chain: count it, drop it
-    }
-    (rings.result(), leftovers)
-  }
-
-  /** Multipolygon assembly over [[addLocations]] output: per relation,
-    * collect the member ways' resolved point sequences (ways with ANY
-    * unresolved ref are excluded — a gap makes the ring geometry
-    * undefined), stitch them into closed rings with [[stitchRings]], and
-    * report ring count, leftover count, and the exact-integer Σ|shoelace|
-    * over closed rings (E5 units, same fixed-point scheme as
-    * [[wayMetrics]]). The stitcher runs inside a UDF on one relation's
-    * collected members — the only per-group state, bounded by relation
-    * size, never a shuffle of the whole table. */
-  def assembleMultipolygons(view: DataFrame, geoms: DataFrame): DataFrame = {
-    val m = view.filter(col("type") === "relation")
-      .select(col("id").as("rel_id"), posexplode(col("members")))
-      .filter(col("col").getField("mtype") === "way")
-      .select(col("rel_id"), col("pos"), col("col").getField("ref").as("mref"))
-    val fullyResolved = geoms
-      .filter(col("n_refs") === col("n_resolved") && col("n_refs") >= 2)
-      .select(col("way_id").as("mref"),
-        transform(col("pts"), p =>
-          array(round(p.getField("lat") * 1e7).cast("long"),
-            round(p.getField("lon") * 1e7).cast("long"))).as("seg"))
-    val collected = m.join(fullyResolved, Seq("mref"))
-      .groupBy("rel_id")
-      .agg(sort_array(collect_list(struct(col("pos"), col("seg")))).as("segs"))
-    val stitch = udf { (segs: Seq[Row]) =>
-      val seqs = segs.map(_.getSeq[scala.collection.Seq[Long]](1)
-        .map(p => (p(0).toDouble, p(1).toDouble)).toSeq)
-      val (rings, leftover) = stitchRings(seqs)
-      val area2E5 = rings.map { ring =>
-        val xs = ring.map(p => math.round(p._2) / 100)
-        val ys = ring.map(p => math.round(p._1) / 100)
-        math.abs((0 until xs.size - 1).map(i =>
-          xs(i) * ys(i + 1) - xs(i + 1) * ys(i)).sum)
-      }.sum
-      (rings.size, leftover, area2E5)
-    }
-    collected
-      .withColumn("mp", stitch(col("segs")))
-      .select(col("rel_id"),
-        col("mp._1").as("n_rings"), col("mp._2").as("n_leftover"),
-        col("mp._3").as("rings_area2_e5"))
   }
 
   // --- distance join ---------------------------------------------------------

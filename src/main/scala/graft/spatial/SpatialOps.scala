@@ -352,7 +352,7 @@ object SpatialOps {
     * candidate distance is ≤ a LOWER BOUND on the distance to the uncovered
     * region's boundary (≥ k candidates alone does NOT imply the true k
     * nearest are inside the rings). Queries the first pass cannot certify
-    * retry with the ring radius widened ×4, up to `widenSteps` times —
+    * retry with the ring radius widened ×4, up to twice —
     * each retry is another cell-join over a SHRINKING query set, so a skewed
     * query batch never forces a full-corpus cross join just because a few
     * queries sit in sparse regions; only queries still uncertified after the
@@ -363,7 +363,7 @@ object SpatialOps {
   def knn(points: DataFrame, queries: DataFrame, k: Int,
           level: Int = 10, maxRing: Int = 2,
           metric: SpatialMetric = HaversineMetric,
-          tieBreak: String = "doc_id", widenSteps: Int = 2): DataFrame = {
+          tieBreak: String = "doc_id"): DataFrame = {
     val pCells = points.withColumn("cell", cellId(col("lat"), col("lon"), level))
     val dist = metric.dist(col("qlat"), col("qlon"), col("lat"), col("lon"))
 
@@ -413,7 +413,7 @@ object SpatialOps {
     val pieces = Seq.newBuilder[DataFrame]
     var step = 0
     var allSatisfied = false
-    while (step <= widenSteps && !allSatisfied) {
+    while (step <= KnnWidenSteps && !allSatisfied) {
       val (topk, unsatRaw) = attempt(remaining, ring)
       val unsat = unsatRaw.localCheckpoint() // small; truncates step lineage
       if (unsat.isEmpty) {
@@ -441,6 +441,9 @@ object SpatialOps {
     }
     pieces.result().reduce(_ unionByName _)
   }
+
+  /** Ring widenings [[knn]] tries before its exact fallback. */
+  private val KnnWidenSteps = 2
 
   // --- raster ↔ vector ---------------------------------------------------------------
 

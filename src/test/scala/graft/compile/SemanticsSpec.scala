@@ -161,8 +161,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("pretty print collapses consecutive duplicate list values like IdSetSmall") {
-    import graft.ofl.Pretty
-    assert(Pretty.printNoTrailingNewline(Parser.parse("@id in (5, 5, 3, 5)")) ===
+    assert(graft.ofl.ParserGoldenSpec.tree(Parser.parse("@id in (5, 5, 3, 5)")) ===
       "IN_INT_LIST[in]\n INT_ATTR[id]\n VALUES[5, 3, 5]")
   }
 

@@ -38,6 +38,20 @@ class MainCliSpec extends AnyFunSuite {
     }
   }
 
+  test("a bad --parts value is refused with exit code 2") {
+    Seq("x", "0", "-3").foreach { v =>
+      val (exit, out) = main("-e", "@node", "--checkpoint", "ck", "--parts", v, input)
+      assert(exit === 2, s"--parts $v: $out")
+      assert(out.contains(s"--parts needs a positive integer, got '$v'"), out)
+    }
+  }
+
+  test("an unknown -f output format is refused with exit code 2") {
+    val (exit, out) = main("-e", "@node", "-o", "out", "-f", "xml", input)
+    assert(exit === 2, out)
+    assert(out.contains("unsupported output format 'xml' (parquet|json|csv)"), out)
+  }
+
   test("a parse error prints the expression with a caret under the error") {
     val (exit, out) = main("-e", "true ^", input)
     assert(exit === 1, out)

@@ -272,7 +272,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val queries = Seq((1L, 48.85, 2.35)).toDF("query_id", "lat", "lon")
     // k above the node count certifies nothing, so the returned plan holds
     // the brute fallback's rank (the ring pass's is behind its checkpoint)
-    val windows = SpatialOps.knn(nodes, queries, k = 1000000, widenSteps = 0)
+    val windows = SpatialOps.knn(nodes, queries, k = 1000000)
       .queryExecution.optimizedPlan.collect { case w: Window => w }
     // a computed partition key is projected below its Window as an alias
     def keys(w: Window): Seq[String] = {

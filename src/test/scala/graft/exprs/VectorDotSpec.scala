@@ -22,9 +22,9 @@ class VectorDotSpec extends AnyFunSuite {
         .select(col("vec_id").as("qid"), col("embedding").as("b"))))
     val got = pairs.select(
       Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.dotHof(col("a"), col("b")).as("d0"),
+      VectorDotSpec.dotHof(col("a"), col("b")).as("d0"),
       Similarity.norm(col("a")).as("n"),
-      Similarity.normHof(col("a")).as("n0")).collect()
+      VectorDotSpec.normHof(col("a")).as("n0")).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       // exact ==: the kernel must reproduce the float-multiply-then-widen
@@ -39,11 +39,11 @@ class VectorDotSpec extends AnyFunSuite {
     val planeLit = array(planes(0).map(lit): _*)
     val got = embeddings.select(
       Similarity.dot(col("embedding"), planeLit).as("d"),
-      Similarity.dotHof(col("embedding"), planeLit).as("d0")).collect()
+      VectorDotSpec.dotHof(col("embedding"), planeLit).as("d0")).collect()
     got.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
     // and the full signature column equals the pre-kernel formulation
     val hofSig = planes.zipWithIndex.map { case (p, i) =>
-      when(Similarity.dotHof(col("embedding"), array(p.map(lit): _*)) > 0,
+      when(VectorDotSpec.dotHof(col("embedding"), array(p.map(lit): _*)) > 0,
         shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
     val sigs = embeddings.select(
@@ -58,7 +58,7 @@ class VectorDotSpec extends AnyFunSuite {
       (Seq.empty[Float], Seq.empty[Float])       // both empty
     ).toDF("a", "b")
     val rows = df.select(Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.dotHof(col("a"), col("b")).as("d0")).collect()
+      VectorDotSpec.dotHof(col("a"), col("b")).as("d0")).collect()
     assert(rows(0).isNullAt(0) && rows(0).isNullAt(1), "mismatch must be null")
     assert(rows(1).getDouble(0) === 0.0 && rows(1).getDouble(1) === 0.0)
     val withNull = spark.sql(
@@ -89,4 +89,16 @@ class VectorDotSpec extends AnyFunSuite {
     assert(!cg.contains("(Expression) references"),
       "CodegenFallback present in the brute top-k codegen")
   }
+}
+
+object VectorDotSpec {
+  import org.apache.spark.sql.Column
+
+  /** The HOF composition VectorDot replaces — the equivalence oracle
+    * (CodegenFallback). */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
+
+  def normHof(a: Column): Column =
+    sqrt(aggregate(a, lit(0.0d), (acc, v) => acc + v * v))
 }

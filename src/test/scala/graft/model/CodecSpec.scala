@@ -126,7 +126,10 @@ class CodecSpec extends AnyFunSuite {
       1 -> Gen.oneOf("", "t", "ty", "tags", "i", "Id", "versions", "lat ", "x")
         .map(Span(_, "1", null, 0)),
       // a null kind is no kind: the span is skipped, as in the HOF filter
-      1 -> Gen.oneOf("highway=primary", "1", "w/1/r").map(Span(null, _, null, 0)))
+      1 -> Gen.oneOf("highway=primary", "1", "w/1/r").map(Span(null, _, null, 0)),
+      // an array span without its payload carries no element: skipped too
+      1 -> Gen.oneOf(Span("tag", null, null, 0), Span("nd", null, null, 0),
+        Span("member", null, null, 0), Span("media", "", null, 0)))
     val spans = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, span))
     val params = Gen.Parameters.default
     val rows = (1L to 300L).map(i =>

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TestsTxtCorpusSpec extends AnyFunSuite {
 
   private def tree(src: String): String =
-    Pretty.printNoTrailingNewline(Parser.parse(src))
+    ParserGoldenSpec.tree(Parser.parse(src))
 
   test("valid tests.txt lines parse to the expected trees") {
     // tests.txt:6-14 — quoting and whitespace forms of has-key

@@ -102,26 +102,48 @@ class OpsSpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("winnowed prefilter keeps qualifying pairs when shared fingerprints are partly HOT") {
-    // boilerplate BP appears in all 20 docs (hot once maxDocFreq < 20);
-    // docs 100/101 additionally share a long unique passage → their overlap
-    // is 1.0 from BOTH rare and hot fingerprints. The prefilter bound
-    // (shared_rare + min(n_hot)) must not drop them; docs sharing ONLY the
-    // boilerplate must stay non-candidates (no rare shared fingerprint).
+  /** Boilerplate BP appears in all 20 docs (hot once maxDocFreq < 20);
+    * docs 100/101 additionally share a long unique passage, so their
+    * overlap is 1.0 from BOTH rare and hot fingerprints. */
+  private lazy val partlyHotDocs = {
     val bp = "standard license header boilerplate that every file carries verbatim"
     val uniq = "zephyr quixotic jumbled vortex phrases making a long unique shared passage"
-    val docs = ((0 until 18).map { i =>
+    ((0 until 18).map { i =>
       val rng = new scala.util.Random(4000 + i)
       val own = Seq.fill(12)(rng.alphanumeric.take(9).mkString).mkString(" ")
       (i.toLong, s"$bp $own")
     } ++
       Seq((100L, s"$bp $uniq"), (101L, s"$bp $uniq"))).toDF("doc_id", "text")
-    val pairs = Dedup.winnowedDupPairs(docs, col("text"), col("doc_id"),
+  }
+
+  test("winnowed prefilter keeps qualifying pairs when shared fingerprints are partly HOT") {
+    // The prefilter bound (shared_rare + min(n_hot)) must not drop the
+    // 100/101 pair; docs sharing ONLY the boilerplate must stay
+    // non-candidates (no rare shared fingerprint).
+    val pairs = Dedup.winnowedDupPairs(partlyHotDocs, col("text"), col("doc_id"),
       k = 8, w = 4, threshold = 0.9, maxDocFreq = 5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getAs[Double]("overlap"))).toMap
     assert(pairs.get((100L, 101L)).contains(1.0), s"hot+rare pair dropped: $pairs")
     assert(pairs.keySet === Set((100L, 101L)),
       "boilerplate-only overlaps must not pair (no rare shared fingerprint)")
+  }
+
+  test("winnowed shuffle-join fallback returns the broadcast-retain branch's pairs") {
+    val (fmat, dfT) = Dedup.winnowTables(partlyHotDocs, col("text"), col("doc_id"), k = 8, w = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    // maxDocFreq = 100 leaves no fingerprint hot, so the boilerplate pairs
+    // every doc
+    Seq((0.9, 5), (0.3, 5), (0.3, 100)).foreach { case (threshold, maxDocFreq) =>
+      val retained = rows(Dedup.retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq))
+      val joined = rows(Dedup.joinedWinnowPairs(fmat, dfT, threshold, maxDocFreq))
+      assert(joined === retained, s"threshold $threshold, maxDocFreq $maxDocFreq")
+      assert(retained.exists(r => (r._1, r._2) == ((100L, 101L))), retained)
+    }
+    // the default path at this size is the retain branch
+    assert(rows(Dedup.winnowedDupPairs(partlyHotDocs, col("text"), col("doc_id"),
+      k = 8, w = 4, threshold = 0.9, maxDocFreq = 5)) ===
+      rows(Dedup.retainedWinnowPairs(fmat, dfT, 0.9, maxDocFreq = 5)))
   }
 
   test("winnow verify tail broadcasts attached fingerprints under a byte cap") {
@@ -209,7 +231,7 @@ class OpsSpec extends AnyFunSuite {
   test("distributed simhashDF equals the HOF simhash column") {
     val sample = documents.select("doc_id", "text").limit(100)
     val hof = sample.select(col("doc_id"),
-      Dedup.simhash(col("text")).as("sim"))
+      OpsSpec.simhashHof(col("text")).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dist = Dedup.simhashDF(sample, col("text"), col("doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -347,9 +369,9 @@ class OpsSpec extends AnyFunSuite {
     val pairs = edges.toDF("key_a", "key_b").union(nullEdges.toDF("key_a", "key_b"))
     val clusters = Dedup.dupClusters(pairs)
     val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // both paths must agree: the guarded driver union-find (default at this
-    // size) and the distributed label-propagation loop (guard forced to 0)
-    val gotDistributed = Dedup.dupClusters(pairs, maxDriverEdges = 0L)
+    // both branches must agree: the guarded driver union-find (taken at this
+    // size) and the distributed label-propagation loop
+    val gotDistributed = Dedup.propagatedClusters(Dedup.clusterEdges(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === gotDistributed)
     // driver-side union-find ground truth (attach larger root under smaller,
@@ -395,57 +417,6 @@ class OpsSpec extends AnyFunSuite {
     val got = Similarity.bruteTopK(corpus, queries, 10)
       .orderBy("rn").collect().map(_.getAs[Long]("vec_id"))
     assert(got.toSeq === (0 until 10).map(_ * 64L), "tie-break by vec_id over one salt group")
-  }
-
-  test("cosineDupPairs multi-probe recovers a straddling near-dup that probes=0 misses") {
-    val dim = 32; val bits = 8
-    val planes = Similarity.hyperplanes(dim, bits) // same seed the op uses
-    // exact replica of lshSignature's arithmetic (dotFD: float→double
-    // promote, sequential accumulate), so the construction below predicts
-    // the op's buckets precisely
-    def scores(v: Array[Float]): Array[Double] = planes.map { p =>
-      var acc = 0.0; var j = 0
-      while (j < dim) { acc += v(j).toDouble * p(j); j += 1 }
-      acc
-    }
-    def sig(v: Array[Float]): Long =
-      scores(v).zipWithIndex.map { case (s, i) => if (s > 0) 1L << i else 0L }.sum
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / math.sqrt(na * nb)
-    }
-    // search seeded perturbations for a pair with cos >= 0.999 whose
-    // signatures differ in EXACTLY one bit (one straddled hyperplane)
-    val pair = (0 until 500).iterator.flatMap { s =>
-      val rng = new scala.util.Random(1000 + s)
-      val v = Array.fill(dim)(rng.nextGaussian().toFloat)
-      val sc = scores(v)
-      val j = sc.indices.minBy(i => math.abs(sc(i)))
-      val pj = planes(j); val pn2 = pj.map(x => x * x).sum
-      (1 to 20).iterator.map { t =>
-        val delta = -sc(j) / pn2 * (1.0 + 0.05 * t)
-        (v, v.indices.map(i => (v(i) + delta * pj(i)).toFloat).toArray)
-      }.find { case (a, b) =>
-        java.lang.Long.bitCount(sig(a) ^ sig(b)) == 1 && cos(a, b) >= 0.999 }
-    }.buffered.headOption
-    assert(pair.isDefined, "no straddling near-dup found in the search budget")
-    val (v, w) = pair.get
-    val filler = (0 until 50).map { i =>
-      val rng = new scala.util.Random(9000 + i)
-      (100L + i, Array.fill(dim)(rng.nextGaussian().toFloat).toSeq)
-    }
-    val corpus = (Seq((1L, v.toSeq), (2L, w.toSeq)) ++ filler)
-      .toDF("vec_id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    def pairsAt(probes: Int): Set[(Long, Long)] =
-      Similarity.cosineDupPairs(corpus, col("vec_id"), 0.999, dim = dim,
-        bits = bits, probes = probes)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!pairsAt(0).contains((1L, 2L)),
-      "probes=0 should miss the straddling pair (buckets differ by 1 bit)")
-    assert(pairsAt(bits).contains((1L, 2L)),
-      "probes=bits must cover every 1-bit-distant bucket")
   }
 
   test("header codecs parse real PNG/JPEG dimensions; non-images fall back to the stub") {
@@ -701,5 +672,25 @@ class OpsSpec extends AnyFunSuite {
     assert(frames.sortBy(f => (f.doc_id, f.media_ref, f.frame_idx)).toSeq ===
       Multimodal.sampleFramesReal(media).collect()
         .sortBy(f => (f.doc_id, f.media_ref, f.frame_idx)).toSeq, "deterministic sampling")
+  }
+}
+
+object OpsSpec {
+  import org.apache.spark.sql.Column
+
+  /** 64-bit SimHash over word tokens, pure Columns — the HOF oracle of
+    * [[Dedup.simhashDF]]'s kernel: per-bit majority vote of token hashes,
+    * built with 64 aggregate() passes folded into one projection. bit b of
+    * the result = 1 iff Σ_tokens sign(bit b of hash(token)) > 0. */
+  def simhashHof(text: Column): Column = {
+    val tokens = filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+    val hashes = transform(tokens, t => xxhash64(t))
+    val bits = (0 until 64).map { b =>
+      val votes = aggregate(hashes, lit(0L),
+        (acc, h) => acc + when(shiftrightunsigned(h, b).bitwiseAND(lit(1L)) === 1L,
+          lit(1L)).otherwise(lit(-1L)))
+      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
+    }
+    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 }

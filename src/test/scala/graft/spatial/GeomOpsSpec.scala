@@ -186,48 +186,6 @@ class GeomOpsSpec extends AnyFunSuite {
     assert(g(102L, "sum_path_e7") === Some(0L) && g(102L, "min_lat_e7") === None)
   }
 
-  test("stitchRings: halves, reversal, multiple rings, leftovers") {
-    val a = (0.0, 0.0); val b = (0.0, 1.0); val c = (1.0, 1.0); val d = (1.0, 0.0)
-    // two half-squares, second needs reversal
-    val (r1, l1) = GeomOps.stitchRings(Seq(Seq(a, b, c), Seq(a, d, c)))
-    assert(r1.size === 1 && l1 === 0)
-    assert(r1.head.head === r1.head.last && r1.head.length === 5)
-    // an already-closed ring plus an unclosable dangling segment
-    val (r2, l2) = GeomOps.stitchRings(Seq(Seq(a, b, c, d, a), Seq((5.0, 5.0), (6.0, 6.0))))
-    assert(r2.size === 1 && l2 === 1)
-    // two disjoint closed rings from four halves
-    val e = (9.0, 9.0); val f = (9.0, 8.0); val g = (8.0, 8.0)
-    val (r3, l3) = GeomOps.stitchRings(
-      Seq(Seq(a, b, c), Seq(c, d, a), Seq(e, f, g), Seq(g, e)))
-    assert(r3.size === 2 && l3 === 0)
-    // empty / degenerate input
-    assert(GeomOps.stitchRings(Nil) === ((Nil, 0)))
-    assert(GeomOps.stitchRings(Seq(Seq(a))) === ((Nil, 0)))
-  }
-
-  test("assembleMultipolygons: stitched square area, gaps excluded") {
-    val view = viewWithRels(
-      nodes = Seq((1L, 0.0, 0.0), (2L, 0.0, 1.0), (3L, 1.0, 1.0), (4L, 1.0, 0.0),
-        (5L, 5.0, 5.0)),
-      ways = Seq(
-        (10L, Seq(1L, 2L, 3L)),   // half square
-        (11L, Seq(3L, 4L, 1L)),   // other half
-        (12L, Seq(5L, 99L)),      // has an unresolved ref -> excluded
-        (13L, Seq(5L, 1L))),      // resolvable dangling chain
-      rels = Seq(
-        (200L, Seq(("way", 10L, "outer"), ("way", 11L, "outer"))),
-        (201L, Seq(("way", 10L, "outer"), ("way", 12L, "outer"), ("way", 13L, "outer")))))
-    val geoms = GeomOps.addLocations(view)
-    val out = GeomOps.assembleMultipolygons(view, geoms).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    // unit square: |shoelace| in E5 units = 2 * 1deg^2 = 2e10
-    assert(out(200L).getInt(1) === 1 && out(200L).getInt(2) === 0)
-    assert(out(200L).getLong(3) === 2L * 100000L * 100000L)
-    // rel 201: way 12 excluded (gap); ways 10+13 chain but cannot close
-    assert(out(201L).getInt(1) === 0 && out(201L).getInt(2) === 1)
-    assert(out(201L).getLong(3) === 0L)
-  }
-
   // --- distance joins -----------------------------------------------------------
 
   /** Clustered + scattered + adversarial points (antimeridian straddle,

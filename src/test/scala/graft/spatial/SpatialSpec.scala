@@ -221,15 +221,15 @@ class SpatialSpec extends AnyFunSuite {
     val got = df.select("doc_id").collect().map(_.getString(0)).toSet
     assert(got === Set("near1", "near2"), got.toString)
 
-    // and with widening disabled, the exact fallback still guarantees the
-    // same (correct) answer via the cross join
-    val df0 = SpatialOps.knn(ptsDF, queryDF, k = 2, level = level, maxRing = 2,
-      metric = SpatialOps.PlanarDegrees2Metric, widenSteps = 0)
+    // and a query no widening can certify (k above the point count) still
+    // gets the correct answer from the exact fallback's cross join
+    val df0 = SpatialOps.knn(ptsDF, queryDF, k = pts.size + 1, level = level,
+      maxRing = 2, metric = SpatialOps.PlanarDegrees2Metric)
     val plan0 = df0.queryExecution.executedPlan.toString
     assert(plan0.contains("CartesianProduct") ||
       plan0.contains("BroadcastNestedLoopJoin"), plan0)
     assert(df0.select("doc_id").collect().map(_.getString(0)).toSet ===
-      Set("near1", "near2"))
+      pts.map(_._1).toSet)
   }
 
   test("tile join equals brute-force parent-cell assignment") {
