@@ -542,9 +542,7 @@ object Queries {
         .orderBy("window_start", "event_type")
     },
 
-    // batch execution of the sessionization kernel (the splitSessions logic
-    // the streaming flatMapGroupsWithState handler runs — one definition,
-    // spec-pinned equal): per-user gap-separated sessions, DuckDB
+    // batch sessionization: per-user gap-separated sessions, DuckDB
     // gaps-and-islands oracle. Times flow as epoch MILLIS both sides (the
     // kernel's Timestamp.getTime floors the fixture's µs timestamps to ms,
     // and the oracle's epoch_ms floors identically — the gap comparison

@@ -24,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * passes, and [[DecodeMerge]] folds the decodes a projection keeps into
   * one. Semantics per field are identical to the HOF derivation (absent
   * header span or null header text ⇒ null; a span with a null kind, a
-  * tag/nd/member span with null text and a media span with a null
-  * `media_ref` are skipped, so array elements are never null) and
-  * equivalence is tested against it.
+  * tag/nd/member span with null text, a member span whose text has fewer
+  * than two '/' and a media span with a null `media_ref` are skipped, so
+  * array elements are never null) and equivalence is tested against it.
   */
 case class DecodeOsmSpans(child: Expression, mask: Int = SpanDecode.AllFields)
   extends UnaryExpression {
@@ -187,14 +187,17 @@ object SpanDecode {
             val t = if (members != null) span.getUTF8String(1) else null
             if (t != null) {
               val b = t.clone().getBytes
+              val nb = b.length
               var a = 0
-              while (b(a) != '/') a += 1
+              while (a < nb && b(a) != '/') a += 1
               var c = a + 1
-              while (b(c) != '/') c += 1
-              members.add(new GenericInternalRow(Array[Any](
-                UTF8String.fromBytes(b, 0, a),
-                UTF8String.fromBytes(b, a + 1, c - a - 1).toLongExact(),
-                UTF8String.fromBytes(b, c + 1, b.length - c - 1))))
+              while (c < nb && b(c) != '/') c += 1
+              // text without two '/' carries no (mtype, ref, role): skipped
+              if (c < nb)
+                members.add(new GenericInternalRow(Array[Any](
+                  UTF8String.fromBytes(b, 0, a),
+                  UTF8String.fromBytes(b, a + 1, c - a - 1).toLongExact(),
+                  UTF8String.fromBytes(b, c + 1, nb - c - 1))))
             }
           } else if (kind.equals(K_MEDIA)) {
             // copy: the input row buffer may be reused by the upstream iterator

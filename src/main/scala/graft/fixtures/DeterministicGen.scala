@@ -296,15 +296,4 @@ object DeterministicGen {
       RasterTile(c, level, payload)
     }
   }
-
-  /** Ids for the `in (<'file')` fixture — a mix of present and absent ids,
-    * whitespace-separated like the reference reads (hpp:1505-1511). */
-  def idListFile(sf: Double, path: java.nio.file.Path, seed: Long = Seed): Unit = {
-    val rng = new Random(seed + 3)
-    val els = elements(sf, seed)
-    val some = els.filter(_ => rng.nextDouble() < 0.2).map(_.id)
-    val absent = Vector.fill(some.size / 4)(9000000L + rng.nextInt(100000))
-    val all = rng.shuffle(some ++ absent)
-    java.nio.file.Files.writeString(path, all.mkString(" \n"))
-  }
 }

@@ -77,7 +77,8 @@ object OsmView {
     val hasType = docs.columns.contains("type")
     val hasSeq = docs.columns.contains("seq")
     // array spans without their payload (null text, null media_ref) carry
-    // no element: they are dropped, as the decode skips them
+    // no element: they are dropped, as the decode skips them; so are member
+    // spans whose text has fewer than two '/'
     def spansOf(kind: String, payload: String = "text"): Column =
       filter(col("spans"), s => s.getField("kind") === kind && s.getField(payload).isNotNull)
     val tagSpans = spansOf("tag")
@@ -107,7 +108,7 @@ object OsmView {
         spansOf("nd"),
         s => s.getField("text").cast("long")).as("nds"),
       transform(
-        spansOf("member"),
+        filter(spansOf("member"), s => size(split(s.getField("text"), "/", 3)) === 3),
         s => {
           val parts = split(s.getField("text"), "/", 3)
           struct(

@@ -54,10 +54,9 @@ object Dedup {
   }
 
   /** Per-band hashes of a minhash signature: band b hashes signature slots
-    * [b·perBand, (b+1)·perBand) with the band index as seed. Shared by the
-    * batch LSH join and the streaming near-dup state operator so their
-    * banding is identical by construction. */
-  private[graft] def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
+    * [b·perBand, (b+1)·perBand) with the band index as seed — the bucket
+    * keys of [[minhashDupPairs]]' band self-join. */
+  private def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
     require(bands * (numHashes / bands) == numHashes, "bands must divide numHashes")
     val perBand = numHashes / bands
     transform(sequence(lit(0), lit(bands - 1)),
@@ -398,9 +397,8 @@ object Dedup {
     // smaller than the text the old plan re-derived per branch, and all
     // consumers below (df table, candidate join, stats, verify) read it
     // instead of re-running the kernel.
-    val fmat = TextOps.winnowedFingerprints(
-      docs.select(keyCol.as("key"), textCol.as("__text")),
-      col("__text"), "fps", k, w)
+    val fmat = docs.select(keyCol.as("key"), textCol.as("__text"))
+      .withColumn("fps", TextOps.winnowedFingerprints(col("__text"), k, w))
       .select(col("key"), size(col("fps")).as("nt"), col("fps"))
       .localCheckpoint(true)
     // Document frequency as a hash AGGREGATION, keeping only df >= 2 — the

@@ -68,8 +68,8 @@ object TextOps {
   /** Winnowed document fingerprints (the MOSS scheme, Schleimer/Wilkerson/
     * Aiken 2003): hash every k-char gram of the normalized text, then keep
     * the MINIMUM hash of each window of `w` consecutive grams, dedup'd, as
-    * a new array column `out`. GUARANTEE: two documents sharing any
-    * substring of length ≥ w + k − 1 share at least one fingerprint — the
+    * an array column. GUARANTEE: two documents sharing any substring of
+    * length ≥ w + k − 1 share at least one fingerprint — the
     * local near-dup/provenance primitive, robust to insertions/deletions in
     * a way whole-doc hashing is not. Per-gram hashing is xxhash64 over the
     * substring: the classic Rabin-Karp ROLLING update is a sequential
@@ -82,12 +82,7 @@ object TextOps {
     * Executes as the codegen'd [[graft.exprs.WinnowFingerprints]] kernel —
     * one leaf call per row, immune to the projection-collapse blowup of the
     * HOF pipeline it replaced (WinnowKernelSpec keeps that as its oracle). */
-  def winnowedFingerprints(df: org.apache.spark.sql.DataFrame, text: Column,
-                           out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame =
-    df.withColumn(out, winnowedFingerprintsCol(text, k, w))
-
-  /** Column form of [[winnowedFingerprints]]. */
-  def winnowedFingerprintsCol(text: Column, k: Int = 8, w: Int = 4): Column = {
+  def winnowedFingerprints(text: Column, k: Int = 8, w: Int = 4): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.exprs.WinnowFingerprints(
       GraftBridge.expression(text), k, w))

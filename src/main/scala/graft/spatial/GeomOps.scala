@@ -31,9 +31,7 @@ import org.apache.spark.sql.functions._
   * as 1e7-scaled ints) so the DuckDB gate compares BIGINTs, not
   * trig-library floats: bbox, Manhattan path length, and the shoelace
   * cross-product sum for closed rings (1e5 scale keeps every term below
-  * 2^63). [[wayLengthMeters]] is the production haversine length —
-  * float-valued, spec-tested against a driver-side reference instead of
-  * hash-gated.
+  * 2^63).
   */
 object GeomOps {
 
@@ -103,22 +101,6 @@ object GeomOps {
       array_max(col("lo")).as("max_lon_e7"),
       pathE7.as("path_e7"),
       when(isClosed, abs(shoelace)).otherwise(lit(null).cast("long")).as("area2_e5"))
-  }
-
-  /** Production path length: haversine meters summed over consecutive
-    * resolved points. Float-valued — verified by GeomOpsSpec against a
-    * driver-side reference, not hash-gated. */
-  def wayLengthMeters(geoms: DataFrame): DataFrame = {
-    val resolved = filter(col("pts"), p => p.getField("lat").isNotNull)
-    val base = geoms.withColumn("rp", resolved)
-    val n = size(col("rp"))
-    val len = when(n >= 2,
-      aggregate(sequence(lit(1), n - 1), lit(0.0), (acc, i) =>
-        acc + SpatialOps.haversineMeters(
-          get(col("rp"), i - 1).getField("lat"), get(col("rp"), i - 1).getField("lon"),
-          get(col("rp"), i).getField("lat"), get(col("rp"), i).getField("lon"))))
-      .otherwise(lit(0.0))
-    base.select(col("way_id"), col("n_resolved"), len.as("length_m"))
   }
 
   // --- relation geometry -------------------------------------------------------

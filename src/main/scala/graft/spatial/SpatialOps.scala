@@ -98,18 +98,23 @@ object SpatialOps {
 
   /** Multi-level tile-density pyramid in ONE pass — the rollup a tiling
     * engine builds before serving (zoom z densities for z ∈ [minLevel,
-    * maxLevel]). Each point explodes to its cell at every level, then one
-    * hash aggregation: equivalent to `maxLevel − minLevel + 1` separate
-    * [[cellDensity]] jobs but reads and shuffles the input ONCE, and
-    * map-side partial aggregation collapses the per-level duplication
-    * before the exchange (cells per partition, not rows × levels). The
-    * level rides in the cell value's low 5 bits, so one output column
-    * serves every zoom. */
+    * maxLevel]). Each point is encoded once at `maxLevel`, explodes to that
+    * cell's [[cellParent]] shift at every level, then one hash aggregation:
+    * equivalent to `maxLevel − minLevel + 1` separate [[cellDensity]] jobs
+    * but reads and shuffles the input ONCE, and map-side partial
+    * aggregation collapses the per-level duplication before the exchange
+    * (cells per partition, not rows × levels). The level rides in the cell
+    * value's low 5 bits, so one output column serves every zoom.
+    *
+    * The encoder sits in its own projection below the explode: one Z
+    * encoder per level, or the encoder inlined into each shift, generates
+    * a method past the JVM's 64 KB limit at 4+ levels. */
   def tilePyramid(points: DataFrame, minLevel: Int, maxLevel: Int): DataFrame = {
     require(0 <= minLevel && minLevel <= maxLevel && maxLevel <= ZCell.MaxLevel)
     val cells = array((minLevel to maxLevel)
-      .map(l => cellId(col("lat"), col("lon"), l)): _*)
-    points.select(explode(cells).as("cell"))
+      .map(l => cellParent(col("__fine"), maxLevel, l)): _*)
+    points.select(cellId(col("lat"), col("lon"), maxLevel).as("__fine"))
+      .select(explode(cells).as("cell"))
       .groupBy("cell").agg(count(lit(1)).as("n"))
   }
 

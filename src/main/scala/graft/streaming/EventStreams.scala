@@ -3,15 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming operators over the `events` stream table
-  * (event_id, ts, user_id, event_type, value, props): event-time windowed
-  * aggregation with a watermark, and custom sessionization state via
-  * flatMapGroupsWithState — the streaming shapes a training-data ingest
-  * pipeline needs (late-data bounding, per-key state with timeout).
-  * windowedCounts works batch or stream; sessionize is streaming-only
-  * (its sessions emit on event-time timeouts). */
+/** Operators over the `events` table (event_id, ts, user_id, event_type,
+  * value, props): event-time windowed aggregation with a watermark, which
+  * runs batch or on a `readStream` frame, and batch sessionization. */
 object EventStreams {
 
   /** Tumbling event-time counts per event_type with a watermark bounding
@@ -27,19 +22,14 @@ object EventStreams {
 
   final case class EventRow(event_id: Long, ts: Timestamp, user_id: Long,
                             event_type: String, value: Double)
-  final case class EventBuffer(events: Vector[(Long, Double)])
   final case class UserSession(user_id: Long, session_start: Timestamp,
                                session_end: Timestamp, n_events: Int,
                                total_value: Double)
 
-  /** The sessionization kernel shared by the streaming and batch paths:
-    * splits a user's (epochMs, value) events — sorted here — into
-    * gap-separated sessions. One definition, so the batch gate
-    * (`events_sessions`, DuckDB gaps-and-islands oracle) attests the same
-    * splitting logic the streaming timeout handler runs. */
-  private[streaming] def splitSessions(userId: Long,
-                                       events: Seq[(Long, Double)],
-                                       gapMs: Long): Vector[UserSession] = {
+  /** Splits a user's (epochMs, value) events — sorted here — into
+    * gap-separated sessions. */
+  private def splitSessions(userId: Long, events: Seq[(Long, Double)],
+                            gapMs: Long): Vector[UserSession] = {
     val sorted = events.sortBy(_._1)
     val sessions = Vector.newBuilder[UserSession]
     var cur = Vector.empty[(Long, Double)]
@@ -54,12 +44,11 @@ object EventStreams {
     sessions.result()
   }
 
-  /** Batch sessionization: the same [[splitSessions]] kernel over complete
-    * per-user groups (no state, no timeouts — in batch all events are
-    * final, so a plain groupByKey suffices). Partitioning: one shuffle on
-    * user_id; per-key memory is one user's history, the same bound a
-    * gaps-and-islands window query would carry. Oracle-checked
-    * (`events_sessions`); equality with the streaming path is spec-pinned. */
+  /** Per-user sessionization with an inactivity gap over complete per-user
+    * groups: in batch all events are final, so a plain groupByKey suffices
+    * (no state, no timeouts). Partitioning: one shuffle on user_id; per-key
+    * memory is one user's history, the same bound a gaps-and-islands
+    * window query would carry. Oracle-checked (`events_sessions`). */
   def sessionizeBatch(events: Dataset[EventRow], gapMs: Long = 30 * 60 * 1000L)
   : Dataset[UserSession] = {
     val spark = events.sparkSession
@@ -68,41 +57,6 @@ object EventStreams {
       .flatMapGroups { (userId: Long, rows: Iterator[EventRow]) =>
         splitSessions(userId, rows.map(e => (e.ts.getTime, e.value)).toVector,
           gapMs).iterator
-      }
-  }
-
-  /** Per-user sessionization with an inactivity gap, STREAMING ONLY (batch
-    * execution never fires timeouts, so trailing sessions would be lost —
-    * callers must `writeStream`; batch callers use [[sessionizeBatch]]).
-    * Events buffer in per-key state and are
-    * sessionized ONLY when the event-time timeout fires at
-    * maxBufferedTs+gap: by then the watermark guarantees no event can
-    * arrive that is ≤ gap after any buffered event, so every emitted
-    * session is final and out-of-order arrivals within the watermark can
-    * never merge into the wrong session. State size is bounded by one
-    * watermark window of events per key. Caller must set a watermark on
-    * `ts` upstream. */
-  def sessionize(events: Dataset[EventRow], gapMs: Long = 30 * 60 * 1000L)
-  : Dataset[UserSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[EventBuffer, UserSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[EventRow], state: GroupState[EventBuffer]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.get.events
-            state.remove()
-            // split the (now-final) buffer into gap-separated sessions —
-            // the same kernel the batch path runs
-            splitSessions(userId, buffered, gapMs).iterator
-          } else {
-            val incoming = rows.map(e => (e.ts.getTime, e.value)).toVector
-            val merged = state.getOption.map(_.events).getOrElse(Vector.empty) ++ incoming
-            state.update(EventBuffer(merged))
-            state.setTimeoutTimestamp(merged.map(_._1).max + gapMs)
-            Iterator.empty
-          }
       }
   }
 }

@@ -26,7 +26,7 @@ class SemanticsSpec extends AnyFunSuite {
   private lazy val idFile: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempFile("graft-ids", ".txt")
     p.toFile.deleteOnExit()
-    DeterministicGen.idListFile(0.001, p)
+    SemanticsSpec.idListFile(0.001, p)
     p
   }
   private lazy val loader: Compiler.IdListLoader =
@@ -183,5 +183,18 @@ class SemanticsSpec extends AnyFunSuite {
       assert(got(s) === v, s"atoll('$s')")
       assert(OracleEval.atoll(s) === v, s"oracle atoll('$s')")
     }
+  }
+}
+
+object SemanticsSpec {
+  /** Ids for the `in (<'file')` fixture — a mix of present and absent ids,
+    * whitespace-separated like the reference reads (hpp:1505-1511). */
+  def idListFile(sf: Double, path: java.nio.file.Path): Unit = {
+    val rng = new scala.util.Random(DeterministicGen.Seed + 3)
+    val els = DeterministicGen.elements(sf)
+    val some = els.filter(_ => rng.nextDouble() < 0.2).map(_.id)
+    val absent = Vector.fill(some.size / 4)(9000000L + rng.nextInt(100000))
+    val all = rng.shuffle(some ++ absent)
+    java.nio.file.Files.writeString(path, all.mkString(" \n"))
   }
 }

@@ -19,9 +19,8 @@ class WinnowKernelSpec extends AnyFunSuite {
 
   private def compare(df: org.apache.spark.sql.DataFrame, text: String,
                       k: Int, w: Int): Unit = {
-    val both = TextOps.winnowedFingerprints(
-      WinnowKernelSpec.winnowedFingerprintsHof(df, col(text), "hof", k, w),
-      col(text), "kernel", k, w)
+    val both = WinnowKernelSpec.winnowedFingerprintsHof(df, col(text), "hof", k, w)
+      .withColumn("kernel", TextOps.winnowedFingerprints(col(text), k, w))
     val rows = both.select(col(text), col("hof"), col("kernel")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -58,9 +57,9 @@ class WinnowKernelSpec extends AnyFunSuite {
 
   test("null text yields null; type mismatch is rejected") {
     val df = spark.sql("SELECT cast(null as string) AS text")
-    assert(df.select(TextOps.winnowedFingerprintsCol(col("text"))).collect()(0).isNullAt(0))
+    assert(df.select(TextOps.winnowedFingerprints(col("text"))).collect()(0).isNullAt(0))
     val err = intercept[Exception] {
-      spark.range(1).select(TextOps.winnowedFingerprintsCol(col("id"))).collect()
+      spark.range(1).select(TextOps.winnowedFingerprints(col("id"))).collect()
     }
     assert(err.getMessage.contains("winnow_fingerprints") ||
       err.getMessage.toLowerCase.contains("type"))
@@ -69,8 +68,8 @@ class WinnowKernelSpec extends AnyFunSuite {
   test("fingerprinting runs inside whole-stage codegen via the kernel") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val cg = try {
-      val df = TextOps.winnowedFingerprints(
-        documents.select(col("doc_id"), col("text")), col("text"), "fps")
+      val df = documents.select(col("doc_id"), col("text"))
+        .withColumn("fps", TextOps.winnowedFingerprints(col("text")))
         .select(col("doc_id"), explode(col("fps")).as("f"))
       import org.apache.spark.sql.execution.debug._
       codegenString(df.queryExecution.executedPlan)
@@ -81,8 +80,8 @@ class WinnowKernelSpec extends AnyFunSuite {
   test("explode + self-join of fingerprints stays fast (the 315 s regression)") {
     // pre-kernel, this shape re-inlined the whole HOF tree per element and
     // took minutes for a few hundred docs; with the kernel it is sub-second
-    val fps = TextOps.winnowedFingerprints(
-      documents.select(col("doc_id").as("key"), col("text")), col("text"), "fps")
+    val fps = documents.select(col("doc_id").as("key"), col("text"))
+      .withColumn("fps", TextOps.winnowedFingerprints(col("text")))
       .select("key", "fps")
     val e = fps.select(col("key"), explode(col("fps")).as("f"))
     val t0 = System.nanoTime()

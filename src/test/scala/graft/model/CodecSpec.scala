@@ -12,7 +12,8 @@ import graft.fixtures.DeterministicGen
 
 /** Round-trip: OsmElement → spans → OsmView.derive must reproduce every
   * typed field and equal the HOF reference derivation (also on malformed
-  * span arrays, null kinds included), and the docs table must preserve the
+  * span arrays: null kinds, null payloads and member text without two '/'),
+  * and the docs table must preserve the
   * span-sequence invariant (kind, text, media_ref, order). */
 class CodecSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -121,7 +122,8 @@ class CodecSpec extends AnyFunSuite {
       3 -> Gen.oneOf("highway=primary", "name", "a=b=c", "=", "", "k=", "=v",
         "ünï=cødé=x").map(Span("tag", _, null, 0)),
       1 -> Gen.choose(-100000L, 100000L).map(n => Span("nd", n.toString, null, 0)),
-      1 -> Gen.oneOf("w/12/outer", "n/-3/", "r/0/a/b").map(Span("member", _, null, 0)),
+      1 -> Gen.oneOf("w/12/outer", "n/-3/", "r/0/a/b", "", "w", "w/12")
+        .map(Span("member", _, null, 0)),
       1 -> Gen.const(Span("media", "", "media://7", 0)),
       1 -> Gen.oneOf("", "t", "ty", "tags", "i", "Id", "versions", "lat ", "x")
         .map(Span(_, "1", null, 0)),

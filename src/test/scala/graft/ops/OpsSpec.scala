@@ -57,8 +57,8 @@ class OpsSpec extends AnyFunSuite {
       }
     }
     val k = 8; val w = 4
-    val got = TextOps.winnowedFingerprints(
-      documents.select(col("doc_id"), col("text")), col("text"), "fps", k, w)
+    val got = documents.select(col("doc_id"), col("text"))
+      .withColumn("fps", TextOps.winnowedFingerprints(col("text"), k, w))
       .collect()
     assert(got.nonEmpty)
     got.foreach { r =>

@@ -9,8 +9,8 @@ import graft.model.OsmView
 
 /** GeomOps conformance: way-geometry assembly + exact-integer metrics vs a
   * driver-side recomputation (hand fixtures with missing refs / closed rings
-  * / empty ways, then the whole sf=0.001 generated corpus); haversine length
-  * vs a scalar reference; distance joins vs brute force including
+  * / empty ways, then the whole sf=0.001 generated corpus); distance joins
+  * vs brute force including
   * antimeridian and near-pole points; plan shape (no cartesian product). */
 class GeomOpsSpec extends AnyFunSuite {
 
@@ -121,24 +121,6 @@ class GeomOpsSpec extends AnyFunSuite {
       val mi = r.fieldIndex("min_lat_e7")
       assert((if (r.isNullAt(mi)) None else Some(r.getLong(mi))) === minLat)
     }
-  }
-
-  test("wayLengthMeters matches a scalar haversine reference") {
-    def hav(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-      val r = 6371008.8
-      val dLat = math.toRadians(lat2 - lat1); val dLon = math.toRadians(lon2 - lon1)
-      val a = math.pow(math.sin(dLat / 2), 2) +
-        math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
-          math.pow(math.sin(dLon / 2), 2)
-      2 * r * math.asin(math.sqrt(a))
-    }
-    val nodes = Seq((1L, 48.85, 2.35), (2L, 48.86, 2.37), (3L, 48.84, 2.40))
-    val view = viewOf(nodes, Seq((30L, Seq(1L, 2L, 3L)), (31L, Seq(1L))))
-    val out = GeomOps.wayLengthMeters(GeomOps.addLocations(view)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val exp = hav(48.85, 2.35, 48.86, 2.37) + hav(48.86, 2.37, 48.84, 2.40)
-    assert(math.abs(out(30L) - exp) / exp < 1e-9)
-    assert(out(31L) === 0.0)
   }
 
   // --- relation geometry ----------------------------------------------------------

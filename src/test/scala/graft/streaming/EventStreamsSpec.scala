@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
-/** Event-time windowed aggregation (watermark drops late data) and stateful
-  * sessionization over the driver-provided events table. */
+/** Event-time windowed aggregation over a stream (watermark drops late
+  * data) and batch sessionization over the driver-provided events table. */
 class EventStreamsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -60,9 +60,8 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
-  test("batch sessionization: hand-computed splits, and equality with the streaming path") {
+  test("batch sessionization: hand-computed splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     def ev(id: Long, t: Long, user: Long, v: Double) =
       EventStreams.EventRow(id, new Timestamp(t), user, "click", v)
     val gap = 1000L * 60
@@ -78,75 +77,5 @@ class EventStreamsSpec extends AnyFunSuite {
       got(0).total_value === 3.0 && got(0).session_end.getTime === base + 1000)
     assert(got(1).user_id === 1 && got(1).n_events === 1 && got(1).total_value === 3.0)
     assert(got(2).user_id === 2 && got(2).n_events === 1 && got(2).total_value === 5.0)
-
-    // equality with the streaming path over the real events table: same
-    // kernel, so sessions must match field-for-field (values rounded — the
-    // two paths may fold the double sum from different chunk groupings)
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreams.EventRow]
-      .collect().sortBy(_.ts.getTime)
-    val gap8h = 8L * 3600 * 1000
-    def key(ss: Seq[EventStreams.UserSession]) = ss.map(s =>
-      (s.user_id, s.session_start.getTime, s.session_end.getTime, s.n_events,
-        math.round(s.total_value * 1e6))).toSet
-    val batch = EventStreams.sessionizeBatch(
-      spark.createDataset(events.toSeq), gap8h).collect()
-
-    val stream = MemoryStream[EventStreams.EventRow]
-    val q = EventStreams.sessionize(
-      stream.toDS().withWatermark("ts", "0 seconds").as[EventStreams.EventRow], gap8h)
-      .writeStream.format("memory").queryName("sess_batch_eq")
-      .outputMode("append").start()
-    events.grouped(250).foreach { chunk => stream.addData(chunk); q.processAllAvailable() }
-    // two far-future sentinels: advance the watermark, then fire timeouts
-    val far = events.last.ts.getTime + 30L * 24 * 3600 * 1000
-    stream.addData(EventStreams.EventRow(-1, new Timestamp(far), -777L, "s", 0.0))
-    q.processAllAvailable()
-    stream.addData(EventStreams.EventRow(-2, new Timestamp(far + gap8h * 3), -778L, "s", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sess_batch_eq").as[EventStreams.UserSession]
-      .collect().filter(_.user_id >= 0)
-    assert(streamed.nonEmpty && key(streamed.toSeq) === key(batch.toSeq),
-      s"streaming (${streamed.length}) vs batch (${batch.length}) sessions diverge")
-  }
-
-  test("sessionization closes sessions on the inactivity gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ev(id: Long, t: Long, user: Long, v: Double) =
-      EventStreams.EventRow(id, new Timestamp(t), user, "click", v)
-    val gap = 1000L * 60 // 1 minute
-    val base = 1700000000000L
-    val stream = MemoryStream[EventStreams.EventRow]
-    val withWm = stream.toDS()
-      .withWatermark("ts", "0 seconds")
-      .as[EventStreams.EventRow]
-    val q = EventStreams.sessionize(withWm, gapMs = gap)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-
-    // user 1: two sessions split by a > gap pause; user 2: one session
-    stream.addData(ev(1, base, 1, 1.0), ev(2, base + 1000, 1, 2.0),
-      ev(3, base + 2000, 2, 5.0))
-    q.processAllAvailable()
-    stream.addData(ev(4, base + gap * 3, 1, 3.0)) // forces user 1 session split
-    q.processAllAvailable()
-    // advance the watermark far past everything: user 2's and user 1's
-    // second session close via event-time timeout
-    stream.addData(ev(5, base + gap * 100, 99, 0.0))
-    q.processAllAvailable()
-    stream.addData(ev(6, base + gap * 200, 98, 0.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val sessions = spark.table("sess_out").as[EventStreams.UserSession].collect()
-    val u1 = sessions.filter(_.user_id == 1L).sortBy(_.session_start.getTime)
-    assert(u1.length === 2, sessions.mkString(","))
-    assert(u1.head.n_events === 2 && u1.head.total_value === 3.0)
-    assert(u1.last.n_events === 1 && u1.last.total_value === 3.0)
-    val u2 = sessions.filter(_.user_id == 2L)
-    assert(u2.length === 1 && u2.head.n_events === 1 && u2.head.total_value === 5.0)
   }
 }
