@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * overwrite + observe() row counts), never one full scan per bucket — at
   * 100 TB that is the difference between 1 scan and `parts` scans. Bucket
   * count is the resume granularity (manifests commit per bucket after the
-  * batch job commits; `maxPartsThisRun` bounds the work a preemption can
-  * lose), not the parallelism — the batch job still fans out to all
-  * executors. Manifests are tiny JSON files next to the data, like a
-  * minimal Iceberg-style snapshot layout.
+  * batch job commits, so a preemption loses only the batch in flight), not
+  * the parallelism — the batch job still fans out to all executors.
+  * Manifests are tiny JSON files next to the data, like a minimal
+  * Iceberg-style snapshot layout.
   */
 object Checkpoint {
 
@@ -71,12 +71,12 @@ object Checkpoint {
 
   /** Runs (or resumes) a checkpointed OFL filter over the docs table.
     * Returns the complete filtered result read from committed outputs, plus
-    * the manifests. `maxPartsThisRun` caps how many buckets are computed in
-    * this invocation (simulates preemption; the next call resumes). */
+    * the manifests. Buckets without a manifest of this lineage are computed
+    * (a preempted run leaves its batch manifest-less; the next call
+    * resumes). */
   def filterJob(spark: SparkSession, docs: DataFrame, expression: String,
                 root: String, job: String, parts: Int = 8,
                 inputFingerprint: String = "",
-                maxPartsThisRun: Int = Int.MaxValue,
                 idLoader: graft.compile.Compiler.IdListLoader =
                   graft.compile.Compiler.noFiles,
                 sugar: Boolean = false): (DataFrame, Seq[Manifest]) = {
@@ -117,15 +117,13 @@ object Checkpoint {
     // (only the pending partitions are replaced; committed ones are never
     // touched), and take rows-in/rows-out per bucket from two observe()
     // points on the same job instead of extra count() scans. Commit
-    // granularity is this run's batch (≤ maxPartsThisRun buckets): manifests
-    // are written only after the job commits, so a preempted run loses at
-    // most one batch and the next invocation recomputes exactly the
-    // manifest-less buckets.
+    // granularity is this run's batch: manifests are written only after the
+    // job commits, so a preempted run loses at most one batch and the next
+    // invocation recomputes exactly the manifest-less buckets.
     val committed: Map[Int, Manifest] = (0 until parts)
       .flatMap(p => readManifest(root, job, p).filter(_.lineage == lineage)
         .map(p -> _)).toMap
-    val pendingAll = (0 until parts).filterNot(committed.contains)
-    val pending = pendingAll.take(maxPartsThisRun)
+    val pending = (0 until parts).filterNot(committed.contains)
     val fresh: Map[Int, Manifest] =
       if (pending.isEmpty) Map.empty
       else {

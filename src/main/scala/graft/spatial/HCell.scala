@@ -28,19 +28,6 @@ object HCell {
     (HilbertCurve.xy2d(level, ZCell.x(z), ZCell.y(z)) << 5) | level.toLong
   }
 
-  def level(cell: Long): Int = (cell & 0x1fL).toInt
-  def pos(cell: Long): Long = cell >>> 5
-
-  def x(cell: Long): Int = HilbertCurve.d2xy(level(cell), pos(cell))._1
-  def y(cell: Long): Int = HilbertCurve.d2xy(level(cell), pos(cell))._2
-
-  /** Ancestor at a coarser level — a shift (Hilbert prefix property). */
-  def parent(cell: Long, parentLevel: Int): Long = {
-    val l = level(cell)
-    require(parentLevel >= 0 && parentLevel <= l, s"parent level $parentLevel > $l")
-    ((pos(cell) >>> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
-  }
-
   /** Sorted, disjoint `[lo, hi)` ranges of `fine`-level CELL VALUES
     * (`(pos << 5) | fine`) covering the bbox: the cover is taken at the
     * finest level whose cell count stays ≤ `maxCells`, each cover cell is

@@ -36,14 +36,14 @@ object S2Cell {
   /** 3 face bits + 2·level position bits + 5 level bits ≤ 63. */
   val MaxLevel = 26
 
-  /** Shared degrees→radians constant — Column mirror and SQL oracle
-    * interpolate THIS value so all three sides multiply by the same double. */
+  /** Shared degrees→radians constant — the kernel and the SQL oracle
+    * interpolate THIS value so both sides multiply by the same double. */
   val DegToRad: Double = math.Pi / 180.0
 
   /** Face of a unit vector: dominant axis, sign picks the hemisphere face.
     * 0:+x 1:+y 2:+z 3:−x 4:−y 5:−z. The comparison CHAIN (≥ with this
-    * exact order) is part of the contract — the Column and SQL mirrors
-    * replicate it literally so boundary points land identically. */
+    * exact order) is part of the contract — the SQL oracle replicates it
+    * literally so boundary points land identically. */
   private[spatial] def face(x: Double, y: Double, z: Double): Int = {
     val ax = math.abs(x); val ay = math.abs(y); val az = math.abs(z)
     if (ax >= ay && ax >= az) { if (x >= 0) 0 else 3 }
@@ -88,8 +88,8 @@ object S2Cell {
   @inline private def clamp(v: Int, hi: Int): Int =
     if (v < 0) 0 else if (v > hi) hi else v
 
-  /** Encode a point. Matches [[graft.spatial.SpatialOps.s2CellId]]
-    * operation-for-operation (same constants, same comparison chains). */
+  /** Encode a point — the kernel [[graft.spatial.SpatialOps.s2CellId]]
+    * calls. */
   def encode(lat: Double, lon: Double, level: Int): Long = {
     require(level >= 0 && level <= MaxLevel, s"level $level out of [0,$MaxLevel]")
     val phi = lat * DegToRad
@@ -116,18 +116,6 @@ object S2Cell {
     val l = level(cell)
     require(parentLevel >= 0 && parentLevel <= l, s"parent level $parentLevel > $l")
     (((cell >>> 5) >>> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
-  }
-
-  /** Cell center (lat, lon) in degrees. */
-  def center(cell: Long): (Double, Double) = {
-    val l = level(cell)
-    val n = (1 << l).toDouble
-    val (i, j) = HilbertCurve.d2xy(l, pos(cell))
-    val u = uvFromSt((i + 0.5) / n)
-    val v = uvFromSt((j + 0.5) / n)
-    val (x, y, z) = faceToXyz(face(cell), u, v)
-    (math.atan2(z, math.sqrt(x * x + y * y)) / DegToRad,
-      math.atan2(y, x) / DegToRad)
   }
 
   /** Mean sphere radius in meters — the same constant

@@ -1,7 +1,9 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import graft.exprs.{HilbertCellIdExpr, S2CellIdExpr, ZCellAxisExpr, ZCellIdExpr}
 import graft.ops.Similarity
 
 /** Spark-first spatial operators (north rule; the reference has no spatial
@@ -10,52 +12,33 @@ import graft.ops.Similarity
   * shape of the Raster-Intervals/Raptor pattern), kNN via ring-expansion
   * candidates + window top-k with exact fallback, raster↔vector prefix join.
   *
-  * The cell encoder is PURE Column arithmetic (shift/and/or) so it stays
-  * inside whole-stage codegen — no UDF or CodegenFallback in the
-  * hot path. Polygon sides are broadcast (small per BASELINE.json);
-  * dense-urban-cell skew is handled by map-side partial aggregation, the
-  * salted kNN rank and AQE skew join.
+  * Every cell encoder is one codegen'd static call into its curve's scalar
+  * kernel ([[graft.exprs.CellIdExprs]]), so it stays inside whole-stage
+  * codegen with a constant-size expression tree, and a cover computed on
+  * the driver ([[ZCell.coverBBox]]) and the probe encoded by Spark
+  * ([[cellId]]) are the same code — no UDF, CodegenFallback or Column
+  * mirror in the hot path. Polygon sides are broadcast (small per
+  * BASELINE.json); dense-urban-cell skew is handled by map-side partial
+  * aggregation, the salted kNN rank and AQE skew join.
   */
 object SpatialOps {
 
-  // --- cell encoder: Column mirror of ZCell.encode ---------------------------
+  // --- cell encoders: one codegen'd static kernel per curve -----------------
+  // (graft.exprs.CellIdExprs; the same kernels the driver-side covers call)
 
-  private def spreadCol(v0: Column): Column = {
-    var v = v0.bitwiseAND(lit(0x3ffffffL))
-    v = (v.bitwiseOR(shiftleft(v, 16))).bitwiseAND(lit(0x0000ffff0000ffffL))
-    v = (v.bitwiseOR(shiftleft(v, 8))).bitwiseAND(lit(0x00ff00ff00ff00ffL))
-    v = (v.bitwiseOR(shiftleft(v, 4))).bitwiseAND(lit(0x0f0f0f0f0f0f0f0fL))
-    v = (v.bitwiseOR(shiftleft(v, 2))).bitwiseAND(lit(0x3333333333333333L))
-    v = (v.bitwiseOR(shiftleft(v, 1))).bitwiseAND(lit(0x5555555555555555L))
-    v
-  }
+  private def encoded(lat: Column, lon: Column)(
+      kernel: (Expression, Expression) => Expression): Column =
+    GraftBridge.column(kernel(GraftBridge.expression(lat), GraftBridge.expression(lon)))
 
-  private def clampCol(v: Column, hi: Long): Column =
-    least(greatest(v, lit(0L)), lit(hi))
+  /** Z-order cell of a point at `level` — [[ZCell.encode]] as a kernel. */
+  def cellId(lat: Column, lon: Column, level: Int): Column =
+    encoded(lat, lon)(ZCellIdExpr(_, _, level))
 
-  /** Z-order cell of a point at `level` — codegen-friendly, vectorizable. */
-  def cellId(lat: Column, lon: Column, level: Int): Column = {
-    require(level >= 0 && level <= ZCell.MaxLevel)
-    val n = 1L << level
-    val x = clampCol(floor((lon + 180.0) / 360.0 * n).cast("long"), n - 1)
-    val y = clampCol(floor((lit(90.0) - lat) / 180.0 * n).cast("long"), n - 1)
-    shiftleft(shiftleft(spreadCol(y), 1).bitwiseOR(spreadCol(x)), 5)
-      .bitwiseOR(lit(level.toLong))
-  }
-
-  private def compactCol(v0: Column): Column = {
-    var v = v0.bitwiseAND(lit(0x5555555555555555L))
-    v = (v.bitwiseOR(shiftrightunsigned(v, 1))).bitwiseAND(lit(0x3333333333333333L))
-    v = (v.bitwiseOR(shiftrightunsigned(v, 2))).bitwiseAND(lit(0x0f0f0f0f0f0f0f0fL))
-    v = (v.bitwiseOR(shiftrightunsigned(v, 4))).bitwiseAND(lit(0x00ff00ff00ff00ffL))
-    v = (v.bitwiseOR(shiftrightunsigned(v, 8))).bitwiseAND(lit(0x0000ffff0000ffffL))
-    v = (v.bitwiseOR(shiftrightunsigned(v, 16))).bitwiseAND(lit(0x00000000ffffffffL))
-    v
-  }
-
-  /** Grid x/y of a cell (Column mirrors of ZCell.x/y). */
-  def cellX(cell: Column): Column = compactCol(shiftrightunsigned(cell, 5))
-  def cellY(cell: Column): Column = compactCol(shiftrightunsigned(cell, 6))
+  /** Grid x/y of a Z cell — [[ZCell.x]]/[[ZCell.y]] as kernels. */
+  def cellX(cell: Column): Column =
+    GraftBridge.column(ZCellAxisExpr(GraftBridge.expression(cell), y = false))
+  def cellY(cell: Column): Column =
+    GraftBridge.column(ZCellAxisExpr(GraftBridge.expression(cell), y = true))
 
   /** Ancestor cell at a coarser level — a shift, so raster↔vector prefix
     * joins are plain integer equality (both levels statically known). */
@@ -65,26 +48,13 @@ object SpatialOps {
       .bitwiseOR(lit(toLevel.toLong))
   }
 
-  // --- Hilbert / S2 cell encoders (native codegen'd kernels) ----------------
-  //
-  // Unlike the Z encoder (spread/compact ARE stateless bit math, so the
-  // Column form above is the right shape), the Hilbert position is a
-  // sequential transducer; an unrolled Column form duplicates each level's
-  // state subtree into every later level (no let-binding in Catalyst) and
-  // measured 52× slower than the Z row at level 12. Both encoders
-  // therefore go through a native Expression whose doGenCode is one static
-  // call into the scalar kernel — see graft.exprs.CellIdExprs scaladoc for
-  // the numbers and HilbertS2Spec for the bit-equality + codegen pins.
-
   /** Planar Hilbert cell at `level` — [[HCell.encode]] as a codegen'd
     * kernel: same equirect grid as [[cellId]] (identical floor/clamp
     * arithmetic, so the cell GEOMETRY matches ZCell's), Hilbert curve
     * position as the address. [[cellParent]] applies unchanged — the
     * `(pos << 5) | level` layout and the prefix property are shared. */
   def hilbertCellId(lat: Column, lon: Column, level: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(graft.exprs.HilbertCellIdExpr(
-      org.apache.spark.sql.GraftBridge.expression(lat.cast("double")),
-      org.apache.spark.sql.GraftBridge.expression(lon.cast("double")), level))
+    encoded(lat, lon)(HilbertCellIdExpr(_, _, level))
 
   /** S2-style spherical cell at `level` — [[S2Cell.encode]] as a codegen'd
     * kernel (cube-face selection + gnomonic uv + quadratic st + per-face
@@ -92,9 +62,7 @@ object SpatialOps {
     * position); the DuckDB oracle re-derives the full chain in SQL
     * (`spatial_s2_cell` / `spatial_s2_tile`). */
   def s2CellId(lat: Column, lon: Column, level: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(graft.exprs.S2CellIdExpr(
-      org.apache.spark.sql.GraftBridge.expression(lat.cast("double")),
-      org.apache.spark.sql.GraftBridge.expression(lon.cast("double")), level))
+    encoded(lat, lon)(S2CellIdExpr(_, _, level))
 
   /** Multi-level tile-density pyramid in ONE pass — the rollup a tiling
     * engine builds before serving (zoom z densities for z ∈ [minLevel,
@@ -106,9 +74,8 @@ object SpatialOps {
     * (cells per partition, not rows × levels). The level rides in the cell
     * value's low 5 bits, so one output column serves every zoom.
     *
-    * The encoder sits in its own projection below the explode: one Z
-    * encoder per level, or the encoder inlined into each shift, generates
-    * a method past the JVM's 64 KB limit at 4+ levels. */
+    * The encoder sits in its own projection below the explode, so each
+    * point is encoded once and every level is a shift of that one cell. */
   def tilePyramid(points: DataFrame, minLevel: Int, maxLevel: Int): DataFrame = {
     require(0 <= minLevel && minLevel <= maxLevel && maxLevel <= ZCell.MaxLevel)
     val cells = array((minLevel to maxLevel)

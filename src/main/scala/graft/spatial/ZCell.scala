@@ -5,8 +5,8 @@ package graft.spatial
   * design: equirectangular quadtree with bit-interleaved cell addresses
   * (Morton/quadkey), packed into one Long so that
   *
-  *  - `parent(cell, l)` is a shift (raster↔vector prefix joins are integer
-  *    equality on `parent`),
+  *  - an ancestor is a shift ([[SpatialOps.cellParent]]; raster↔vector
+  *    prefix joins are integer equality on it),
   *  - equal-level cells sort spatially (Z-curve locality for range scans),
   *  - neighbors/ring expansion are constant-time bit arithmetic (kNN).
   *
@@ -56,44 +56,25 @@ object ZCell {
     (morton << 5) | level.toLong
   }
 
+  /** Grid column of `lon` / row of `lat` on the `n`-wide grid: floor, then
+    * clamp to the edge — the one point→grid mapping behind [[encode]] and
+    * the covers, so a point inside a box encodes into the box's cover. */
+  @inline private def gridX(lon: Double, n: Int): Int =
+    clamp(math.floor((lon + 180.0) / 360.0 * n).toInt, n - 1)
+  @inline private def gridY(lat: Double, n: Int): Int =
+    clamp(math.floor((90.0 - lat) / 180.0 * n).toInt, n - 1)
+
   /** Encode a point. Out-of-range coordinates clamp to the grid edge. */
   def encode(lat: Double, lon: Double, level: Int): Long = {
     require(level >= 0 && level <= MaxLevel, s"level $level out of [0,$MaxLevel]")
     val n = 1 << level
-    val x = clamp(math.floor((lon + 180.0) / 360.0 * n).toInt, n - 1)
-    val y = clamp(math.floor((90.0 - lat) / 180.0 * n).toInt, n - 1)
-    xyToCell(x, y, level)
+    xyToCell(gridX(lon, n), gridY(lat, n), level)
   }
 
   def level(cell: Long): Int = (cell & 0x1fL).toInt
   def morton(cell: Long): Long = cell >>> 5
   def x(cell: Long): Int = compact(morton(cell)).toInt
   def y(cell: Long): Int = compact(morton(cell) >> 1).toInt
-
-  /** Ancestor at a coarser level — a pure shift, hence prefix-joinable. */
-  def parent(cell: Long, parentLevel: Int): Long = {
-    val l = level(cell)
-    require(parentLevel >= 0 && parentLevel <= l, s"parent level $parentLevel > $l")
-    ((morton(cell) >> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
-  }
-
-  /** Cell center (lat, lon). */
-  def center(cell: Long): (Double, Double) = {
-    val l = level(cell)
-    val n = (1 << l).toDouble
-    val cx = (x(cell) + 0.5) / n
-    val cy = (y(cell) + 0.5) / n
-    (90.0 - cy * 180.0, cx * 360.0 - 180.0)
-  }
-
-  /** Cell bounds (latMin, latMax, lonMin, lonMax). */
-  def bounds(cell: Long): (Double, Double, Double, Double) = {
-    val l = level(cell)
-    val n = (1 << l).toDouble
-    val x0 = x(cell) / n; val y0 = y(cell) / n
-    val x1 = (x(cell) + 1) / n; val y1 = (y(cell) + 1) / n
-    (90.0 - y1 * 180.0, 90.0 - y0 * 180.0, x0 * 360.0 - 180.0, x1 * 360.0 - 180.0)
-  }
 
   /** Cells at Chebyshev grid distance exactly `d` from `cell` (same level);
     * d=0 yields the cell itself. x wraps around the antimeridian, y clamps at
@@ -120,40 +101,38 @@ object ZCell {
     out.result().distinct
   }
 
-  /** All cells at `level` intersecting the bbox (cover of a rectangle).
-    * Handles antimeridian-crossing boxes (lonMin > lonMax). */
-  def coverBBox(latMin: Double, latMax: Double, lonMin: Double,
-                lonMax: Double, level: Int): Seq[Long] = {
+  /** Grid rows and column runs of the cells at `level` intersecting the
+    * bbox — the one span computation behind [[coverBBox]] and
+    * [[coverCount]]. Handles antimeridian-crossing boxes (lonMin > lonMax).
+    * Wrap is decided by the INPUT (lonMin > lonMax), never by xLo <= xHi: a
+    * wide wrap box whose two edges fall in the same (or adjacent) grid
+    * column covers EVERY column — the uncovered sliver is narrower than a
+    * cell, so no column is excludable at this level. */
+  private def coverSpan(latMin: Double, latMax: Double, lonMin: Double,
+                        lonMax: Double, level: Int): (Range, Seq[Range]) = {
     val n = 1 << level
-    val yLo = clamp(math.floor((90.0 - latMax) / 180.0 * n).toInt, n - 1)
-    val yHi = clamp(math.floor((90.0 - latMin) / 180.0 * n).toInt, n - 1)
-    val xLo = clamp(math.floor((lonMin + 180.0) / 360.0 * n).toInt, n - 1)
-    val xHi = clamp(math.floor((lonMax + 180.0) / 360.0 * n).toInt, n - 1)
-    // wrap is decided by the INPUT (lonMin > lonMax), never by xLo <= xHi: a
-    // wide wrap box whose two edges fall in the same (or adjacent) grid
-    // column covers EVERY column — the uncovered sliver is narrower than a
-    // cell, so no column is excludable at this level
-    val xs: Seq[Int] =
-      if (lonMin <= lonMax) xLo to xHi
-      else if (xLo <= xHi + 1) 0 until n
-      else (xLo until n) ++ (0 to xHi)
-    for (yy <- yLo to yHi; xx <- xs) yield xyToCell(xx, yy, level)
+    val xLo = gridX(lonMin, n)
+    val xHi = gridX(lonMax, n)
+    val xs =
+      if (lonMin <= lonMax) Seq(xLo to xHi)
+      else if (xLo <= xHi + 1) Seq(0 until n)
+      else Seq(xLo until n, 0 to xHi)
+    (gridY(latMax, n) to gridY(latMin, n), xs)
   }
 
-  /** Number of cells [[coverBBox]] would return at `level` (same floor/clamp
-    * math, no materialization) — used to pick a cover level under a budget. */
+  /** All cells at `level` intersecting the bbox (cover of a rectangle). */
+  def coverBBox(latMin: Double, latMax: Double, lonMin: Double,
+                lonMax: Double, level: Int): Seq[Long] = {
+    val (ys, xs) = coverSpan(latMin, latMax, lonMin, lonMax, level)
+    for (yy <- ys; run <- xs; xx <- run) yield xyToCell(xx, yy, level)
+  }
+
+  /** Number of cells [[coverBBox]] would return at `level`, without
+    * materializing them — used to pick a cover level under a budget. */
   def coverCount(latMin: Double, latMax: Double, lonMin: Double,
                  lonMax: Double, level: Int): Long = {
-    val n = 1 << level
-    val yLo = clamp(math.floor((90.0 - latMax) / 180.0 * n).toInt, n - 1)
-    val yHi = clamp(math.floor((90.0 - latMin) / 180.0 * n).toInt, n - 1)
-    val xLo = clamp(math.floor((lonMin + 180.0) / 360.0 * n).toInt, n - 1)
-    val xHi = clamp(math.floor((lonMax + 180.0) / 360.0 * n).toInt, n - 1)
-    val xs = // mirrors coverBBox's wrap handling exactly
-      if (lonMin <= lonMax) xHi - xLo + 1L
-      else if (xLo <= xHi + 1) n.toLong
-      else (n.toLong - xLo) + (xHi + 1L)
-    (yHi - yLo + 1L) * xs
+    val (ys, xs) = coverSpan(latMin, latMax, lonMin, lonMax, level)
+    ys.size.toLong * xs.map(_.size.toLong).sum
   }
 
   /** Sort + coalesce overlapping/adjacent `[lo, hi)` ranges. */

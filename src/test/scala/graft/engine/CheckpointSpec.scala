@@ -16,19 +16,27 @@ class CheckpointSpec extends AnyFunSuite {
   test("interrupted run resumes: only pending buckets recompute, result equals plain filter") {
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
 
-    // run 1: simulate preemption after 3 of 8 buckets
+    // run 1: all 8 buckets in one batch
     val (_, m1) = Checkpoint.filterJob(spark, docs, expr, root, "j1",
-      parts = 8, inputFingerprint = "fixture-0.001", maxPartsThisRun = 3)
-    assert(m1.count(_.lineage != "PENDING") === 3)
-    assert(m1.count(_.lineage == "PENDING") === 5)
+      parts = 8, inputFingerprint = "fixture-0.001")
+    assert(m1.forall(_.lineage != "PENDING"))
 
-    // run 2: resume — completes the rest, does not recompute committed parts
-    val committedWall = m1.filter(_.lineage != "PENDING").map(m => m.part -> m.wallMs).toMap
+    // simulate preemption: a run that never committed buckets 1, 4, 5, 6, 7
+    // leaves neither their manifests nor their data behind
+    val lost = Set(1, 4, 5, 6, 7)
+    lost.foreach { p =>
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(root, "j1", f"part=$p%05d", "_manifest.json"))
+      val data = new java.io.File(s"$root/j1/data/__part=$p")
+      if (data.exists()) org.apache.commons.io.FileUtils.deleteDirectory(data)
+    }
+
+    // run 2: resume — recomputes the lost buckets, not the committed ones
     val (result, m2) = Checkpoint.filterJob(spark, docs, expr, root, "j1",
       parts = 8, inputFingerprint = "fixture-0.001")
     assert(m2.forall(_.lineage != "PENDING"))
-    committedWall.foreach { case (p, wall) =>
-      assert(m2.find(_.part == p).get.wallMs === wall, "committed manifest untouched")
+    m1.filterNot(m => lost(m.part)).foreach { m =>
+      assert(m2.find(_.part == m.part).get === m, "committed manifest untouched")
     }
 
     val expected = FilterEngine.filter(docs, expr)
@@ -42,9 +50,8 @@ class CheckpointSpec extends AnyFunSuite {
 
     // single-pass evidence: each run computes its whole pending batch in ONE
     // job, so manifests within a batch share the batch wall clock
-    assert(m1.filter(_.lineage != "PENDING").map(_.wallMs).distinct.size === 1)
-    val run2Parts = m1.filter(_.lineage == "PENDING").map(_.part).toSet
-    assert(m2.filter(m => run2Parts(m.part)).map(_.wallMs).distinct.size === 1)
+    assert(m1.map(_.wallMs).distinct.size === 1)
+    assert(m2.filter(m => lost(m.part)).map(_.wallMs).distinct.size === 1)
   }
 
   test("changed predicate or input fingerprint invalidates committed buckets") {

@@ -11,6 +11,7 @@ import graft.{ChildJvm, SparkEntry}
 class OracleGateSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private val GatesLine = """GATES: (\d+)/(\d+) hash-verified, (-?\d+) rows-only""".r
+  private val GateTime = """\[verify\] (\S+) ok in ([\d.]+) s""".r
 
   /** Runs `cmd` to completion with stdout+stderr captured; returns (exit, output). */
   private def run(cmd: Seq[String], log: Path, timeoutMin: Long): (Int, String) =
@@ -23,6 +24,10 @@ class OracleGateSpec extends AnyFunSuite {
     val (vExit, vLog) = run(ChildJvm.command("graft.Verify", Seq(sfDir, out), heap = "2g"),
       tmp.resolve("verify.log"), 20)
     assert(vExit === 0, s"graft.Verify failed:\n$vLog")
+    // the slowest gates, so a gate-cost regression shows in the test output
+    vLog.linesIterator.collect { case GateTime(name, s) => (name, s.toDouble) }
+      .toSeq.sortBy(-_._2).take(5)
+      .foreach { case (name, s) => info(f"slow gate: $name $s%.1f s") }
 
     val (cExit, cLog) = run(Seq("python3", "tools/check_oracle.py", sfDir, out),
       tmp.resolve("check.log"), 10)

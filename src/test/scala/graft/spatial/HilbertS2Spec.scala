@@ -104,12 +104,12 @@ class HilbertS2Spec extends AnyFunSuite {
       val l = rng.nextInt(HCell.MaxLevel + 1)
       val h = HCell.encode(lat, lon, l)
       val z = ZCell.encode(lat, lon, l)
-      assert(HCell.level(h) === l)
+      assert(HCellDecode.level(h) === l)
       // identical geometry: the Hilbert address decodes to ZCell's grid point
-      assert((HCell.x(h), HCell.y(h)) === ((ZCell.x(z), ZCell.y(z))))
+      assert((HCellDecode.x(h), HCellDecode.y(h)) === ((ZCell.x(z), ZCell.y(z))))
       if (l > 0) {
         val pl = rng.nextInt(l)
-        assert(HCell.parent(h, pl) === HCell.encode(lat, lon, pl))
+        assert(HCellDecode.parent(h, pl) === HCell.encode(lat, lon, pl))
       }
     }
   }
@@ -185,7 +185,7 @@ class HilbertS2Spec extends AnyFunSuite {
       assert(S2Cell.level(c) === l)
       val pl = rng.nextInt(l)
       assert(S2Cell.parent(c, pl) === S2Cell.encode(lat, lon, pl))
-      val (clat, clon) = S2Cell.center(c)
+      val (clat, clon) = S2CellDecode.center(c)
       assert(S2Cell.encode(clat, clon, l) === c,
         s"center ($clat,$clon) of cell at ($lat,$lon,$l) re-encodes elsewhere")
     }
@@ -327,9 +327,11 @@ class HilbertS2Spec extends AnyFunSuite {
 
   test("s2CellId stays inside whole-stage codegen (no CodegenFallback)") {
     val cg = {
+      val z = SpatialOps.cellId(col("lat"), col("lon"), 12)
       val df = adversarialDF.select(
         SpatialOps.s2CellId(col("lat"), col("lon"), 12).as("c"),
-        SpatialOps.hilbertCellId(col("lat"), col("lon"), 12).as("h"))
+        SpatialOps.hilbertCellId(col("lat"), col("lon"), 12).as("h"),
+        z.as("z"), SpatialOps.cellX(z).as("zx"))
       import org.apache.spark.sql.execution.debug._
       codegenString(df.queryExecution.executedPlan)
     }

@@ -177,7 +177,7 @@ class SpatialLayoutSpec extends AnyFunSuite {
     SpatialLayout.materialize(pts, dir, coarseLevel = 3, fineLevel = 14,
       numFiles = 8)
     val layout = spark.read.parquet(dir)
-    val hotCell = ZCell.parent(ZCell.encode(48.85, 2.35, 14), 3)
+    val hotCell = ZCellDecode.parent(ZCell.encode(48.85, 2.35, 14), 3)
     val hotFiles = layout.filter(col(SpatialLayout.PartCol) === hotCell)
       .select(input_file_name()).distinct().count()
     assert(hotFiles >= 2,

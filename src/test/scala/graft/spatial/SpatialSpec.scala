@@ -31,17 +31,17 @@ class SpatialSpec extends AnyFunSuite {
       val l = rng.nextInt(ZCell.MaxLevel + 1)
       val c = ZCell.encode(lat, lon, l)
       assert(ZCell.level(c) === l)
-      val (latMin, latMax, lonMin, lonMax) = ZCell.bounds(c)
+      val (latMin, latMax, lonMin, lonMax) = ZCellDecode.bounds(c)
       assert(lat >= latMin - 1e-9 && lat <= latMax + 1e-9)
       assert(lon >= lonMin - 1e-9 && lon <= lonMax + 1e-9)
       // parent contains child
       if (l > 0) {
         val pl = rng.nextInt(l)
-        assert(ZCell.parent(c, pl) === ZCell.encode(lat, lon, pl) ||
+        assert(ZCellDecode.parent(c, pl) === ZCell.encode(lat, lon, pl) ||
           // boundary points can flip cells between levels only by grid
           // rounding; center must agree
-          ZCell.parent(c, pl) === {
-            val (clat, clon) = ZCell.center(c)
+          ZCellDecode.parent(c, pl) === {
+            val (clat, clon) = ZCellDecode.center(c)
             ZCell.encode(clat, clon, pl)
           })
       }
@@ -66,6 +66,41 @@ class SpatialSpec extends AnyFunSuite {
     nodes.foreach { case (id, lat, lon) =>
       assert(got(id) === ZCell.encode(lat, lon, l), s"cell of $id")
     }
+    // edge rows: poles, the antimeridian, far out of range, NaN; a null
+    // coordinate gives a null cell, and cellX/cellY decode what was encoded
+    val edges = Seq[(Option[Double], Double)](
+      (Some(90.0), 0.0), (Some(-90.0), 0.0), (Some(0.0), 180.0),
+      (Some(0.0), -180.0), (Some(90.0), 180.0), (Some(-90.0), -180.0),
+      (Some(1e300), -1e300), (Some(-1e300), 1e300), (Some(Double.NaN), 10.0),
+      (Some(10.0), Double.NaN), (None, 10.0))
+    val cell = SpatialOps.cellId(col("lat"), col("lon"), l)
+    val rows = edges.toDF("lat", "lon")
+      .select(col("lat"), col("lon"), cell.as("c"),
+        SpatialOps.cellX(cell).as("x"), SpatialOps.cellY(cell).as("y"))
+      .collect()
+    assert(rows.length === edges.size)
+    rows.foreach { r =>
+      if (r.isNullAt(0)) assert((0 to 2).forall(i => r.isNullAt(2 + i)), "null lat")
+      else {
+        val exp = ZCell.encode(r.getDouble(0), r.getDouble(1), l)
+        val at = s"(${r.getDouble(0)},${r.getDouble(1)})"
+        assert(r.getLong(2) === exp, at)
+        assert((r.getLong(3), r.getLong(4)) === ((ZCell.x(exp).toLong, ZCell.y(exp).toLong)), at)
+      }
+    }
+  }
+
+  test("Z cell expressions stay constant-size trees (no Column mirror)") {
+    // a Column transliteration of the encoder doubles its tree at every
+    // spread/compact step (1,342 nodes for cellId, 43,196 for
+    // cellX(cellId)); the kernels keep each of these under 20
+    val cell = SpatialOps.cellId(col("lat"), col("lon"), 12)
+    Seq(cell, SpatialOps.cellX(cell),
+      SpatialOps.cellX(SpatialOps.cellParent(cell, 12, 6))).foreach { c =>
+      val e = nodesDF.select(c).queryExecution.analyzed.expressions.head
+      val size = e.collect { case n => n }.size
+      assert(size < 20, s"$size nodes in ${e.treeString}")
+    }
   }
 
   test("Column cellParent equals the Scala core parent") {
@@ -73,7 +108,7 @@ class SpatialSpec extends AnyFunSuite {
       SpatialOps.cellParent(SpatialOps.cellId(col("lat"), col("lon"), 16), 16, 12).as("p"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     nodes.foreach { case (id, lat, lon) =>
-      assert(got(id) === ZCell.parent(ZCell.encode(lat, lon, 16), 12))
+      assert(got(id) === ZCellDecode.parent(ZCell.encode(lat, lon, 16), 12))
     }
   }
 
@@ -173,7 +208,7 @@ class SpatialSpec extends AnyFunSuite {
     val level = 10
     val qlat = 10.0; val qlon = 10.0
     val c = ZCell.encode(qlat, qlon, level)
-    val (_, _, _, lonMaxCell) = ZCell.bounds(c)
+    val (_, _, _, lonMaxCell) = ZCellDecode.bounds(c)
     val cellDeg = 360.0 / (1 << level)
     val eastEdge = lonMaxCell + 2 * cellDeg      // east boundary of the cover
     val pts = Seq(
@@ -200,7 +235,7 @@ class SpatialSpec extends AnyFunSuite {
     val level = 10
     val qlat = 10.0; val qlon = 10.0
     val c = ZCell.encode(qlat, qlon, level)
-    val (_, _, _, lonMaxCell) = ZCell.bounds(c)
+    val (_, _, _, lonMaxCell) = ZCellDecode.bounds(c)
     val cellDeg = 360.0 / (1 << level)
     val eastEdge = lonMaxCell + 2 * cellDeg
     val pts = Seq(
@@ -237,7 +272,7 @@ class SpatialSpec extends AnyFunSuite {
     val tilesDF = tiles.map(t => (t.cell, t.level)).toDF("cell", "tile_level")
     val tileSet = tiles.map(_.cell).toSet
     val expected = nodes.flatMap { case (id, lat, lon) =>
-      val p = ZCell.parent(ZCell.encode(lat, lon, 16), 12)
+      val p = ZCellDecode.parent(ZCell.encode(lat, lon, 16), 12)
       if (tileSet.contains(p)) Some((id, p)) else None
     }.toSet
     val got = SpatialOps.tileJoin(nodesDF, tilesDF, pointLevel = 16, tileLevel = 12)
