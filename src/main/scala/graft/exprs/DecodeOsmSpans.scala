@@ -3,7 +3,7 @@ package graft.exprs
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, UTF8StringUtils}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -180,7 +180,7 @@ object SpanDecode {
         case 'n' => // nd
           if (kind.equals(K_ND) && nds != null) {
             val t = span.getUTF8String(1)
-            if (t != null) nds.add(java.lang.Long.valueOf(t.toLongExact()))
+            if (t != null) nds.add(java.lang.Long.valueOf(parseLong(t)))
           }
         case 'm' => // member | media
           if (kind.equals(K_MEMBER)) {
@@ -196,7 +196,7 @@ object SpanDecode {
               if (c < nb)
                 members.add(new GenericInternalRow(Array[Any](
                   UTF8String.fromBytes(b, 0, a),
-                  UTF8String.fromBytes(b, a + 1, c - a - 1).toLongExact(),
+                  parseLong(UTF8String.fromBytes(b, a + 1, c - a - 1)),
                   UTF8String.fromBytes(b, c + 1, nb - c - 1))))
             }
           } else if (kind.equals(K_MEDIA)) {
@@ -245,6 +245,11 @@ object SpanDecode {
       if (media == null) null else new GenericArrayData(media.toArray())))
   }
 
+  /** Numeric span text → long with the parse an ANSI `cast(text as
+    * bigint)` runs, so non-numeric text fails with the HOF derivation's
+    * error (CAST_INVALID_INPUT), not a bare NumberFormatException. */
+  private def parseLong(t: UTF8String): Long = UTF8StringUtils.toLongExact(t, null)
+
   // Header text readers: null text decodes to null, like the HOF
   // reference's cast of a null string.
 
@@ -256,12 +261,12 @@ object SpanDecode {
 
   private def long(span: InternalRow): Any = {
     val t = span.getUTF8String(1)
-    if (t == null) null else t.toLongExact()
+    if (t == null) null else parseLong(t)
   }
 
   /** lat/lon text is fixed-point degrees × 1e7. */
   private def degrees(span: InternalRow): Any = {
     val t = span.getUTF8String(1)
-    if (t == null) null else t.toLongExact() / 1e7
+    if (t == null) null else parseLong(t) / 1e7
   }
 }

@@ -48,30 +48,39 @@ object SimhashKernel {
 
   private val SEP = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]+")
 
+  /** The word tokens of a text — `filter(split(lower(trim(text)),
+    * "[^\\p{L}\\p{N}]+"), length > 0)` with the primitives that Column
+    * pipeline executes: UTF8String.trim/toLowerCase, then the regex split
+    * UTF8String.split delegates to (limit -1 keeps the empty parts, which
+    * the nonEmpty filter drops). The one tokenizer of the simhash and
+    * shingle kernels ([[MinhashKernel.shingles]]). */
+  def tokens(text: UTF8String): Array[UTF8String] = {
+    val parts = SEP.split(text.trim().toLowerCase.toString, -1)
+    val out = new Array[UTF8String](parts.length)
+    var n = 0
+    var i = 0
+    while (i < parts.length) {
+      if (parts(i).nonEmpty) { out(n) = UTF8String.fromString(parts(i)); n += 1 }
+      i += 1
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+  }
+
   def simhash(text: UTF8String): Long = {
-    // lower(trim(text)) with the Column primitives, then the same regex
-    // split String.split would run (limit -1 keeps trailing empties; the
-    // nonEmpty filter below is the `length > 0` HOF filter)
-    val norm = text.trim().toLowerCase
-    val parts = SEP.split(norm.toString, -1)
+    val toks = tokens(text)
+    if (toks.isEmpty) return 0L
     val votes = new Array[Int](64)
     var i = 0
-    var any = false
-    while (i < parts.length) {
-      val p = parts(i)
-      if (p.nonEmpty) {
-        any = true
-        val u = UTF8String.fromString(p)
-        val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
+    while (i < toks.length) {
+      val u = toks(i)
+      val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
       }
       i += 1
     }
-    if (!any) return 0L
     var sim = 0L
     var b = 0
     while (b < 64) {

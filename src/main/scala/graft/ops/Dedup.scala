@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,15 +22,10 @@ object Dedup {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Distinct word n-gram shingles of the normalized text. */
-  def shingles(text: Column, n: Int): Column = {
-    val tokens = filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
-    when(size(tokens) < n, when(size(tokens) > 0, array(concat_ws(" ", tokens)))
-        .otherwise(array().cast("array<string>")))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(tokens) - (n - 1)),
-        i => concat_ws(" ", slice(tokens, i, lit(n))))))
-  }
+  /** Distinct word n-gram shingles of the normalized text — the codegen'd
+    * [[graft.exprs.Shingles]] kernel, one tokenization per row. */
+  private def shingles(text: Column, n: Int): Column =
+    GraftBridge.column(graft.exprs.Shingles(GraftBridge.expression(text), n))
 
   /** Exact n-gram Jaccard similarity of two shingle-set columns. Both-empty
     * is null (pair dropped), matching the SQL-oracle convention (0/0) and
@@ -41,33 +36,25 @@ object Dedup {
       .otherwise(size(array_intersect(a, b)).cast("double") /
         size(array_union(a, b)))
 
-  /** MinHash signature: `numHashes` min-values over per-seed shingle hashes.
-    * Pure Columns: each signature slot is array_min over xxhash64(shingle ⊕
-    * seed). */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column = {
-    val slots = (0 until numHashes).map { i =>
-      when(size(shinglesCol) === 0, lit(Long.MaxValue))
-        .otherwise(array_min(transform(shinglesCol,
-          s => xxhash64(s, lit(i)))))
-    }
-    array(slots: _*)
-  }
-
   /** Per-band hashes of a minhash signature: band b hashes signature slots
     * [b·perBand, (b+1)·perBand) with the band index as seed — the bucket
-    * keys of [[minhashDupPairs]]' band self-join. */
+    * keys of [[minhashDupPairs]]' band self-join. One static column per
+    * band, so the array stays inside whole-stage codegen. */
   private def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
     require(bands * (numHashes / bands) == numHashes, "bands must divide numHashes")
     val perBand = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(concat_ws(",",
-        slice(sig, b * perBand + lit(1), lit(perBand))), b))
+    array((0 until bands).map(b =>
+      xxhash64(concat_ws(",", slice(sig, b * perBand + 1, perBand)), lit(b))): _*)
   }
 
-  /** MinHash-LSH near-duplicate pairs: signature → `bands` band keys →
-    * equi-join within (band index, band hash) buckets → exact Jaccard
+  /** MinHash-LSH near-duplicate pairs: shingles → signature → `bands` band
+    * keys → equi-join within (band index, band hash) buckets → exact Jaccard
     * verification ≥ `threshold`. Returns (key_a, key_b, jaccard) with
-    * key_a < key_b, deduplicated across bands.
+    * key_a < key_b, deduplicated across bands. The shingles and the
+    * signature are the codegen'd kernels [[graft.exprs.Shingles]] and
+    * [[graft.exprs.MinhashSignature]]: one tokenization per document, one
+    * byte hash per shingle, and no interpreted higher-order function in the
+    * plan.
     *
     * Scale shape: the only shuffle is the band-bucket self-join; bucket
     * sizes are bounded by collision rate, and AQE's skew-join splits
@@ -78,12 +65,13 @@ object Dedup {
     // shingle + signature derivation materialized ONCE (eager
     // localCheckpoint): the plan reads it three times (banded candidate
     // generation + both verify re-attach sides), and each read would
-    // otherwise re-tokenize and re-hash the corpus — numHashes array
-    // traversals per doc per read (the winnowedDupPairs §8 pattern; the
-    // proxy table is ~the corpus's token size, read-shared by all branches)
+    // otherwise re-tokenize and re-hash the corpus (the winnowedDupPairs §8
+    // pattern; the proxy table is ~the corpus's token size, read-shared by
+    // all branches)
     val sig = docs.select(keyCol.as("key"),
       shingles(textCol, ngram).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
+      .withColumn("sig", GraftBridge.column(
+        graft.exprs.MinhashSignature(GraftBridge.expression(col("sh")), numHashes)))
       .localCheckpoint(true)
     // band shuffle carries (key, band, bandhash) ONLY — at 100 TB shipping
     // the shingle arrays through this self-join twice would dwarf the join
@@ -108,7 +96,8 @@ object Dedup {
 
   /** All-pairs exact n-gram Jaccard above a threshold (quadratic — the
     * small-data oracle for LSH and a usable op below ~100k docs when
-    * pre-blocked). */
+    * pre-blocked). Shingles come from the same codegen'd
+    * [[graft.exprs.Shingles]] kernel as [[minhashDupPairs]]'. */
   def jaccardDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                       ngram: Int = 3, threshold: Double = 0.5): DataFrame = {
     val s = docs.select(keyCol.as("key"), shingles(textCol, ngram).as("sh"))
@@ -134,8 +123,7 @@ object Dedup {
     * unique, since duplicate keys are not combined (each row keeps its own
     * simhash, and downstream band joins see every copy). */
   def simhashDF(docs: DataFrame, textCol: Column, keyCol: Column): DataFrame = {
-    val sim = org.apache.spark.sql.GraftBridge.column(graft.exprs.SimhashExpr(
-      org.apache.spark.sql.GraftBridge.expression(textCol)))
+    val sim = GraftBridge.column(graft.exprs.SimhashExpr(GraftBridge.expression(textCol)))
     docs.select(keyCol.as("key"), coalesce(sim, lit(0L)).as("sim"))
   }
 
@@ -443,9 +431,8 @@ object Dedup {
     val bcRare = spark.sparkContext.broadcast(rare)
     val bcHot = spark.sparkContext.broadcast(hotArr)
     def retain(bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-      org.apache.spark.sql.GraftBridge.column(
-        graft.exprs.LongArrayRetainSorted(
-          org.apache.spark.sql.GraftBridge.expression(col("fps")), bc))
+      GraftBridge.column(
+        graft.exprs.LongArrayRetainSorted(GraftBridge.expression(col("fps")), bc))
     // n_hot via the same codegen'd retain kernel (no per-row Seq boxing
     // — the stats subtree is evaluated under BOTH prefilter joins)
     verifiedWinnowPairs(fmat, threshold,

@@ -15,8 +15,9 @@ package graft.spatial
   *  6. per-face Hilbert position via [[HilbertCurve]].
   *
   * Cell value: `((face << 2·level) | hilbertPos) << 5 | level` — face bits
-  * ride ABOVE the position, so [[parent]] is the same shift as
-  * ZCell/HCell's and prefix range/equi-join machinery applies unchanged;
+  * ride ABOVE the position, so an ancestor is the same shift as
+  * ZCell/HCell's ([[SpatialOps.cellParent]]) and prefix range/equi-join
+  * machinery applies unchanged;
   * equal-level cells sort by (face, curve position), i.e. spatially within
   * a face.
   *
@@ -110,14 +111,6 @@ object S2Cell {
   def face(cell: Long): Int = ((cell >>> 5) >>> (2 * level(cell))).toInt
   def pos(cell: Long): Long = (cell >>> 5) & ((1L << (2 * level(cell))) - 1L)
 
-  /** Ancestor at a coarser level — the identical shift ZCell/HCell use
-    * (face bits stay above the shortened position). */
-  def parent(cell: Long, parentLevel: Int): Long = {
-    val l = level(cell)
-    require(parentLevel >= 0 && parentLevel <= l, s"parent level $parentLevel > $l")
-    (((cell >>> 5) >>> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
-  }
-
   /** Mean sphere radius in meters — the same constant
     * [[SpatialOps.haversineMeters]] uses, so angular/metric conversions
     * agree across the cover and the refine. */
@@ -185,7 +178,7 @@ object S2Cell {
     * false positives cost scan, never correctness). Descends toward
     * `level` but stops early when the next level would exceed `maxCells`,
     * so the result is uniform-level: `(cells, achievedLevel)` — join
-    * point-side cells at `achievedLevel` (encode or [[parent]]) against
+    * point-side cells at `achievedLevel` (encode or `cellParent`) against
     * the list. */
   def coverCap(lat: Double, lon: Double, radiusMeters: Double, level: Int,
                maxCells: Int = 256): (Seq[Long], Int) = {

@@ -130,7 +130,8 @@ object SpatialOps {
     val qll = qs.toSeq.toDF("query_id", "q_lat", "q_lon")
     val fineL = levels.max
     // encode each point ONCE at the finest present level; coarser present
-    // levels are a shift (S2Cell.parent's bit layout matches cellParent's)
+    // levels are a shift (face bits ride above the position, so cellParent's
+    // shift applies)
     val fineCell = s2CellId(col("lat"), col("lon"), fineL)
     val pLevelCells = array(levels.map(l =>
       struct(lit(l).as("qlevel"), cellParent(fineCell, fineL, l).as("pcell"))): _*)

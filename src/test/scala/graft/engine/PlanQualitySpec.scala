@@ -2,22 +2,24 @@ package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayFilter, Attribute}
+import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayFilter, ArrayTransform, Attribute, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestSession
-import graft.exprs.TagLookup
+import graft.exprs.{MinhashSignature, Shingles, TagLookup}
 import graft.exprs.SpanDecode._
 import graft.model.CodecSpec.decodeMasks
 import graft.model.OsmView
 import graft.compile.Compiler
 import graft.fixtures.DeterministicGen
 import graft.ofl.Parser
+import graft.ops.Dedup
 import graft.spatial.SpatialOps
 
 /** Physical-plan quality pins: these are the properties that make the plans
@@ -238,6 +240,58 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!exprs.exists(_.isInstanceOf[CodegenFallback]), s"CodegenFallback in:\n$p")
   }
 
+  /** Function name and executed plan of every action `run` takes. */
+  private def executedPlans(run: => Unit): Seq[(String, SparkPlan)] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      // the bus delivers in order: once run's final collect is seen, every
+      // earlier action of run has been seen too
+      val out = Seq.newBuilder[(String, SparkPlan)]
+      var last: (String, SparkPlan) = null
+      while ({
+        last = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        last != null && { out += last; last._1 != "collect" }
+      }) ()
+      assert(last != null, "no collect plan seen")
+      out.result()
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private lazy val dedupDocsPath: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-docs").toString
+    DeterministicGen.highVocabDocsDF(spark, 300, vocab = 400)
+      .write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  test("minhash and jaccard dedup plans run codegen'd kernels, no higher-order function") {
+    val docs = spark.read.parquet(dedupDocsPath)
+    def exprs(run: => Unit): Seq[(String, Expression)] = executedPlans(run).flatMap {
+      case (f, p) => AdaptivePlans.flatMap(p)(_.expressions.flatMap(_.collect { case e => f -> e }))
+    }
+    val minhash = exprs(Dedup.minhashDupPairs(docs, col("text"), col("doc_id")).collect())
+    val jaccard = exprs(Dedup.jaccardDupPairs(docs, col("text"), col("doc_id")).collect())
+    // the signature derivation runs in the eager localCheckpoint's own job
+    assert(minhash.exists { case (f, e) => f == "localCheckpoint" && e.isInstanceOf[Shingles] },
+      minhash.map(_._1).distinct)
+    assert(minhash.exists(_._2.isInstanceOf[MinhashSignature]))
+    assert(jaccard.exists(_._2.isInstanceOf[Shingles]))
+    Seq("minhashDupPairs" -> minhash, "jaccardDupPairs" -> jaccard).foreach { case (op, es) =>
+      val bad = es.collect {
+        case (f, e) if e.isInstanceOf[CodegenFallback] || e.isInstanceOf[ArrayTransform] =>
+          s"$f: ${e.prettyName}"
+      }
+      assert(bad.isEmpty, s"$op runs $bad")
+    }
+  }
+
   test("a bare t_highway column without hot-key metadata is not pushed") {
     // a view whose columns carry no graft_hot_key metadata compiles cold
     val tagged = spark.read.parquet(viewPath)
@@ -299,3 +353,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("LeftSemi"), s"not a semi join in:\n$p")
   }
 }
+
+/** Walks an executed plan through its adaptive query stages. */
+private object AdaptivePlans extends AdaptiveSparkPlanHelper

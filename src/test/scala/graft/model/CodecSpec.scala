@@ -161,6 +161,29 @@ class CodecSpec extends AnyFunSuite {
     assertSameRows(exists(view), exists(hof), "fused highway exists")
   }
 
+  test("non-numeric span text fails with the HOF derivation's error condition") {
+    // the first error condition in a failure's cause chain
+    def condition(run: => Unit): String = {
+      val e = intercept[Throwable](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+      }.getOrElse(fail(s"no error condition in the cause chain of $e"))
+    }
+    Seq("id" -> "x", "version" -> "1a", "changeset" -> "", "uid" -> " ",
+      "lat" -> "4.5.6", "lon" -> "abc", "nd" -> "n1", "member" -> "w//x")
+      .foreach { case (kind, text) =>
+        val rows = Seq(("d1", Seq(Span("type", "node", null, 0), Span(kind, text, null, 1)), 1L))
+        val docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1))
+          .toDF("doc_id", "spans", "seq")
+        val field = if (kind == "nd") "nds" else if (kind == "member") "members" else kind
+        val what = s"$kind span '$text'"
+        val hof = condition(OsmView.deriveHof(docs).select(field).collect())
+        assert(hof === "CAST_INVALID_INPUT", what)
+        assert(condition(OsmView.derive(docs).select(field).collect()) === hof, what)
+        assert(condition(OsmView.derive(docs).collect()) === hof, s"$what, whole view")
+      }
+  }
+
   test("decode expression is codegen-capable (no CodegenFallback)") {
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback}

@@ -214,6 +214,68 @@ class OpsSpec extends AnyFunSuite {
       "LSH missed seeded near-identical pairs")
   }
 
+  test("shingle and signature kernels equal their Column forms") {
+    import org.apache.spark.sql.GraftBridge
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.exprs.{MinhashSignature, Shingles}
+    // a small vocabulary repeats n-grams; separators cover runs, tabs,
+    // newlines, punctuation and a no-break space
+    val word = Gen.oneOf("a", "b", "The", "the", "Straße", "12", "東京", "ÄRGER",
+      "öl", "x1", "ß9")
+    val sep = Gen.oneOf(" ", "  ", ", ", "\t", "\n", "-", "!? ", "\u00a0")
+    val text = for {
+      k <- Gen.choose(0, 12)
+      ws <- Gen.listOfN(k, word)
+      ss <- Gen.listOfN(k + 1, sep)
+    } yield ss.head + ws.zip(ss.tail).map { case (w, s) => w + s }.mkString
+    val generated = (1L to 200L).map(i =>
+      text.apply(Gen.Parameters.default, Seed(i)).getOrElse(""))
+    val edges = Seq(null, "", "   ", " \t\n ", "word", "two words",
+      "a b a b a b a b", "Straße 12", "東京", "東京 大阪 東京 大阪",
+      "ÄRGER über Öl", "  x-y_z!!  ")
+    val rows = (edges ++ generated).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // RDD-backed: a local relation would be constant-folded, and the
+    // generated code of the kernels would never run
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2))
+      .toDF("id", "text")
+    type Strs = scala.collection.Seq[String]
+    Seq(1, 3).foreach { n =>
+      val shingles = GraftBridge.column(Shingles(GraftBridge.expression(col("text")), n))
+      val signature = GraftBridge.column(MinhashSignature(GraftBridge.expression(col("kern")), 16))
+      val got = docs
+        .select(col("id"), col("text"), OpsSpec.shinglesHof(col("text"), n).as("hof"),
+          shingles.as("kern"))
+        .select(col("*"), OpsSpec.minhashSignatureHof(col("hof"), 16).as("hof_sig"),
+          signature.as("kern_sig"))
+        .select(col("*"), concat_ws(",", col("hof_sig")).as("hof_band"),
+          concat_ws(",", col("kern_sig")).as("kern_band"))
+        .collect()
+      assert(got.length === rows.length)
+      got.foreach { r =>
+        val what = s"n=$n text=${Option(r.getAs[String]("text")).map(t => s"'$t'")}"
+        val hof = Option(r.getAs[Strs]("hof"))
+        assert(Option(r.getAs[Strs]("kern")) === hof, what)
+        val hofSig = r.getAs[scala.collection.Seq[Any]]("hof_sig")
+        if (hof.isEmpty) {
+          // null text: the kernel's signature is null, the Column form's
+          // slots are all null; their band keys hash the same empty string
+          assert(r.isNullAt(r.fieldIndex("kern_sig")), what)
+          assert(hofSig.forall(_ == null), what)
+        } else
+          assert(r.getAs[scala.collection.Seq[Any]]("kern_sig") === hofSig, what)
+        assert(r.getAs[String]("kern_band") === r.getAs[String]("hof_band"), what)
+      }
+      // the edge shapes are there: a repeated n-gram, a short text's one
+      // joined shingle, a token-less text, non-ASCII tokens
+      val byText = got.map(r => Option(r.getAs[String]("text")) -> r.getAs[Strs]("kern")).toMap
+      assert(byText(Some("a b a b a b a b")).size === 2)
+      assert(byText(Some("two words")) === (if (n == 1) Seq("two", "words") else Seq("two words")))
+      assert(byText(Some(" \t\n ")) === Seq.empty)
+      assert(byText(Some("Straße 12")).mkString(" ") === "straße 12")
+    }
+  }
+
   test("simhash bands find near-identical pairs; hamming verified") {
     val base = documents.select("doc_id", "text").limit(150)
     val nearDups = base.limit(20).select((col("doc_id") + 500000).as("doc_id"),
@@ -677,6 +739,29 @@ class OpsSpec extends AnyFunSuite {
 
 object OpsSpec {
   import org.apache.spark.sql.Column
+
+  /** Distinct word n-gram shingles, pure Columns — the oracle of the
+    * [[graft.exprs.Shingles]] kernel. */
+  def shinglesHof(text: Column, n: Int): Column = {
+    val tokens = filter(split(lower(trim(text)), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+    when(size(tokens) < n, when(size(tokens) > 0, array(concat_ws(" ", tokens)))
+        .otherwise(array().cast("array<string>")))
+      .otherwise(array_distinct(transform(
+        sequence(lit(1), size(tokens) - (n - 1)),
+        i => concat_ws(" ", slice(tokens, i, lit(n))))))
+  }
+
+  /** MinHash signature, pure Columns — the oracle of the
+    * [[graft.exprs.MinhashSignature]] kernel: slot i is array_min over
+    * xxhash64(shingle, i), `Long.MaxValue` for an empty set. */
+  def minhashSignatureHof(shinglesCol: Column, numHashes: Int): Column = {
+    val slots = (0 until numHashes).map { i =>
+      when(size(shinglesCol) === 0, lit(Long.MaxValue))
+        .otherwise(array_min(transform(shinglesCol,
+          s => xxhash64(s, lit(i)))))
+    }
+    array(slots: _*)
+  }
 
   /** 64-bit SimHash over word tokens, pure Columns — the HOF oracle of
     * [[Dedup.simhashDF]]'s kernel: per-bit majority vote of token hashes,

@@ -46,6 +46,14 @@ object HCellDecode {
 
 object S2CellDecode {
 
+  /** Ancestor at a coarser level — the identical shift ZCell/HCell use
+    * (face bits stay above the shortened position). */
+  def parent(cell: Long, parentLevel: Int): Long = {
+    val l = S2Cell.level(cell)
+    require(parentLevel >= 0 && parentLevel <= l, s"parent level $parentLevel > $l")
+    (((cell >>> 5) >>> (2 * (l - parentLevel))) << 5) | parentLevel.toLong
+  }
+
   /** Cell center (lat, lon) in degrees. */
   def center(cell: Long): (Double, Double) = {
     val l = S2Cell.level(cell)

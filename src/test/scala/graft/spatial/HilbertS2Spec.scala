@@ -184,7 +184,7 @@ class HilbertS2Spec extends AnyFunSuite {
       val c = S2Cell.encode(lat, lon, l)
       assert(S2Cell.level(c) === l)
       val pl = rng.nextInt(l)
-      assert(S2Cell.parent(c, pl) === S2Cell.encode(lat, lon, pl))
+      assert(S2CellDecode.parent(c, pl) === S2Cell.encode(lat, lon, pl))
       val (clat, clon) = S2CellDecode.center(c)
       assert(S2Cell.encode(clat, clon, l) === c,
         s"center ($clat,$clon) of cell at ($lat,$lon,$l) re-encodes elsewhere")
@@ -222,7 +222,7 @@ class HilbertS2Spec extends AnyFunSuite {
       val c = S2Cell.encode(lat, lon, l)
       val kids = S2Cell.children(c)
       assert(kids.size === 4 && kids.distinct.size === 4)
-      kids.foreach(k => assert(S2Cell.parent(k, l) === c))
+      kids.foreach(k => assert(S2CellDecode.parent(k, l) === c))
       // the child containing the point is the point's own finer cell
       assert(kids.contains(S2Cell.encode(lat, lon, l + 1)))
       assert(S2Cell.circumRadiusRad(S2Cell.encode(lat, lon, l + 1)) <=
