@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines. All shuffle-aware:
   * exact dedup partitions by fingerprint (one shuffle, map-side combine);
-  * MinHash/SimHash candidate generation explodes band keys and equi-joins
-  * within band buckets (candidates only — never the cross product), then
-  * verifies exactly. */
+  * every near-duplicate pair operator draws its candidates from the one
+  * bucket self-join [[bucketPairs]] (never the cross product) and verifies
+  * them exactly through the one re-attach tail [[reattached]]. */
 object Dedup {
 
   /** Exact dedup by normalized-text fingerprint: keeps the smallest key per
@@ -48,63 +48,53 @@ object Dedup {
   }
 
   /** MinHash-LSH near-duplicate pairs: shingles → signature → `bands` band
-    * keys → equi-join within (band index, band hash) buckets → exact Jaccard
-    * verification ≥ `threshold`. Returns (key_a, key_b, jaccard) with
-    * key_a < key_b, deduplicated across bands. The shingles and the
-    * signature are the codegen'd kernels [[graft.exprs.Shingles]] and
-    * [[graft.exprs.MinhashSignature]]: one tokenization per document, one
-    * byte hash per shingle, and no interpreted higher-order function in the
-    * plan.
+    * keys → [[bucketPairs]] within (band index, band hash) buckets → exact
+    * Jaccard verification ≥ `threshold` through [[reattached]]. Returns
+    * (key_a, key_b, jaccard) with key_a < key_b, deduplicated across bands.
+    * The shingles and the signature are the codegen'd kernels
+    * [[graft.exprs.Shingles]] and [[graft.exprs.MinhashSignature]]: one
+    * tokenization per document, one byte hash per shingle, and no
+    * interpreted higher-order function in the plan.
     *
-    * Scale shape: the only shuffle is the band-bucket self-join; bucket
-    * sizes are bounded by collision rate, and AQE's skew-join splits
-    * pathological buckets. The cross product never materializes. */
+    * Scale shape: the band self-join ships (key, band, bandhash) only;
+    * bucket sizes are bounded by collision rate, and AQE's skew-join splits
+    * pathological buckets. The shingle arrays are re-attached for the
+    * surviving candidate pairs only. The cross product never materializes. */
   def minhashDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                       ngram: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5): DataFrame = {
-    // shingle + signature derivation materialized ONCE (eager
-    // localCheckpoint): the plan reads it three times (banded candidate
-    // generation + both verify re-attach sides), and each read would
-    // otherwise re-tokenize and re-hash the corpus (the winnowedDupPairs §8
-    // pattern; the proxy table is ~the corpus's token size, read-shared by
-    // all branches)
-    val sig = docs.select(keyCol.as("key"),
-      shingles(textCol, ngram).as("sh"))
-      .withColumn("sig", GraftBridge.column(
-        graft.exprs.MinhashSignature(GraftBridge.expression(col("sh")), numHashes)))
-      .localCheckpoint(true)
-    // band shuffle carries (key, band, bandhash) ONLY — at 100 TB shipping
-    // the shingle arrays through this self-join twice would dwarf the join
-    // itself; the shingles are re-attached for the surviving candidate pairs
-    // (deduplicated across bands first) by two narrow key joins.
-    val banded = sig.select(col("key"),
-      posexplode(bandHashes(col("sig"), numHashes, bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
-    val l = banded.select(col("band"), col("bandhash"), col("key").as("key_a"))
-    val r = banded.select(col("band"), col("bandhash"), col("key").as("key_b"))
-    val candidates = l.join(r, Seq("band", "bandhash"))
-      .filter(col("key_a") < col("key_b"))
-      .select("key_a", "key_b").distinct()
-    val shTbl = sig.select(col("key"), col("sh"))
-    candidates
-      .join(shTbl.select(col("key").as("key_a"), col("sh").as("sh_a")), "key_a")
-      .join(shTbl.select(col("key").as("key_b"), col("sh").as("sh_b")), "key_b")
-      .select(col("key_a"), col("key_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+    // shingles + signature materialized ONCE: the band self-join and both
+    // re-attach sides read it, and each read would otherwise re-tokenize and
+    // re-hash the corpus. The same job observes the largest shingle array's
+    // text bytes, which bounds the verify tail's attached payload.
+    val (sig, Seq(maxBytes)) = materialized(
+      docs.select(keyCol.as("key"), shingles(textCol, ngram).as("sh"))
+        .withColumn("sig", GraftBridge.column(
+          graft.exprs.MinhashSignature(GraftBridge.expression(col("sh")), numHashes))),
+      max(octet_length(concat_ws("", col("sh")))))
+    reattached(
+      bucketPairs(sig.select(col("key"), posexplode(bandHashes(col("sig"), numHashes, bands)))),
+      sig.select(col("key"), col("sh").as("p")), lit(maxBytes))
+      .select(col("key_a"), col("key_b"), jaccard(col("p_a"), col("p_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
-  /** All-pairs exact n-gram Jaccard above a threshold (quadratic — the
-    * small-data oracle for LSH and a usable op below ~100k docs when
-    * pre-blocked). Shingles come from the same codegen'd
-    * [[graft.exprs.Shingles]] kernel as [[minhashDupPairs]]'. */
+  /** All pairs with exact n-gram Jaccard ≥ `threshold` (> 0), the
+    * inverted-index set-similarity join: [[bucketPairs]] over the exploded
+    * shingles counts each pair's shared shingles, and the per-key set sizes
+    * [[reattached]] give `shared / (|A| + |B| − shared)` — the integers and
+    * doubles of [[jaccard]], since shingles are distinct. Exact: above 0 a
+    * pair sharing no shingle cannot qualify. Work is Σ of squared shingle
+    * bucket sizes, so a shingle most documents share makes it quadratic;
+    * [[minhashDupPairs]] bounds buckets by collision rate instead. */
   def jaccardDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                       ngram: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val s = docs.select(keyCol.as("key"), shingles(textCol, ngram).as("sh"))
-    val l = s.select(col("key").as("key_a"), col("sh").as("sh_a"))
-    val r = s.select(col("key").as("key_b"), col("sh").as("sh_b"))
-    l.crossJoin(r).filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+    require(threshold > 0, "threshold must be > 0: pairs sharing no shingle are never candidates")
+    val s = docs.select(keyCol.as("key"), shingles(textCol, ngram).as("sh")).localCheckpoint(true)
+    reattached(bucketPairs(s.select(col("key"), explode(col("sh")))),
+      s.select(col("key"), size(col("sh")).as("p")), lit(4L))
+      .select(col("key_a"), col("key_b"), (col("shared").cast("double") /
+        (col("p_a") + col("p_b") - col("shared"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -129,28 +119,21 @@ object Dedup {
 
   /** SimHash near-dup pairs: split the 64-bit simhash into `bands`
     * contiguous chunks (static shifts, codegen'd); docs sharing any chunk
-    * are candidates; verify by Hamming distance ≤ maxHamming. Same
-    * band-bucket join shape as MinHash-LSH — no cross product. */
+    * are [[bucketPairs]] candidates; [[reattached]] simhashes verify by
+    * Hamming distance ≤ maxHamming. Same band-bucket shape as MinHash-LSH —
+    * no cross product. */
   def simhashDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                       bands: Int = 4, maxHamming: Int = 3): DataFrame = {
     require(64 % bands == 0, "bands must divide 64")
     val bandBits = 64 / bands
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    val s = simhashDF(docs, textCol, keyCol)
+    val s = simhashDF(docs, textCol, keyCol).localCheckpoint(true)
     val bandCols = (0 until bands).map(b =>
       shiftrightunsigned(col("sim"), b * bandBits).bitwiseAND(lit(mask)))
-    val banded = s.select(col("key"), col("sim"), posexplode(array(bandCols: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandval")
-    val l = banded.select(col("band"), col("bandval"),
-      col("key").as("key_a"), col("sim").as("sim_a"))
-    val r = banded.select(col("band"), col("bandval"),
-      col("key").as("key_b"), col("sim").as("sim_b"))
-    l.join(r, Seq("band", "bandval"))
-      .filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"),
-        hamming(col("sim_a"), col("sim_b")).as("hamming"))
+    reattached(bucketPairs(s.select(col("key"), posexplode(array(bandCols: _*)))),
+      s.select(col("key"), col("sim").as("p")), lit(8L))
+      .select(col("key_a"), col("key_b"), hamming(col("p_a"), col("p_b")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .groupBy("key_a", "key_b").agg(min("hamming").as("hamming"))
   }
 
   /** Hamming distance between two 64-bit signatures. */
@@ -180,9 +163,9 @@ object Dedup {
     * key under Spark's own ordering (UTF8 binary for strings — NOT
     * String.compareTo, which disagrees on supplementary code points). */
   def dupClusters(pairs: DataFrame): DataFrame = {
-    val edges = clusterEdges(pairs)
+    val (edges, n) = clusterEdges(pairs)
     driverOrdering(edges) match {
-      case Some(ord) if edges.count() <= MaxDriverEdges => driverClusters(edges, ord)
+      case Some(ord) if n <= MaxDriverEdges => driverClusters(edges, ord)
       case _ => propagatedClusters(edges)
     }
   }
@@ -192,13 +175,15 @@ object Dedup {
   /** Label-propagation rounds before [[propagatedClusters]] gives up. */
   private val MaxClusterRounds = 50
 
-  /** The distinct edges `(a, b)` of a pairs frame, materialized. A pair with
-    * a null endpoint names no document: it is dropped here, once, so both
-    * cluster branches resolve the same edge set. */
-  private[ops] def clusterEdges(pairs: DataFrame): DataFrame =
-    pairs.select(col("key_a").as("a"), col("key_b").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .distinct().localCheckpoint(true)
+  /** The distinct edges `(a, b)` of a pairs frame, materialized, and their
+    * count, observed in the same job. A pair with a null endpoint names no
+    * document: it is dropped here, once, so both cluster branches resolve
+    * the same edge set. */
+  private[ops] def clusterEdges(pairs: DataFrame): (DataFrame, Long) = {
+    val (edges, Seq(n)) = materialized(pairs.select(col("key_a").as("a"), col("key_b").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull).distinct(), count(lit(1)))
+    (edges, n)
+  }
 
   /** Spark's ordering of the edge key type on the driver, when it has one
     * here (strings and integral types). */
@@ -346,12 +331,9 @@ object Dedup {
     * fingerprint to be considered; documents duplicated more than
     * `maxDocFreq` times are exact-dedup's job, not a similarity query).
     * Candidates are then PREFILTERED on a provable overlap upper bound
-    * (shared-rare count from the band join + per-doc totals/hot counts),
-    * and verification recomputes `shared` over ALL fingerprints of each
-    * surviving pair from the materialized fingerprint table: the surviving
-    * pair list is materialized (broadcast-sized), so the two re-attach
-    * joins stream the table once each and no fingerprint array is ever
-    * shuffled. Hot fingerprints still count toward the reported overlap.
+    * (shared-rare count from the self-join + per-doc totals/hot counts),
+    * and [[reattached]] fingerprint sets recompute `shared` over ALL
+    * fingerprints of each surviving pair, hot ones included.
     *
     * Corpus caveat: on template/low-vocabulary corpora the fingerprint space
     * collapses (few distinct window-min values ⇒ high document frequency for
@@ -364,8 +346,8 @@ object Dedup {
   def winnowedDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                        k: Int = 8, w: Int = 4, threshold: Double = 0.5,
                        maxDocFreq: Int = 1000): DataFrame = {
-    val (fmat, dfT) = winnowTables(docs, textCol, keyCol, k, w)
-    if (dfT.count() <= MaxBroadcastFps) retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+    val (fmat, dfT, nDf) = winnowTables(docs, textCol, keyCol, k, w)
+    if (nDf <= MaxBroadcastFps) retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
     else joinedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
   }
 
@@ -374,34 +356,26 @@ object Dedup {
   private val MaxBroadcastFps = 20000000L
 
   /** [[winnowedDupPairs]]' materialized inputs: the per-doc fingerprint
-    * table `(key, nt, fps)` and the document-frequency table `(f, df)` of
-    * the fingerprints held by at least two documents. */
+    * table `(key, nt, fps)`, the document-frequency table `(f, df)` of the
+    * fingerprints held by at least two documents, and that table's row
+    * count, observed by the job that materializes it. */
   private[ops] def winnowTables(docs: DataFrame, textCol: Column, keyCol: Column,
-                                k: Int, w: Int): (DataFrame, DataFrame) = {
+                                k: Int, w: Int): (DataFrame, DataFrame, Long) = {
     // ONE kernel pass: the per-doc fingerprint table, eagerly materialized
     // in its COMPACT form (one row per doc, primitive-long array — ~4× fewer
-    // bytes than materializing the exploded rows). At 100 TB this is the §8
-    // "write the proxy once" trade: the fingerprint table is ~an order
-    // smaller than the text the old plan re-derived per branch, and all
-    // consumers below (df table, candidate join, stats, verify) read it
-    // instead of re-running the kernel.
+    // bytes than the exploded rows); the df table, candidate join, stats
+    // and verify all read it instead of re-running the kernel.
     val fmat = docs.select(keyCol.as("key"), textCol.as("__text"))
       .withColumn("fps", TextOps.winnowedFingerprints(col("__text"), k, w))
       .select(col("key"), size(col("fps")).as("nt"), col("fps"))
       .localCheckpoint(true)
-    // Document frequency as a hash AGGREGATION, keeping only df >= 2 — the
-    // round-6 shape. The previous window form paid a corpus-sized exchange
-    // PLUS a per-partition sort, and the window itself ran once per join
-    // side above the reused exchange; the aggregation ships the same bytes
-    // but never sorts (guide §2.3/§2.4). df >= 2 is semantics-preserving (a
-    // fingerprint held by ONE doc can never witness a pair) and on
-    // high-vocabulary corpora drops ~97% of fingerprints, so the table
-    // below is a small fraction of the corpus.
-    val dfT = fmat.select(explode(col("fps")).as("f"))
+    // Document frequency as a sort-free hash AGGREGATION, keeping only
+    // df >= 2: a fingerprint held by ONE doc can never witness a pair, and
+    // on high-vocabulary corpora this drops ~97% of fingerprints.
+    val (dfT, Seq(nDf)) = materialized(fmat.select(explode(col("fps")).as("f"))
       .groupBy("f").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-      .localCheckpoint(true)
-    (fmat, dfT)
+      .filter(col("df") >= 2), count(lit(1)))
+    (fmat, dfT, nDf)
   }
 
   /** [[winnowedDupPairs]]' default branch. Rare/hot membership is applied
@@ -457,67 +431,86 @@ object Dedup {
           coalesce(col("n_hot"), lit(0L)).as("n_hot")))
   }
 
-  /** The winnow pairs tail both branches share: candidate pairs from the
-    * rare fingerprints `gen` (key, f), the provable-bound prefilter over the
-    * per-doc `stats` (key, n_total, n_hot), and the exact verify over `fmat`. */
+  /** The winnow pairs tail both branches share: [[bucketPairs]] over the
+    * rare fingerprints `gen` (key, f) counts each candidate's shared RARE
+    * fingerprints, the provable-bound prefilter over the per-doc `stats`
+    * (key, n_total, n_hot) drops the incidental ones, and [[reattached]]
+    * fingerprint sets verify exactly. */
   private def verifiedWinnowPairs(fmat: DataFrame, threshold: Double,
                                   gen: DataFrame, stats: DataFrame): DataFrame = {
-    val l = gen.select(col("f"), col("key").as("key_a"))
-    val r = gen.select(col("f"), col("key").as("key_b"))
-    // shared-RARE count per candidate pair, computed IN the band join with a
-    // map-side-combinable aggregation — no arrays shuffled, ever
-    val sharedRare = l.join(r, Seq("f"))
-      .filter(col("key_a") < col("key_b"))
-      .groupBy("key_a", "key_b").agg(count(lit(1)).as("shared_rare"))
+    def side(s: String) = stats.select(col("key").as(s"key_$s"),
+      col("n_total").as(s"nt_$s"), col("n_hot").as(s"nh_$s"))
     // PREFILTER (provable upper bound, never drops a qualifying pair):
     // shared_total <= shared_rare + min(n_hot_a, n_hot_b), so a pair can
     // only reach `overlap >= threshold` if that bound does. This is the
     // scale valve: incidental single-fingerprint collisions (gram-space
     // birthday pairs — measured 10M of them on a 400k-doc corpus) die here,
     // and verify cost becomes O(true near-dups · doc size).
-    val plausible = sharedRare
-      .join(stats.select(col("key").as("key_a"), col("n_total").as("nt_a"),
-        col("n_hot").as("nh_a")), "key_a")
-      .join(stats.select(col("key").as("key_b"), col("n_total").as("nt_b"),
-        col("n_hot").as("nh_b")), "key_b")
-      .filter((col("shared_rare") + least(col("nh_a"), col("nh_b"))).cast("double") >=
+    val plausible = bucketPairs(gen).join(side("a"), "key_a").join(side("b"), "key_b")
+      .filter((col("shared") + least(col("nh_a"), col("nh_b"))).cast("double") >=
         lit(threshold) * least(col("nt_a"), col("nt_b")))
       .select("key_a", "key_b", "nt_a")
-      // tiny (surviving pairs only): materialize so the verify joins below
-      // see a broadcast-sized relation instead of re-planning the whole
-      // candidate-generation DAG under each join
-      .localCheckpoint(true)
-    // exact verify from the FULL fingerprint sets (hot fingerprints still
-    // count toward the reported overlap) — the re-attach joins stream the
-    // MATERIALIZED table against the pair list, and array_intersect runs
-    // only on the surviving pairs. The pair list is an ExistingRDD scan
-    // after the checkpoint, so the planner has no size estimate for it and
-    // would sort-merge-join — shuffling AND sorting the corpus-sized
-    // fingerprint table twice; explicit broadcast hints keep fmat
-    // unshuffled: two streamed broadcast-hash joins. One aggregation over
-    // the materialized pairs sizes both build sides: the first is the bare
-    // pair list, the second carries the attached fps_a arrays (Σ nt_a longs).
-    val sizes = plausible.agg(count(lit(1)), coalesce(sum(col("nt_a")), lit(0L))).head()
-    val (pairs, fpsLongs) = (sizes.getLong(0), sizes.getLong(1))
-    def hinted(ok: Boolean)(df: DataFrame): DataFrame = if (ok) broadcast(df) else df
-    hinted(pairs <= MaxBroadcastPairs)(plausible.select("key_a", "key_b"))
-      .join(fmat.select(col("key").as("key_a"), col("fps").as("fps_a")), "key_a")
-      .transform(hinted(broadcastAttached(pairs, fpsLongs)))
-      .join(fmat.select(col("key").as("key_b"), col("fps").as("fps_b")), "key_b")
+    // exact verify from the FULL fingerprint sets: hot fingerprints still
+    // count toward the reported overlap
+    reattached(plausible, fmat.select(col("key"), col("fps").as("p")), col("nt_a") * 8)
       .select(col("key_a"), col("key_b"),
-        size(array_intersect(col("fps_a"), col("fps_b"))).cast("long").as("shared"),
-        (size(array_intersect(col("fps_a"), col("fps_b"))).cast("double") /
-          least(size(col("fps_a")), size(col("fps_b")))).as("overlap"))
+        size(array_intersect(col("p_a"), col("p_b"))).cast("long").as("shared"),
+        (size(array_intersect(col("p_a"), col("p_b"))).cast("double") /
+          least(size(col("p_a")), size(col("p_b")))).as("overlap"))
       .filter(col("overlap") >= threshold)
   }
 
-  private val MaxBroadcastPairs = 100000L
-  private val MaxBroadcastFpsBytes = 64L << 20
+  /** Candidate pairs of a bucket self-join over rows `(key, bucket cols…)`:
+    * `(key_a, key_b, shared)` for every two keys, key_a < key_b, that agree
+    * on all bucket columns of at least one row each, with `shared` the
+    * number of such row pairs (the bands, shingles or fingerprints they
+    * share). The one candidate generator of every pair operator: an
+    * equi-join within buckets and a map-side-combined count, so only keys
+    * and bucket values are shuffled and no cross product is built. */
+  private[ops] def bucketPairs(rows: DataFrame): DataFrame = {
+    val buckets = rows.columns.toSeq.filter(_ != "key")
+    rows.withColumnRenamed("key", "key_a")
+      .join(rows.withColumnRenamed("key", "key_b"), buckets)
+      .filter(col("key_a") < col("key_b"))
+      .groupBy("key_a", "key_b").agg(count(lit(1)).as("shared"))
+  }
 
-  /** Whether the winnow verify tail may broadcast the pair list with its
-    * attached fps_a arrays: at most `MaxBroadcastPairs` pairs AND at most
-    * `MaxBroadcastFpsBytes` of fingerprint longs (8 bytes each), so long
-    * documents cannot blow up a build side the pair count alone allows. */
-  private[ops] def broadcastAttached(pairs: Long, fpsLongs: Long): Boolean =
-    pairs <= MaxBroadcastPairs && fpsLongs * 8 <= MaxBroadcastFpsBytes
+  /** The one re-attach tail of every pair operator: the candidate `pairs`
+    * `(key_a, key_b, …)` are materialized, and the same job observes their
+    * count and Σ `bytesA`, the bytes of the key_a payloads the second join
+    * carries. The `payload` `(key, p)` then joins both keys as `p_a`/`p_b`
+    * for the caller's exact verify, which runs on candidate pairs only. The
+    * pair list is an ExistingRDD scan after the checkpoint, so the planner
+    * has no size estimate for it and would sort-merge join, shuffling and
+    * sorting the corpus-sized payload table twice; broadcast hints under
+    * the [[broadcastAttached]] guards keep the payload streamed through two
+    * broadcast-hash joins. Returns the pairs' columns plus `p_a` and `p_b`. */
+  private[ops] def reattached(pairs: DataFrame, payload: DataFrame, bytesA: Column): DataFrame = {
+    val (pl, Seq(n, bytes)) = materialized(pairs, count(lit(1)), sum(bytesA))
+    def hinted(ok: Boolean)(df: DataFrame): DataFrame = if (ok) broadcast(df) else df
+    def side(s: String) = payload.select(col("key").as(s"key_$s"), col("p").as(s"p_$s"))
+    hinted(broadcastAttached(n, 0L))(pl).join(side("a"), "key_a")
+      .transform(hinted(broadcastAttached(n, bytes)))
+      .join(side("b"), "key_b")
+  }
+
+  /** `df` materialized by an eager `localCheckpoint`, with the aggregate
+    * `metrics` (null read as 0) observed by that same job, so no second job
+    * sizes it. */
+  private def materialized(df: DataFrame, metrics: Column*): (DataFrame, Seq[Long]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val named = metrics.zipWithIndex.map { case (m, i) => coalesce(m, lit(0L)).as(s"m$i") }
+    val out = df.observe(obs, named.head, named.tail: _*).localCheckpoint(true)
+    (out, named.indices.map(i => obs.get(s"m$i").asInstanceOf[Number].longValue()))
+  }
+
+  private val MaxBroadcastPairs = 100000L
+  private val MaxBroadcastBytes = 64L << 20
+
+  /** Whether [[reattached]] may broadcast a pair list, with `bytes` of
+    * attached payload: at most `MaxBroadcastPairs` pairs AND at most
+    * `MaxBroadcastBytes` of payload, so long documents cannot blow up a
+    * build side the pair count alone allows. */
+  private[ops] def broadcastAttached(pairs: Long, bytes: Long): Boolean =
+    pairs <= MaxBroadcastPairs && bytes <= MaxBroadcastBytes
 }

@@ -257,30 +257,25 @@ object Similarity {
     bucketed.join(broadcast(probes), Seq("cid"))
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH-bucket
-    * self-join + exact verify (no cross product). Candidates share the
-    * exact `bits`-bit signature: identical vectors always collide, and a
-    * near-duplicate whose signature differs in a straddled hyperplane is
-    * missed — fewer `bits` make that rarer at the price of larger buckets.
+  /** Embedding near-duplicate pairs: cosine ≥ threshold via the LSH-bucket
+    * self-join [[Dedup.bucketPairs]] + exact verify (no cross product).
+    * Candidates share the exact `bits`-bit signature: identical vectors
+    * always collide, and a near-duplicate whose signature differs in a
+    * straddled hyperplane is missed — fewer `bits` make that rarer at the
+    * price of larger buckets.
     *
-    * Scale shape: the bucket self-join ships (bucket, key) ONLY; candidate
-    * pairs are dedup'd before the embeddings are re-attached by two narrow
-    * key joins for the exact verify. */
+    * Scale shape: (key, embedding, signature) is materialized once; the
+    * bucket self-join ships (key, bucket) ONLY, and the embeddings are
+    * re-attached to the deduplicated candidate pairs by
+    * [[Dedup.reattached]] for the exact verify. */
   def cosineDupPairs(corpus: DataFrame, keyCol: Column, threshold: Double,
                      dim: Int, bits: Int = 10): DataFrame = {
     val planes = hyperplanes(dim, bits)
-    val c = corpus.select(keyCol.as("key"), col("embedding"))
-      .withColumn("sig", lshSignature(col("embedding"), planes))
-    val l = c.select(col("key").as("key_a"), col("sig").as("bucket"))
-    val r = c.select(col("sig").as("bucket"), col("key").as("key_b"))
-    val candidates = l.join(r, Seq("bucket"))
-      .filter(col("key_a") < col("key_b"))
-      .select("key_a", "key_b").distinct()
-    val embTbl = c.select(col("key"), col("embedding"))
-    candidates
-      .join(embTbl.select(col("key").as("key_a"), col("embedding").as("emb_a")), "key_a")
-      .join(embTbl.select(col("key").as("key_b"), col("embedding").as("emb_b")), "key_b")
-      .select(col("key_a"), col("key_b"), cosine(col("emb_a"), col("emb_b")).as("cos"))
+    val c = corpus.select(keyCol.as("key"), col("embedding"),
+      lshSignature(col("embedding"), planes).as("bucket")).localCheckpoint(true)
+    Dedup.reattached(Dedup.bucketPairs(c.select("key", "bucket")),
+      c.select(col("key"), col("embedding").as("p")), lit(4L * dim))
+      .select(col("key_a"), col("key_b"), cosine(col("p_a"), col("p_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 }

@@ -102,12 +102,14 @@ object SpatialOps {
     * present level, and the broadcast (query_id, level, cell) list
     * equi-joins on (level, cell); exact haversine refines. No cross
     * product at any scale: candidate volume is each query's cover cells ×
-    * cell occupancy, not |queries| × |points|. */
+    * cell occupancy, not |queries| × |points|. A query with a null lat or
+    * lon matches nothing. */
   def s2RadiusJoin(points: DataFrame, queries: DataFrame, radiusMeters: Double,
                    level: Int = 10): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val qs = queries.select(col("query_id").cast("long"),
+    val qs = queries.filter(col("lat").isNotNull && col("lon").isNotNull)
+      .select(col("query_id").cast("long"),
         col("lat").cast("double"), col("lon").cast("double")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val covers = qs.map { case (id, la, lo) =>
@@ -332,12 +334,15 @@ object SpatialOps {
     * widening ladder fall back to the exact scan. The per-step unsatisfied
     * set is localCheckpoint'ed (small — the query side is broadcast-sized by
     * contract) so step lineages don't compound; driver-side probing stays an
-    * emptiness check per step. */
+    * emptiness check per step. Queries and points with a null lat or lon
+    * are dropped. Every branch returns the point columns, then query_id,
+    * qlat, qlon and dist_m. */
   def knn(points: DataFrame, queries: DataFrame, k: Int,
           level: Int = 10, maxRing: Int = 2,
           metric: SpatialMetric = HaversineMetric,
           tieBreak: String = "doc_id"): DataFrame = {
-    val pCells = points.withColumn("cell", cellId(col("lat"), col("lon"), level))
+    val located = points.filter(col("lat").isNotNull && col("lon").isNotNull)
+    val pCells = located.withColumn("cell", cellId(col("lat"), col("lon"), level))
     val dist = metric.dist(col("qlat"), col("qlon"), col("lat"), col("lon"))
 
     // exact per-query top-k in two phases (Similarity.topKPerQuery): the
@@ -377,8 +382,8 @@ object SpatialOps {
       (topk, unsat)
     }
 
-    var remaining = queries.select(
-      col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
+    var remaining = queries.filter(col("lat").isNotNull && col("lon").isNotNull)
+      .select(col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
     // (A ring-0 pre-pass to certify dense queries cheaply was measured and
     // rejected: it certified 27/99 bench queries but added a full pass for
     // the rest — 4.2 s vs 3.1 s against the ×4 ladder alone.)
@@ -408,11 +413,14 @@ object SpatialOps {
       }
     }
     if (!allSatisfied) {
-      val brute = rankTopK(points.crossJoin(broadcast(remaining))
+      val brute = rankTopK(located.crossJoin(broadcast(remaining))
         .withColumn("dist_m", dist))
       pieces += brute
     }
-    pieces.result().reduce(_ unionByName _)
+    // one column order on every branch: the left_anti USING join above
+    // moves query_id first
+    val out = (located.columns.toSeq ++ Seq("query_id", "qlat", "qlon", "dist_m")).map(col)
+    pieces.result().map(_.select(out: _*)).reduce(_ union _)
   }
 
   /** Ring widenings [[knn]] tries before its exact fallback. */

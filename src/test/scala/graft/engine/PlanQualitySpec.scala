@@ -292,6 +292,30 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("jaccard dedup builds no cross product; minhash verify broadcasts the pair list") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val docs = spark.read.parquet(dedupDocsPath)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = AdaptivePlans.flatMap(p)(Seq(_))
+    val jaccard = executedPlans(
+      Dedup.jaccardDupPairs(docs, col("text"), col("doc_id")).collect()).flatMap(p => nodes(p._2))
+    assert(jaccard.nonEmpty)
+    assert(!jaccard.exists(n => n.isInstanceOf[CartesianProductExec] ||
+      n.isInstanceOf[BroadcastNestedLoopJoinExec]), jaccard.map(_.nodeName).distinct)
+    // the verify joins (the final collect) broadcast the materialized pair
+    // list, bare and then with key_a's shingles attached; the (key, sh)
+    // table streams and is never broadcast or shuffled
+    val verify = executedPlans(
+      Dedup.minhashDupPairs(docs, col("text"), col("doc_id")).collect()).last
+    assert(verify._1 === "collect")
+    val names = (n: SparkPlan) => n.output.map(_.name).toSet
+    val broadcasts = nodes(verify._2).collect { case b: BroadcastExchangeExec => names(b) }
+    assert(broadcasts.size === 2 && broadcasts.forall(o => o("key_a") && o("key_b")), broadcasts)
+    assert(broadcasts.count(_("p_a")) === 1, broadcasts)
+    val shuffled = nodes(verify._2).collect { case x: ShuffleExchangeExec => names(x) }
+    assert(!shuffled.exists(o => o("p_a") || o("p_b")), shuffled)
+  }
+
   test("a bare t_highway column without hot-key metadata is not pushed") {
     // a view whose columns carry no graft_hot_key metadata compiles cold
     val tagged = spark.read.parquet(viewPath)

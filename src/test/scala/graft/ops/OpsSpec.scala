@@ -129,7 +129,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("winnowed shuffle-join fallback returns the broadcast-retain branch's pairs") {
-    val (fmat, dfT) = Dedup.winnowTables(partlyHotDocs, col("text"), col("doc_id"), k = 8, w = 4)
+    val (fmat, dfT, nDf) = Dedup.winnowTables(partlyHotDocs, col("text"), col("doc_id"), k = 8, w = 4)
+    // the observed guard count is the df table's row count
+    assert(nDf === dfT.count())
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     // maxDocFreq = 100 leaves no fingerprint hot, so the boilerplate pairs
@@ -146,14 +148,100 @@ class OpsSpec extends AnyFunSuite {
       rows(Dedup.retainedWinnowPairs(fmat, dfT, 0.9, maxDocFreq = 5)))
   }
 
-  test("winnow verify tail broadcasts attached fingerprints under a byte cap") {
+  test("pair verify tail broadcasts attached payloads under a byte cap") {
     assert(Dedup.broadcastAttached(0L, 0L))
-    assert(Dedup.broadcastAttached(100000L, 1000000L))
-    // the pair cap still holds when the arrays are tiny
+    assert(Dedup.broadcastAttached(100000L, 8000000L))
+    // the pair cap still holds when the payloads are tiny
     assert(!Dedup.broadcastAttached(100001L, 0L))
-    // few pairs, but 64 MiB of fps_a longs (8 bytes each) is the limit
-    assert(Dedup.broadcastAttached(10L, 8L << 20))
-    assert(!Dedup.broadcastAttached(10L, (8L << 20) + 1))
+    // few pairs, but 64 MiB of attached payload is the limit
+    assert(Dedup.broadcastAttached(10L, 64L << 20))
+    assert(!Dedup.broadcastAttached(10L, (64L << 20) + 1))
+  }
+
+  test("jaccardDupPairs equals the cross-product oracle") {
+    // a small vocabulary makes shared shingles common; empty, token-less,
+    // null and duplicated texts are in every corpus
+    val rng = new scala.util.Random(11)
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def text(): String = Seq.fill(rng.nextInt(9))(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    val corpora = (0 until 3).map { c =>
+      val base = Seq.fill(40)(text())
+      val texts: Seq[String] = base ++ base.take(6) ++ Seq("", "  ", null, null, "alpha")
+      // RDD-backed: a local relation would be constant-folded
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        texts.zipWithIndex.map { case (t, i) => (i.toLong * 3 + c, t) }, 3)).toDF("doc_id", "text")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (docs <- corpora; ngram <- Seq(1, 3); threshold <- Seq(0.005, 0.4, 1.0)) {
+      val want = rows(OpsSpec.jaccardCross(docs, col("text"), col("doc_id"), ngram, threshold))
+      val got = rows(Dedup.jaccardDupPairs(docs, col("text"), col("doc_id"), ngram, threshold))
+      assert(got === want, s"ngram $ngram threshold $threshold")
+      if (threshold == 1.0) assert(want.nonEmpty, "duplicated texts must pair at 1.0")
+    }
+    intercept[IllegalArgumentException](
+      Dedup.jaccardDupPairs(corpora.head, col("text"), col("doc_id"), threshold = 0.0))
+  }
+
+  /** Spark jobs `run` starts, counted by a listener on the job group. A
+    * marker job in a second group ends the count: the bus delivers events in
+    * order, so once its start is seen every job of `run` has been counted. */
+  private def sparkJobs(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"pinned-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-end" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "pinned job count")
+      run
+      sc.setJobGroup(s"$group-end", "end marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Spark job counts of the minhash, winnow and cluster operators are pinned") {
+    // 600 docs whose only near-duplicates are 12 seeded copies (doc i + 1
+    // copies doc i when i % 50 == 0), materialized so reading it is no job
+    val corpus = graft.fixtures.DeterministicGen.highVocabDocsDF(spark, 600,
+      vocab = 40000, dupEvery = 50, dupOffset = 1).localCheckpoint(true)
+    val seeded = (0L until 600L by 50L).map(i => (i, i + 1)).toSet
+    var minhash = Set.empty[(Long, Long)]
+    val minhashJobs = sparkJobs {
+      minhash = Dedup.minhashDupPairs(corpus, col("text"), col("doc_id"),
+        ngram = 3, numHashes = 16, bands = 4, threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    var winnow = Set.empty[(Long, Long)]
+    val winnowJobs = sparkJobs {
+      winnow = Dedup.winnowedDupPairs(corpus, col("text"), col("doc_id"),
+        k = 8, w = 4, threshold = 0.8, maxDocFreq = 1000)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(minhash === seeded && winnow === seeded)
+    val pairs = winnow.toSeq.toDF("key_a", "key_b")
+    var clusters = 0L
+    val clusterJobs = sparkJobs {
+      clusters = Dedup.dupClusters(pairs).collect().length.toLong
+    }
+    assert(clusters === 2L * seeded.size)
+    // the winnow and cluster size guards read observations of the jobs that
+    // materialize their tables; separate count jobs made these 16 and 5
+    assert((minhashJobs, winnowJobs, clusterJobs) === ((6, 12, 3)))
   }
 
   test("langId finds the stopword-dominant language") {
@@ -433,7 +521,10 @@ class OpsSpec extends AnyFunSuite {
     val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // both branches must agree: the guarded driver union-find (taken at this
     // size) and the distributed label-propagation loop
-    val gotDistributed = Dedup.propagatedClusters(Dedup.clusterEdges(pairs))
+    val (edgeTable, nEdges) = Dedup.clusterEdges(pairs)
+    // the observed guard count is the distinct non-null edge count
+    assert(nEdges === edgeTable.count() && nEdges === edgeTable.distinct().count())
+    val gotDistributed = Dedup.propagatedClusters(edgeTable)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === gotDistributed)
     // driver-side union-find ground truth (attach larger root under smaller,
@@ -738,7 +829,20 @@ class OpsSpec extends AnyFunSuite {
 }
 
 object OpsSpec {
-  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+
+  /** All-pairs exact n-gram Jaccard over the cross product — the oracle of
+    * [[Dedup.jaccardDupPairs]]' shingle self-join. */
+  def jaccardCross(docs: DataFrame, textCol: Column, keyCol: Column,
+                   ngram: Int, threshold: Double): DataFrame = {
+    val s = docs.select(keyCol.as("key"),
+      GraftBridge.column(graft.exprs.Shingles(GraftBridge.expression(textCol), ngram)).as("sh"))
+    val l = s.select(col("key").as("key_a"), col("sh").as("sh_a"))
+    val r = s.select(col("key").as("key_b"), col("sh").as("sh_b"))
+    l.crossJoin(r).filter(col("key_a") < col("key_b"))
+      .select(col("key_a"), col("key_b"), Dedup.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
 
   /** Distinct word n-gram shingles, pure Columns — the oracle of the
     * [[graft.exprs.Shingles]] kernel. */

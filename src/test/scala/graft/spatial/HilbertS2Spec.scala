@@ -296,6 +296,16 @@ class HilbertS2Spec extends AnyFunSuite {
     assert(some.select("query_id", "id").as[(Long, Long)].collect().toSeq === Seq((7L, 1L)))
   }
 
+  test("s2RadiusJoin drops queries with a null coordinate") {
+    val nodes = Seq((1L, 48.9, 2.4), (2L, -33.9, 151.2)).toDF("id", "lat", "lon")
+    val qs = Seq[(Long, java.lang.Double, java.lang.Double)](
+      (7L, 48.905, 2.405), (8L, null, 2.405), (9L, -33.9, null))
+      .toDF("query_id", "lat", "lon")
+    val got = SpatialOps.s2RadiusJoin(nodes, qs, 5000.0, level = 8)
+      .select("query_id", "id").as[(Long, Long)].collect().toSeq
+    assert(got === Seq((7L, 1L)))
+  }
+
   // --- Column mirrors ------------------------------------------------------
 
   private lazy val adversarialDF = {

@@ -267,6 +267,41 @@ class SpatialSpec extends AnyFunSuite {
       pts.map(_._1).toSet)
   }
 
+  test("kNN returns one column order whether or not a query needs widening") {
+    // query 1 sits among its points and is certified on the first ring;
+    // query 2's nearest points lie past its ring-2 cover, so it is widened
+    val level = 10
+    val (_, _, _, lonMaxCell) = ZCellDecode.bounds(ZCell.encode(30.0, 30.0, level))
+    val eastEdge = lonMaxCell + 2 * 360.0 / (1 << level) // of query 2's ring-2 cover
+    val pts = Seq(("a", 10.0, 10.0), ("b", 10.001, 10.001), ("c", 10.002, 10.0),
+      ("far1", 30.0, eastEdge + 0.02), ("far2", 30.01, eastEdge + 0.03))
+      .toDF("doc_id", "lat", "lon")
+    val want = Seq("doc_id", "lat", "lon", "query_id", "qlat", "qlon", "dist_m")
+    val certified = SpatialOps.knn(pts, Seq((1L, 10.0, 10.0)).toDF("query_id", "lat", "lon"),
+      k = 2, level = level, maxRing = 2)
+    val widened = SpatialOps.knn(pts,
+      Seq((1L, 10.0, 10.0), (2L, 30.0, 30.0)).toDF("query_id", "lat", "lon"),
+      k = 2, level = level, maxRing = 2)
+    assert(certified.columns.toSeq === want)
+    assert(widened.columns.toSeq === want)
+    assert(widened.filter(col("query_id") === 2).select("doc_id").as[String]
+      .collect().toSet === Set("far1", "far2"))
+  }
+
+  test("kNN drops queries and points with a null coordinate") {
+    val pts = Seq[(String, java.lang.Double, java.lang.Double)](
+      ("a", 10.0, 10.0), ("b", 10.001, 10.001), ("nolat", null, 10.0), ("nolon", 10.0, null))
+      .toDF("doc_id", "lat", "lon")
+    val qs = Seq[(Long, java.lang.Double, java.lang.Double)](
+      (1L, 10.0, 10.0), (2L, null, 10.0), (3L, 10.0, null))
+      .toDF("query_id", "lat", "lon")
+    // k = 3 exceeds the located points, so query 1 reaches the exact fallback
+    val got = SpatialOps.knn(pts, qs, k = 3, level = 10, maxRing = 2)
+      .select("query_id", "doc_id", "dist_m").collect()
+    assert(got.map(r => (r.getLong(0), r.getString(1))).toSet === Set((1L, "a"), (1L, "b")))
+    assert(got.forall(!_.isNullAt(2)))
+  }
+
   test("tile join equals brute-force parent-cell assignment") {
     val tiles = DeterministicGen.rasterTiles(level = 12)
     val tilesDF = tiles.map(t => (t.cell, t.level)).toDF("cell", "tile_level")
