@@ -320,9 +320,12 @@ object Dedup {
     * rows, and nothing re-reads the text.
     *
     * Size guard: with at most 20M df>=2 fingerprints the rare and hot sets
-    * are collected and broadcast ([[retainedWinnowPairs]]); above that
-    * they are attached by a shuffle join ([[joinedWinnowPairs]]). Both
-    * branches return the same rows.
+    * are collected in one collect and broadcast ([[retainedWinnowPairs]]);
+    * above that they are attached by a shuffle join ([[joinedWinnowPairs]]).
+    * Both branches return the same rows. The guard is read first from half
+    * the fingerprint occurrences, observed on the fingerprint table's
+    * checkpoint job; the df table is materialized and counted only when
+    * that bound exceeds it.
     *
     * Hot-fingerprint valve: boilerplate text (license headers, templates)
     * makes HOT fingerprints whose buckets go quadratic, so fingerprints
@@ -346,36 +349,46 @@ object Dedup {
   def winnowedDupPairs(docs: DataFrame, textCol: Column, keyCol: Column,
                        k: Int = 8, w: Int = 4, threshold: Double = 0.5,
                        maxDocFreq: Int = 1000): DataFrame = {
-    val (fmat, dfT, nDf) = winnowTables(docs, textCol, keyCol, k, w)
-    if (nDf <= MaxBroadcastFps) retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
-    else joinedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+    val (fmat, dfAgg, occurrences) = winnowTables(docs, textCol, keyCol, k, w)
+    // a df>=2 fingerprint takes at least two of the occurrences, so half of
+    // them bounds the df table's rows; only above the guard is the table
+    // materialized and counted, and the branch is decided by its count
+    if (occurrences / 2 <= MaxBroadcastFps)
+      retainedWinnowPairs(fmat, dfAgg, threshold, maxDocFreq)
+    else {
+      val (dfT, Seq(nDf)) = materialized(dfAgg, count(lit(1)))
+      if (nDf <= MaxBroadcastFps) retainedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+      else joinedWinnowPairs(fmat, dfT, threshold, maxDocFreq)
+    }
   }
 
   /** Above this many df>=2 fingerprints the retain branch's driver
     * collect would be the bottleneck. */
   private val MaxBroadcastFps = 20000000L
 
-  /** [[winnowedDupPairs]]' materialized inputs: the per-doc fingerprint
-    * table `(key, nt, fps)`, the document-frequency table `(f, df)` of the
-    * fingerprints held by at least two documents, and that table's row
-    * count, observed by the job that materializes it. */
+  /** [[winnowedDupPairs]]' inputs: the per-doc fingerprint table
+    * `(key, nt, fps)`, materialized, with Σ `nt` (the fingerprint
+    * occurrences) observed by the job that materializes it, and the
+    * document-frequency aggregation `(f, df)` over the fingerprints held by
+    * at least two documents, not yet run. */
   private[ops] def winnowTables(docs: DataFrame, textCol: Column, keyCol: Column,
                                 k: Int, w: Int): (DataFrame, DataFrame, Long) = {
     // ONE kernel pass: the per-doc fingerprint table, eagerly materialized
     // in its COMPACT form (one row per doc, primitive-long array — ~4× fewer
     // bytes than the exploded rows); the df table, candidate join, stats
     // and verify all read it instead of re-running the kernel.
-    val fmat = docs.select(keyCol.as("key"), textCol.as("__text"))
-      .withColumn("fps", TextOps.winnowedFingerprints(col("__text"), k, w))
-      .select(col("key"), size(col("fps")).as("nt"), col("fps"))
-      .localCheckpoint(true)
+    val (fmat, Seq(occurrences)) = materialized(
+      docs.select(keyCol.as("key"), textCol.as("__text"))
+        .withColumn("fps", TextOps.winnowedFingerprints(col("__text"), k, w))
+        .select(col("key"), size(col("fps")).as("nt"), col("fps")),
+      sum(greatest(col("nt"), lit(0))))
     // Document frequency as a sort-free hash AGGREGATION, keeping only
     // df >= 2: a fingerprint held by ONE doc can never witness a pair, and
     // on high-vocabulary corpora this drops ~97% of fingerprints.
-    val (dfT, Seq(nDf)) = materialized(fmat.select(explode(col("fps")).as("f"))
+    val dfAgg = fmat.select(explode(col("fps")).as("f"))
       .groupBy("f").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2), count(lit(1)))
-    (fmat, dfT, nDf)
+      .filter(col("df") >= 2)
+    (fmat, dfAgg, occurrences)
   }
 
   /** [[winnowedDupPairs]]' default branch. Rare/hot membership is applied
@@ -393,14 +406,16 @@ object Dedup {
   private[ops] def retainedWinnowPairs(fmat: DataFrame, dfT: DataFrame,
                                        threshold: Double, maxDocFreq: Int): DataFrame = {
     val spark = fmat.sparkSession
-    // primitive typed collects (no Row boxing) — two cheap jobs over the
-    // materialized df table
-    val longEnc = org.apache.spark.sql.Encoders.scalaLong
-    val rare = dfT.filter(col("df") <= maxDocFreq)
-      .select(col("f")).as(longEnc).collect()
+    // one collect of (f, hot), split on the driver
+    val rareB = Array.newBuilder[Long]
+    val hotB = Array.newBuilder[Long]
+    dfT.select(col("f"), col("df") > maxDocFreq)
+      .as(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaBoolean))
+      .collect().foreach { case (f, hot) => (if (hot) hotB else rareB) += f }
+    val rare = rareB.result()
     java.util.Arrays.sort(rare)
-    val hotArr = dfT.filter(col("df") > maxDocFreq)
-      .select(col("f")).as(longEnc).collect()
+    val hotArr = hotB.result()
     java.util.Arrays.sort(hotArr)
     val bcRare = spark.sparkContext.broadcast(rare)
     val bcHot = spark.sparkContext.broadcast(hotArr)

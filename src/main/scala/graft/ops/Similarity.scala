@@ -42,37 +42,24 @@ object Similarity {
     when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)
   }
 
-  /** Salt groups per query in [[topKPerQuery]]'s first window. */
-  private val TopKSalts = 64
+  /** Exact top-k per `query_id` — the one ranking every per-query top-k
+    * uses (the cosine paths here and [[graft.spatial.SpatialOps.knn]]): one
+    * `row_number()` window partitioned by `query_id` alone, ordered by
+    * `order` (which must end in a unique tie-break), filtered at `rn <= k`.
+    * For k up to `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by
+    * default) Spark plans the filter as a pair of `WindowGroupLimit`s: the
+    * Partial one keeps at most k rows per query in each map task before the
+    * one exchange on `query_id`, so no task sorts a query's whole candidate
+    * set and the brute scans keep their map-side parallelism, and the Final
+    * one ranks the ≤ k·tasks survivors. Returns `scored`'s columns plus the
+    * rank `rn` (1..k). */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int, order: Seq[Column]): DataFrame =
+    scored.withColumn("rn", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rn") <= k)
 
-  /** Exact top-k per `query_id` in two phases — the one ranking every
-    * per-query top-k uses (the cosine paths here and
-    * [[graft.spatial.SpatialOps.knn]]). A salted local top-k (partitioned
-    * by `(query_id, pmod(saltKey, 64))`) bounds every sort to its group's
-    * rows, then the global rank orders only ≤ 64·k survivors per query.
-    * EXACT: any row in a query's true global top-k has < k rows above it
-    * in its own salt group, so it survives phase 1; both phases share
-    * `order` (which must end in a unique tie-break), so output rows and
-    * `rn` values equal the single-window form. The single window —
-    * partitionBy(query_id) alone — caps parallelism at the query count and
-    * fully sorts each query's candidate set in ONE task (3M rows per task
-    * on the 3M-corpus scaling fixture: N→4N efficiency 0.64); two-phase
-    * restores parallelism queries × salts and O(rows) total work. Returns
-    * `scored`'s columns plus the global rank `rn` (1..k). */
-  private[graft] def topKPerQuery(scored: DataFrame, k: Int, order: Seq[Column],
-                                  saltKey: Column): DataFrame = {
-    val wLocal = Window.partitionBy(col("query_id"), pmod(saltKey, lit(TopKSalts)))
-      .orderBy(order: _*)
-    val local = scored.withColumn("rn", row_number().over(wLocal))
-      .filter(col("rn") <= k).drop("rn")
-    val w = Window.partitionBy(col("query_id")).orderBy(order: _*)
-    local.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
-
-  /** [[topKPerQuery]] by cosine (desc, `vec_id` tie-break), salted on
-    * `vec_id`. */
+  /** [[topKPerQuery]] by cosine (desc, `vec_id` tie-break). */
   private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
-    topKPerQuery(scored, k, Seq(col("cos").desc, col("vec_id")), col("vec_id"))
+    topKPerQuery(scored, k, Seq(col("cos").desc, col("vec_id")))
       .select("query_id", "vec_id", "cos", "rn")
 
   /** Brute-force cosine top-k: queries × corpus, exact. The corpus side

@@ -1,8 +1,10 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import graft.exprs.{HilbertCellIdExpr, S2CellIdExpr, ZCellAxisExpr, ZCellIdExpr}
 import graft.ops.Similarity
 
@@ -19,7 +21,8 @@ import graft.ops.Similarity
   * ([[cellId]]) are the same code — no UDF, CodegenFallback or Column
   * mirror in the hot path. Polygon sides are broadcast (small per
   * BASELINE.json); dense-urban-cell skew is handled by map-side partial
-  * aggregation, the salted kNN rank and AQE skew join.
+  * aggregation, the map-side window group limit of the kNN rank and AQE
+  * skew join.
   */
 object SpatialOps {
 
@@ -255,30 +258,21 @@ object SpatialOps {
 
   // --- kNN ------------------------------------------------------------------------
 
-  private def ringCellsUdf(level: Int, maxRing: Int) = udf { (lat: Double, lon: Double) =>
-    val c = ZCell.encode(lat, lon, level)
-    (0 to maxRing).flatMap(d => ZCell.ring(c, d))
-  }
-
-  /** Edges of the region covered by rings 0..maxRing around the point's
-    * cell, as (latTop, latBot, lonLeft, lonRight); null = that side reaches
-    * a pole / wraps fully, so no uncovered region lies beyond it. Lon edges
-    * are returned UNWRAPPED (may exceed ±180): trig metrics are periodic,
-    * and planar metrics measure unwrapped offsets — both stay correct. */
-  private def coverEdgesUdf(level: Int, maxRing: Int) = udf { (lat: Double, lon: Double) =>
-    val c = ZCell.encode(lat, lon, level)
+  /** Edges of the region covered by rings 0..ring around `cell`, as
+    * (latTop, latBot, lonLeft, lonRight); null = that side reaches a pole /
+    * wraps fully, so no uncovered region lies beyond it. Lon edges are
+    * UNWRAPPED (may exceed ±180): trig metrics are periodic, and planar
+    * metrics measure unwrapped offsets — both stay correct. */
+  private def coverEdges(cell: Long, level: Int, ring: Int): Seq[java.lang.Double] = {
     val n = 1 << level
-    val cx = ZCell.x(c); val cy = ZCell.y(c)
-    val latTop = if (cy - maxRing <= 0) None
-      else Some(90.0 - (cy - maxRing).toDouble / n * 180.0)
-    val latBot = if (cy + maxRing >= n - 1) None
-      else Some(90.0 - (cy + maxRing + 1).toDouble / n * 180.0)
-    val fullWrap = 2 * maxRing + 1 >= n
-    val lonLeft = if (fullWrap) None
-      else Some((cx - maxRing).toDouble / n * 360.0 - 180.0)
-    val lonRight = if (fullWrap) None
-      else Some((cx + maxRing + 1).toDouble / n * 360.0 - 180.0)
-    (latTop, latBot, lonLeft, lonRight)
+    val cx = ZCell.x(cell); val cy = ZCell.y(cell)
+    def edge(exists: Boolean, at: => Double): java.lang.Double =
+      if (exists) Double.box(at) else null
+    val fullWrap = 2 * ring + 1 >= n
+    Seq(edge(cy - ring > 0, 90.0 - (cy - ring).toDouble / n * 180.0),
+      edge(cy + ring < n - 1, 90.0 - (cy + ring + 1).toDouble / n * 180.0),
+      edge(!fullWrap, (cx - ring).toDouble / n * 360.0 - 180.0),
+      edge(!fullWrap, (cx + ring + 1).toDouble / n * 360.0 - 180.0))
   }
 
   /** Distance model for kNN: point-to-point distance PLUS true lower bounds
@@ -320,107 +314,106 @@ object SpatialOps {
   }
 
   /** k nearest points for each query row (query_id, lat, lon): ring-expanded
-    * candidate cells (broadcast query side) + exact re-rank with the shared
-    * two-phase per-query top-k ([[graft.ops.Similarity.topKPerQuery]],
-    * ordered by (distance, `tieBreak`), salted on `hash(tieBreak)`).
+    * candidate cells + exact re-rank through the one per-query top-k
+    * ([[graft.ops.Similarity.topKPerQuery]], ordered by (distance,
+    * `tieBreak`)). The query side is broadcast-small by contract (as in
+    * [[s2RadiusJoin]]) and collected once: the driver computes each query's
+    * ring cells ([[ZCell.encode]], [[ZCell.ring]]) and cover edges, and the
+    * cells join the points as a broadcast local relation carrying the
+    * query's `bound`, a LOWER BOUND on the distance to the uncovered region.
     * EXACTNESS GUARANTEE: a query's ring result is kept only when its kth
-    * candidate distance is ≤ a LOWER BOUND on the distance to the uncovered
-    * region's boundary (≥ k candidates alone does NOT imply the true k
-    * nearest are inside the rings). Queries the first pass cannot certify
-    * retry with the ring radius widened ×4, up to twice —
+    * candidate distance is ≤ that bound (≥ k candidates alone does NOT imply
+    * the true k nearest are inside the rings). Each ring step is one Spark
+    * query with one exchange: its ranked top-k (≤ queries·k rows) is
+    * localCheckpoint'ed, and that same job observes the ids of the queries
+    * it certifies, so the uncertified ones are known on the driver with no
+    * further job. They retry with the ring radius widened ×4, up to twice —
     * each retry is another cell-join over a SHRINKING query set, so a skewed
     * query batch never forces a full-corpus cross join just because a few
     * queries sit in sparse regions; only queries still uncertified after the
-    * widening ladder fall back to the exact scan. The per-step unsatisfied
-    * set is localCheckpoint'ed (small — the query side is broadcast-sized by
-    * contract) so step lineages don't compound; driver-side probing stays an
-    * emptiness check per step. Queries and points with a null lat or lon
-    * are dropped. Every branch returns the point columns, then query_id,
-    * qlat, qlon and dist_m. */
+    * widening ladder fall back to the exact scan. Queries and points with a
+    * null lat or lon are dropped. Every branch returns the point columns,
+    * then query_id, qlat, qlon and dist_m. */
   def knn(points: DataFrame, queries: DataFrame, k: Int,
           level: Int = 10, maxRing: Int = 2,
           metric: SpatialMetric = HaversineMetric,
           tieBreak: String = "doc_id"): DataFrame = {
+    val spark = points.sparkSession
     val located = points.filter(col("lat").isNotNull && col("lon").isNotNull)
     val pCells = located.withColumn("cell", cellId(col("lat"), col("lon"), level))
     val dist = metric.dist(col("qlat"), col("qlon"), col("lat"), col("lon"))
-
-    // exact per-query top-k in two phases (Similarity.topKPerQuery): the
-    // salted first window bounds every sort to one (query, salt) group, so
-    // the brute fallback below, which scans the whole corpus per query,
-    // keeps its parallelism (ScalingBench ops `knn` row: 0.94 efficiency
-    // at 1×2→4×2)
+    val out = (located.columns.toSeq ++ Seq("query_id", "qlat", "qlon", "dist_m")).map(col)
     def rankTopK(scored: DataFrame): DataFrame =
-      Similarity.topKPerQuery(scored, k, Seq(col("dist_m"), col(tieBreak)),
-        hash(col(tieBreak))).drop("rn")
+      Similarity.topKPerQuery(scored, k, Seq(col("dist_m"), col(tieBreak)))
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
 
-    /** One ring pass: (certified top-k, uncertified queries). The ranked
-      * top-k is localCheckpoint'ed (≤ queries·k rows): both its consumers —
-      * the certification stats below and the output union — would otherwise
-      * re-execute the whole candidate join + rank. */
-    def attempt(qs: DataFrame, ring: Int): (DataFrame, DataFrame) = {
-      val qCells = qs.withColumn("cell",
-        explode(ringCellsUdf(level, ring)(col("qlat"), col("qlon"))))
-      val candidates = pCells.join(broadcast(qCells), Seq("cell")).drop("cell")
-        .withColumn("dist_m", dist)
-      val topk = rankTopK(candidates).localCheckpoint()
+    val qSide = queries.filter(col("lat").isNotNull && col("lon").isNotNull)
+      .select(col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
+    // each query's output row, and its coordinates as doubles for the cells
+    var pending: Seq[(Row, Double, Double)] = qSide
+      .select(col("*"), col("qlat").cast("double"), col("qlon").cast("double")).collect()
+      .map(r => (Row(r(0), r(1), r(2)), r.getDouble(3), r.getDouble(4))).toSeq
+    val cellSchema = qSide.schema.add("cell", LongType, nullable = false)
+      .add("e_top", DoubleType).add("e_bot", DoubleType)
+      .add("e_left", DoubleType).add("e_right", DoubleType)
 
-      // per-query decision: lower-bound distance to each uncovered-side edge
-      val edges = coverEdgesUdf(level, ring)(col("qlat"), col("qlon"))
-      val dBound = least(
-        metric.toParallel(col("qlat"), col("qlon"), col("edges").getField("_1")),
-        metric.toParallel(col("qlat"), col("qlon"), col("edges").getField("_2")),
-        metric.toMeridian(col("qlat"), col("qlon"), col("edges").getField("_3")),
-        metric.toMeridian(col("qlat"), col("qlon"), col("edges").getField("_4")))
-      val stats = topk.groupBy("query_id")
-        .agg(count(lit(1)).as("cnt"), max(col("dist_m")).as("kth"))
-      val unsat = qs.withColumn("edges", edges)
-        .join(stats, Seq("query_id"), "left")
-        .filter(col("cnt").isNull || col("cnt") < k ||
-          (dBound.isNotNull && col("kth") > dBound))
-        .select("query_id", "qlat", "qlon")
-      (topk, unsat)
+    /** The pending queries' ring-`ring` candidates, with their distance and
+      * the query's `bound`. */
+    def scoredAt(ring: Int): DataFrame = {
+      val cells = local(pending.flatMap { case (q, lat, lon) =>
+        val c = ZCell.encode(lat, lon, level)
+        val edges = coverEdges(c, level, ring)
+        (0 to ring).flatMap(d => ZCell.ring(c, d))
+          .map(cell => Row.fromSeq(q.toSeq ++ (cell +: edges)))
+      }, cellSchema)
+      // lower-bound distance to each uncovered-side edge
+      val bound = least(
+        metric.toParallel(col("qlat"), col("qlon"), col("e_top")),
+        metric.toParallel(col("qlat"), col("qlon"), col("e_bot")),
+        metric.toMeridian(col("qlat"), col("qlon"), col("e_left")),
+        metric.toMeridian(col("qlat"), col("qlon"), col("e_right")))
+      pCells.join(broadcast(cells.select(col("query_id"), col("qlat"), col("qlon"),
+          col("cell"), bound.as("bound"))), Seq("cell"))
+        .drop("cell").withColumn("dist_m", dist)
     }
 
-    var remaining = queries.filter(col("lat").isNotNull && col("lon").isNotNull)
-      .select(col("query_id"), col("lat").as("qlat"), col("lon").as("qlon"))
     // (A ring-0 pre-pass to certify dense queries cheaply was measured and
     // rejected: it certified 27/99 bench queries but added a full pass for
     // the rest — 4.2 s vs 3.1 s against the ×4 ladder alone.)
-    var ring = maxRing
     val pieces = Seq.newBuilder[DataFrame]
+    var ring = maxRing
     var step = 0
-    var allSatisfied = false
-    while (step <= KnnWidenSteps && !allSatisfied) {
-      val (topk, unsatRaw) = attempt(remaining, ring)
-      val unsat = unsatRaw.localCheckpoint() // small; truncates step lineage
-      if (unsat.isEmpty) {
-        pieces += topk
-        allSatisfied = true
-      } else {
-        pieces += topk.join(broadcast(unsat.select("query_id")),
-          Seq("query_id"), "left_anti")
-        remaining = unsat
-        // ×4 widening (round 6): a query the certification rejected at ring
-        // r usually sits in a region an order of magnitude sparser than the
-        // certified ones — ×2 widening re-ran the full join+rank ladder for
-        // a slowly-shrinking straggler set (measured 43 → 22 → 0 unsat over
-        // three passes at the bench shape; ×4 reaches the same coverage in
-        // two). Each pass is a full candidate join, so fewer, wider passes
-        // win; the exact brute fallback still bounds the worst case.
-        ring = math.max(ring * 4, ring + 1)
-        step += 1
-      }
+    while (step <= KnnWidenSteps && pending.nonEmpty) {
+      // certified: k candidates, the kth within the bound (or no bound)
+      val obs = Observation()
+      val ranked = rankTopK(scoredAt(ring))
+        .observe(obs, collect_set(when(col("rn") === k &&
+          (col("bound").isNull || col("dist_m") <= col("bound")), col("query_id")))
+          .as("certified"))
+        .localCheckpoint(true)
+      val certified = obs.get("certified").asInstanceOf[scala.collection.Seq[Any]].toSet
+      if (certified.size == pending.size) pieces += ranked
+      else if (certified.nonEmpty)
+        pieces += ranked.filter(col("query_id").isin(certified.toSeq: _*))
+      pending = pending.filterNot(q => certified(q._1.get(0)))
+      // ×4 widening (round 6): a query the certification rejected at ring
+      // r usually sits in a region an order of magnitude sparser than the
+      // certified ones — ×2 widening re-ran the full join+rank ladder for
+      // a slowly-shrinking straggler set (measured 43 → 22 → 0 unsat over
+      // three passes at the bench shape; ×4 reaches the same coverage in
+      // two). Each pass is a full candidate join, so fewer, wider passes
+      // win; the exact brute fallback still bounds the worst case.
+      ring = math.max(ring * 4, ring + 1)
+      step += 1
     }
-    if (!allSatisfied) {
-      val brute = rankTopK(located.crossJoin(broadcast(remaining))
+    if (pending.nonEmpty)
+      pieces += rankTopK(located.crossJoin(broadcast(local(pending.map(_._1), qSide.schema)))
         .withColumn("dist_m", dist))
-      pieces += brute
+    pieces.result() match {
+      case Seq() => scoredAt(maxRing).select(out: _*) // no query: no rows
+      case ps => ps.map(_.select(out: _*)).reduce(_ union _)
     }
-    // one column order on every branch: the left_anti USING join above
-    // moves query_id first
-    val out = (located.columns.toSeq ++ Seq("query_id", "qlat", "qlon", "dist_m")).map(col)
-    pieces.result().map(_.select(out: _*)).reduce(_ union _)
   }
 
   /** Ring widenings [[knn]] tries before its exact fallback. */

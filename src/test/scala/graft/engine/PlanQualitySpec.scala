@@ -2,12 +2,14 @@ package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayFilter, ArrayTransform, Attribute, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, Attribute, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -210,6 +212,9 @@ class PlanQualitySpec extends AnyFunSuite {
 
   /** The optimized plan of [[FilterEngine.materializeView]]'s write. */
   private def materializeViewWritePlan(): LogicalPlan = {
+    // the lazy fixture writes parquet too: write it before the listener
+    // registers, so the listener sees only the view's write
+    val docs = spark.read.parquet(docsPath)
     val written = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -220,7 +225,7 @@ class PlanQualitySpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft-view-once").toString
-      FilterEngine.materializeView(spark.read.parquet(docsPath), dir)
+      FilterEngine.materializeView(docs, dir)
       val p = written.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       assert(p != null, "no write plan seen")
       p
@@ -240,8 +245,9 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!exprs.exists(_.isInstanceOf[CodegenFallback]), s"CodegenFallback in:\n$p")
   }
 
-  /** Function name and executed plan of every action `run` takes. */
-  private def executedPlans(run: => Unit): Seq[(String, SparkPlan)] = {
+  /** Function name and executed plan of every action `run` takes; `run`
+    * ends with its `collects`-th collect. */
+  private def executedPlans(run: => Unit, collects: Int = 1): Seq[(String, SparkPlan)] = {
     val seen = new java.util.concurrent.LinkedBlockingQueue[(String, SparkPlan)]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -255,9 +261,10 @@ class PlanQualitySpec extends AnyFunSuite {
       // earlier action of run has been seen too
       val out = Seq.newBuilder[(String, SparkPlan)]
       var last: (String, SparkPlan) = null
+      var left = collects
       while ({
         last = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        last != null && { out += last; last._1 != "collect" }
+        last != null && { out += last; if (last._1 == "collect") left -= 1; left > 0 }
       }) ()
       assert(last != null, "no collect plan seen")
       out.result()
@@ -293,7 +300,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("jaccard dedup builds no cross product; minhash verify broadcasts the pair list") {
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val docs = spark.read.parquet(dedupDocsPath)
     def nodes(p: SparkPlan): Seq[SparkPlan] = AdaptivePlans.flatMap(p)(Seq(_))
@@ -344,28 +351,32 @@ class PlanQualitySpec extends AnyFunSuite {
       s"polygon side not broadcast in:\n$p")
   }
 
-  test("knn ranks through the salted window, then the per-query window") {
-    val nodes = spark.read.parquet(viewPath)
+  test("knn ranks through one query_id window, limited before its exchange") {
+    val points = spark.read.parquet(viewPath)
       .filter(col("type") === "node").select("doc_id", "lat", "lon")
-    val queries = Seq((1L, 48.85, 2.35)).toDF("query_id", "lat", "lon")
-    // k above the node count certifies nothing, so the returned plan holds
-    // the brute fallback's rank (the ring pass's is behind its checkpoint)
-    val windows = SpatialOps.knn(nodes, queries, k = 1000000)
-      .queryExecution.optimizedPlan.collect { case w: Window => w }
-    // a computed partition key is projected below its Window as an alias
-    def keys(w: Window): Seq[String] = {
-      val aliases = w.child.collectFirst { case p: Project =>
-        p.projectList.collect { case a: Alias => a.exprId -> a.child }.toMap
-      }.getOrElse(Map.empty)
-      w.partitionSpec.map {
-        case a: Attribute => aliases.get(a.exprId).fold(a.name)(_.sql)
+    val queries = Seq((1L, 48.85, 2.35), (2L, 52.52, 13.405)).toDF("query_id", "lat", "lon")
+    // the ring step's ranked plan runs in its checkpoint job; knn collects
+    // its query side first
+    val ranked = executedPlans(SpatialOps.knn(points, queries, k = 5).collect(), collects = 2)
+      .map(p => AdaptivePlans.flatMap(p._2)(Seq(_))).filter(_.exists(_.isInstanceOf[WindowExec]))
+    assert(ranked.nonEmpty, "no ranked plan seen")
+    ranked.foreach { nodes =>
+      val p = nodes.head
+      val windows = nodes.collect { case w: WindowExec => w }
+      assert(windows.size === 1, p)
+      assert(windows.head.partitionSpec.map {
+        case a: Attribute => a.name
         case e => e.sql
-      }
+      } === Seq("query_id"), p)
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, p)
+      // a Partial group limit feeds the exchange: no task sorts a query's
+      // whole candidate set
+      assert(exchanges.head.child.exists {
+        case l: WindowGroupLimitExec => l.mode == Partial
+        case _ => false
+      }, p)
     }
-    assert(windows.map(keys) === Seq(
-      Seq("query_id"), Seq("query_id", "pmod(hash(doc_id), 64)")), windows)
-    assert(windows.head.child.exists(_ eq windows(1)),
-      "the salted window does not feed the per-query window")
   }
 
   test("complete-ways wanted-ids side is adaptive (AQE decides broadcast at runtime)") {

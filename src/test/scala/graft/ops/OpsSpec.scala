@@ -3,6 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.SparkTestSession.sparkJobs
 
 /** Training-data ops over the driver-provided documents/embeddings tables
   * (sf=0.001), verified against brute-force/driver-side ground truth. */
@@ -129,9 +130,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("winnowed shuffle-join fallback returns the broadcast-retain branch's pairs") {
-    val (fmat, dfT, nDf) = Dedup.winnowTables(partlyHotDocs, col("text"), col("doc_id"), k = 8, w = 4)
-    // the observed guard count is the df table's row count
-    assert(nDf === dfT.count())
+    val (fmat, dfT, occurrences) = Dedup.winnowTables(partlyHotDocs, col("text"), col("doc_id"), k = 8, w = 4)
+    // the observed count is the fingerprint occurrences, and half of it
+    // bounds the df table's rows
+    assert(occurrences === fmat.agg(sum("nt")).head.getLong(0))
+    assert(dfT.count() <= occurrences / 2)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     // maxDocFreq = 100 leaves no fingerprint hot, so the boilerplate pairs
@@ -183,37 +186,6 @@ class OpsSpec extends AnyFunSuite {
       Dedup.jaccardDupPairs(corpora.head, col("text"), col("doc_id"), threshold = 0.0))
   }
 
-  /** Spark jobs `run` starts, counted by a listener on the job group. A
-    * marker job in a second group ends the count: the bus delivers events in
-    * order, so once its start is seen every job of `run` has been counted. */
-  private def sparkJobs(run: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"pinned-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-end" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "pinned job count")
-      run
-      sc.setJobGroup(s"$group-end", "end marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("Spark job counts of the minhash, winnow and cluster operators are pinned") {
     // 600 docs whose only near-duplicates are 12 seeded copies (doc i + 1
     // copies doc i when i % 50 == 0), materialized so reading it is no job
@@ -240,8 +212,9 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(clusters === 2L * seeded.size)
     // the winnow and cluster size guards read observations of the jobs that
-    // materialize their tables; separate count jobs made these 16 and 5
-    assert((minhashJobs, winnowJobs, clusterJobs) === ((6, 12, 3)))
+    // materialize their tables; separate count jobs made these 16 and 5, and
+    // separate rare and hot collects made winnow 12
+    assert((minhashJobs, winnowJobs, clusterJobs) === ((6, 10, 3)))
   }
 
   test("langId finds the stopword-dominant language") {
@@ -553,9 +526,10 @@ class OpsSpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("two-phase top-k is exact when the whole top-k shares one salt group") {
-    // the true top-10 all live at vec_id ≡ 0 (mod 64) — one salt group — so
-    // a buggy local phase that kept < k rows per group would drop winners
+  test("top-k is exact when the whole top-k shares one residue mod 64") {
+    // the true top-10 all live at vec_id ≡ 0 (mod 64), so a rank that kept
+    // fewer than k rows per residue class (or per map task) would drop
+    // winners
     val dim = 8
     val q = Array.fill(dim)(1.0f)
     val winners = (0 until 15).map(i => (i * 64L, q.toSeq)) // cos = 1
@@ -569,7 +543,7 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("embedding", col("embedding").cast("array<float>"))
     val got = Similarity.bruteTopK(corpus, queries, 10)
       .orderBy("rn").collect().map(_.getAs[Long]("vec_id"))
-    assert(got.toSeq === (0 until 10).map(_ * 64L), "tie-break by vec_id over one salt group")
+    assert(got.toSeq === (0 until 10).map(_ * 64L), "tie-break by vec_id within one residue class")
   }
 
   test("header codecs parse real PNG/JPEG dimensions; non-images fall back to the stub") {

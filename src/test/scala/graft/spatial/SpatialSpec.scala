@@ -3,6 +3,7 @@ package graft.spatial
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.SparkTestSession.sparkJobs
 import graft.fixtures.DeterministicGen
 import graft.model.OsmView
 
@@ -300,6 +301,61 @@ class SpatialSpec extends AnyFunSuite {
       .select("query_id", "doc_id", "dist_m").collect()
     assert(got.map(r => (r.getLong(0), r.getString(1))).toSet === Set((1L, "a"), (1L, "b")))
     assert(got.forall(!_.isNullAt(2)))
+  }
+
+  test("kNN equals brute force when queries certify on the first ring, after widening, or never") {
+    val level = 10
+    val cellDeg = 360.0 / (1 << level)
+    // queries 1 and 2 sit among their points and certify on the first ring;
+    // query 3 is the adversarial layout above (its nearest points lie just
+    // past its ring-2 cover), so it certifies only after widening; query 4
+    // is ~40° from every point, beyond the widest ring, so it reaches the
+    // exact fallback
+    val (_, _, _, lonMaxCell) = ZCellDecode.bounds(ZCell.encode(30.0, 30.0, level))
+    val eastEdge = lonMaxCell + 2 * cellDeg
+    val pts = Seq(("a", 10.0, 10.0), ("b", 10.001, 10.001), ("c", 10.002, 10.0),
+      ("d", -20.0, -40.0), ("e", -20.001, -40.002), ("f", -20.002, -40.001),
+      ("decoy1", 30.0 + 2.4 * cellDeg, 30.0 + 2.4 * cellDeg),
+      ("decoy2", 30.0 + 2.4 * cellDeg, 30.0 + 2.3 * cellDeg),
+      ("near1", 30.0, eastEdge + 0.02), ("near2", 30.01, eastEdge + 0.03))
+    val queries = Seq((1L, 10.0005, 10.0005), (2L, -20.001, -40.001), (3L, 30.0, 30.0),
+      (4L, 60.0, -120.0))
+    val k = 2
+    def dist(qlat: Double, qlon: Double, lat: Double, lon: Double): Double =
+      (lat - qlat) * (lat - qlat) + (lon - qlon) * (lon - qlon)
+    val want = queries.flatMap { case (q, qlat, qlon) =>
+      pts.map { case (id, lat, lon) => (q, id, dist(qlat, qlon, lat, lon)) }
+        .sortBy(t => (t._3, t._2)).take(k)
+    }.toSet
+    def run(qs: Seq[(Long, Double, Double)]) = SpatialOps.knn(pts.toDF("doc_id", "lat", "lon"),
+      qs.toDF("query_id", "lat", "lon"), k, level = level, maxRing = 2,
+      metric = SpatialOps.PlanarDegrees2Metric)
+    val got = run(queries)
+    assert(got.select("query_id", "doc_id", "dist_m").as[(Long, String, Double)]
+      .collect().toSet === want)
+    val crossJoin = (df: org.apache.spark.sql.DataFrame) => {
+      val p = df.queryExecution.executedPlan.toString
+      p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
+    }
+    assert(crossJoin(got), "query 4 must reach the exact fallback")
+    assert(!crossJoin(run(queries.take(3))), "queries 1-3 must certify on a ring")
+    // one ring step less when query 3 is left out: it needs the widening
+    assert(sparkJobs(run(queries.take(2)).collect()) < sparkJobs(run(queries.take(3)).collect()))
+  }
+
+  test("Spark jobs of a kNN call whose queries certify on the first ring are pinned") {
+    val points = nodesDF.localCheckpoint(true)
+    val queries = Seq((1L, 52.52, 13.405), (2L, 48.8566, 2.3522), (3L, 52.53, 13.41))
+      .toDF("query_id", "lat", "lon")
+    var rows = 0
+    val jobs = sparkJobs {
+      rows = SpatialOps.knn(points, queries, k = 5, level = 10, maxRing = 2).collect().length
+    }
+    assert(rows === 15)
+    // the ring step is one checkpointed query whose cell broadcast and
+    // exchange map stage are jobs of their own under AQE, then the collect
+    // (the certification aggregation, unsat join and probes made it 9)
+    assert(jobs === 4)
   }
 
   test("tile join equals brute-force parent-cell assignment") {
